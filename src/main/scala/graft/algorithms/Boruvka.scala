@@ -65,12 +65,13 @@ case class Boruvka(
     var done = false
     while (round < maxRounds && !done) {
       round += 1
-      val live = checkpoint.pin(
+      val (live, liveCount) = checkpoint.pinObserved(
         canon
           .join(comp.select(col(ID).as(SRC), col(COMPONENT).as("_ca")), SRC)
           .join(comp.select(col(ID).as(DST), col(COMPONENT).as("_cb")), DST)
-          .filter(col("_ca") =!= col("_cb")), eager = false)
-      if (live.isEmpty) done = true
+          .filter(col("_ca") =!= col("_cb")),
+        s"boruvka round $round", count(lit(1)))
+      if (liveCount.getLong(0) == 0) done = true
       else {
         val cand = struct(
           col(weightCol), col(SRC), col(DST), col("_ca"), col("_cb")).as("_cand")

@@ -97,16 +97,14 @@ final case class AlternatingConnectedComponents(
     var converged = false
     var i = 0
     while (i < maxIterations && !converged) {
-      // lazy checkpoint: the fingerprint aggregation below is the one job
-      // per round and materializes the new edge set as it runs
-      edges = checkpoint.pin(smallStar(largeStar(edges)).distinct(), eager = false)
-      val fp = edges
-        .agg(count(lit(1)), bit_xor(xxhash64(col(SRC), col(DST))))
-        .head()
+      i += 1
+      // the fingerprint is observed on the pinning pass itself
+      val (pinned, fp) = checkpoint.pinObserved(smallStar(largeStar(edges)).distinct(),
+        s"star cc round $i", count(lit(1)), bit_xor(xxhash64(col(SRC), col(DST))))
+      edges = pinned
       val cur = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
       converged = cur == prev
       prev = cur
-      i += 1
     }
     // Callers that consume the labels as *final* component ids (e.g. Boruvka's
     // contraction) must not receive a silently-unconverged labelling: the

@@ -42,18 +42,13 @@ final case class EigenvectorCentrality(
     var x = checkpoint.pin(verts.select(col(ID), lit(1.0).as("score")))
     var i = 0
     while (i < maxIterations) {
-      // gather LAZY-pinned before the norm (OPTIMIZATION_r17, the Hits
-      // device): the norm action is the ONE job per round — it
-      // materializes the gather and computes the scalar in one pass,
-      // where the loop previously ran the join+aggregate twice (norm
-      // head() + eager pin). The normalized vector stays a lazy narrow
-      // join over the gather's cached blocks.
-      val raw = checkpoint.pin(x.join(edges, x(ID) === edges(SRC))
+      // the pin observes the squared L2 norm in the same pass; the
+      // normalized vector stays a lazy narrow join over the pinned gather
+      val (raw, sq) = checkpoint.pinObserved(x.join(edges, x(ID) === edges(SRC))
         .groupBy(col(DST).as(ID))
-        .agg(sum(col("score")).as("_s")), eager = false)
-      val nrm = math.sqrt(
-        raw.agg(coalesce(sum(col("_s") * col("_s")), lit(0.0)))
-          .head().getDouble(0))
+        .agg(sum(col("score")).as("_s")),
+        s"eigenvector round ${i + 1}", CheckpointPolicy.exactSum(col("_s") * col("_s")))
+      val nrm = math.sqrt(sq.getDouble(0))
       require(nrm > 0.0,
         "eigenvector centrality needs at least one edge reachable from a nonzero score")
       x = verts.join(raw, Seq(ID), "left")

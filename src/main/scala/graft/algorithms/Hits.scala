@@ -40,32 +40,25 @@ final case class Hits(
     var auth: DataFrame = verts.select(col(ID), lit(0.0).as("authority"))
     var i = 0
     while (i < maxIterations) {
-      // authority step: gather hub scores along in-edges. LAZY-pinned
-      // before the norm (OPTIMIZATION_r17): the norm action is now the
-      // ONE job per half-round — it materializes the gather (truncating
-      // lineage) and computes the scalar in the same pass, where the
-      // loop previously ran the join+aggregate twice per half-round
-      // (once for the norm head(), once inside the eager pin of the
-      // normalized frame). The normalized frame itself stays a lazy
-      // narrow join over the gather's cached blocks.
-      val aRaw = checkpoint.pin(hub.join(edges, hub(ID) === edges(SRC))
+      // authority step: gather hub scores along in-edges; the pin
+      // observes the squared L2 norm in the same pass. The normalized
+      // frame stays a lazy narrow join over the pinned gather.
+      val (aRaw, aSq) = checkpoint.pinObserved(hub.join(edges, hub(ID) === edges(SRC))
         .groupBy(col(DST).as(ID))
-        .agg(sum(col("hub")).as("_a")), eager = false)
-      val aNorm = math.sqrt(
-        aRaw.agg(coalesce(sum(col("_a") * col("_a")), lit(0.0)))
-          .head().getDouble(0))
+        .agg(sum(col("hub")).as("_a")),
+        s"hits round ${i + 1} authority", CheckpointPolicy.exactSum(col("_a") * col("_a")))
+      val aNorm = math.sqrt(aSq.getDouble(0))
       require(aNorm > 0.0, "HITS needs at least one edge")
       auth = verts.join(aRaw, Seq(ID), "left")
         .select(col(ID),
           (coalesce(col("_a"), lit(0.0)) / lit(aNorm)).as("authority"))
 
       // hub step: gather authority scores along out-edges (same shape)
-      val hRaw = checkpoint.pin(auth.join(edges, auth(ID) === edges(DST))
+      val (hRaw, hSq) = checkpoint.pinObserved(auth.join(edges, auth(ID) === edges(DST))
         .groupBy(col(SRC).as(ID))
-        .agg(sum(col("authority")).as("_h")), eager = false)
-      val hNorm = math.sqrt(
-        hRaw.agg(coalesce(sum(col("_h") * col("_h")), lit(0.0)))
-          .head().getDouble(0))
+        .agg(sum(col("authority")).as("_h")),
+        s"hits round ${i + 1} hub", CheckpointPolicy.exactSum(col("_h") * col("_h")))
+      val hNorm = math.sqrt(hSq.getDouble(0))
       require(hNorm > 0.0, "HITS needs at least one edge")
       hub = verts.join(hRaw, Seq(ID), "left")
         .select(col(ID),

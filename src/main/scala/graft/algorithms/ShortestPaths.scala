@@ -71,11 +71,11 @@ final case class ShortestPaths(
       val relaxed = edges
         .join(dist, edges(DST) === dist(ID))
         .select(edges(SRC).as(ID), col(LANDMARK), (col(DIST) + step).as(DIST))
-      dist = checkpoint.pin(dist.unionByName(relaxed)
+      val (pinned, fp) = checkpoint.pinObserved(dist.unionByName(relaxed)
         .groupBy(col(ID), col(LANDMARK))
         .agg(min(col(DIST)).as(DIST)),
-        eager = false)
-      val fp = dist.agg(count(lit(1)), sum(col(DIST))).head()
+        s"shortest paths round ${i + 1}", count(lit(1)), sum(col(DIST)))
+      dist = pinned
       val cur = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
       converged = cur == prev // monotone: same (count, sum) => no change
       prev = cur

@@ -40,36 +40,24 @@ final case class StronglyConnectedComponents(
   import Columns._
 
   private def minReach(vertices: DataFrame, edges: DataFrame, forward: Boolean): DataFrame = {
-    // batch-bounded driver fast path (OPTIMIZATION_r18, the UnionFind
-    // cap-and-decline device): a min-label propagation to its fixed
-    // point costs one driver round-trip per graph-diameter superstep
-    // distributed — pure job overhead on a small residual graph (g22
-    // measured 526 jobs for a 30-vertex graph). The in-memory worklist
-    // reaches the SAME unique fixpoint (monotone propagation); over the
-    // cap the Pregel path below runs exactly as before.
-    UnionFind.minReach(vertices, edges, SRC, DST, forward) match {
-      case Some(st) => st
-      case None => minReachDistributed(vertices, edges, forward)
-    }
-  }
-
-  private def minReachDistributed(
-      vertices: DataFrame, edges: DataFrame, forward: Boolean): DataFrame = {
-    val g = Graph(vertices, edges, directed = true)
-    val res = Pregel(
-      initialState = col(ID),
-      aggExpr = min(col(MSG)),
-      msgToSrc = if (forward) None else Some(col(STATE)),
-      msgToDst = if (forward) Some(col(STATE)) else None,
-      updateExpr = Some(least(col(MSG), col(STATE))),
-      maxIterations = propagationIterations,
-      checkpoint = checkpoint,
-      // deep propagation: counting every superstep costs one job each;
-      // checking every 8th trades <=7 no-op supersteps for 7 saved jobs
-      convergenceCheckInterval = 8,
-      // min is self-decomposable — hub-salted two-level aggregation
-      saltBuckets = saltBuckets)
-      .runWithStatus(g)
+    // batch-bounded driver fast path (the UnionFind cap-and-decline
+    // device): on a small residual graph the distributed propagation is
+    // pure per-superstep job overhead (g22 measured 526 jobs for a
+    // 30-vertex graph). The driver runs the same synchronous rounds, so
+    // labels, superstep count and the cap below agree on both paths;
+    // over the cap the Pregel path runs.
+    val res = UnionFind.minReach(vertices, edges, SRC, DST, forward, propagationIterations)
+      .getOrElse(Pregel(
+        initialState = col(ID),
+        aggExpr = min(col(MSG)),
+        msgToSrc = if (forward) None else Some(col(STATE)),
+        msgToDst = if (forward) Some(col(STATE)) else None,
+        updateExpr = Some(least(col(MSG), col(STATE))),
+        maxIterations = propagationIterations,
+        checkpoint = checkpoint,
+        // min is self-decomposable — hub-salted two-level aggregation
+        saltBuckets = saltBuckets)
+        .runWithStatus(Graph(vertices, edges, directed = true)))
     if (!res.converged)
       throw new IllegalStateException(
         s"SCC min-label propagation did not reach a fixed point within " +
@@ -81,12 +69,14 @@ final case class StronglyConnectedComponents(
 
   def run(g: Graph): DataFrame = {
     require(g.directed, "SCC is defined for directed graphs; use ConnectedComponents for undirected")
-    var vertices = checkpoint.pin(g.vertices.select(col(ID)))
+    val (v0, n) = checkpoint.pinObserved(g.vertices.select(col(ID)), "scc vertices", count(lit(1)))
+    var vertices = v0
+    var remaining = n.getLong(0)
     // edge_id column is irrelevant here; keep endpoints only
     var edges = checkpoint.pin(g.edges.select(col(SRC), col(DST)))
     var result: Option[DataFrame] = None
     var i = 0
-    while (i < maxIterations && !vertices.isEmpty) {
+    while (i < maxIterations && remaining > 0) {
       // the two propagations are INDEPENDENT (each reads only the pinned
       // vertices/edges), so issue them as concurrent Spark job streams:
       // a single propagation's supersteps are latency-bound driver
@@ -101,17 +91,19 @@ final case class StronglyConnectedComponents(
       val bwdF = Future(minReach(vertices, edges, forward = false))
       val fwd = Await.result(fwdF, Duration.Inf).withColumnRenamed(STATE, "_fwd")
       val bwd = Await.result(bwdF, Duration.Inf).withColumnRenamed(STATE, "_bwd")
-      val labelled = fwd.join(bwd, Seq(ID))
-      val resolved = checkpoint.pin(labelled
-        .filter(col("_fwd") === col("_bwd"))
-        .select(col(ID), col("_fwd").as(COMPONENT)))
+      i += 1
+      // one pin holds both the resolved and the residual vertices; it
+      // observes how many remain unresolved
+      val (labelled, residual) = checkpoint.pinObserved(fwd.join(bwd, Seq(ID)),
+        s"scc round $i", count(when(col("_fwd") =!= col("_bwd"), lit(1))))
+      remaining = residual.getLong(0)
+      val resolved = labelled.filter(col("_fwd") === col("_bwd"))
+        .select(col(ID), col("_fwd").as(COMPONENT))
       result = Some(result.fold(resolved)(_.unionByName(resolved)))
-      vertices = checkpoint.pin(labelled.filter(col("_fwd") =!= col("_bwd"))
-        .select(col(ID)))
+      vertices = labelled.filter(col("_fwd") =!= col("_bwd")).select(col(ID))
       edges = checkpoint.pin(edges
         .join(vertices.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
         .join(vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"))
-      i += 1
     }
     // outer cap reached with unresolved vertices: label each as its own
     // singleton (conservative refinement, like the reference's iteration caps)

@@ -1,7 +1,11 @@
 package graft.algorithms
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+
+import graft.pregel.PregelResult
 
 /** Driver-side min-label connected components for BATCH-BOUNDED merge
   * graphs — the lifecycle maintenance device.
@@ -62,31 +66,33 @@ object UnionFind {
       chosen.toSeq.toDF(srcCol, dstCol)
     }
 
-  /** Driver-side MIN-LABEL REACHABILITY fixpoint for batch-bounded
-    * DIRECTED graphs — the SCC inner-propagation device
-    * (OPTIMIZATION_r18). Computes state(v) = min id over {v} ∪
-    * ancestors(v) (`forward = true`, labels flow src→dst) or over
-    * {v} ∪ descendants(v) (`forward = false`): exactly the unique fixed
-    * point the distributed Pregel min-propagation converges to — the
-    * propagation is monotone (labels only decrease, bounded below), so
-    * the fixpoint is unique and engine-independent; labels are
-    * identical row for row. Same cap-and-decline contract as
-    * [[minLabel]]: None over `maxEdges` edges (or vertices) or on
-    * non-integral ids — callers fall back to the distributed path, so
-    * nothing corpus-sized ever lands on the driver. A worklist
-    * relaxation (each pop relaxes one vertex's out-edges; a vertex
-    * re-enters only when its label strictly drops) reaches the fixpoint
-    * in microseconds at batch scale where the distributed propagation
-    * pays one driver round-trip per graph-diameter superstep.
+  /** Driver-side MIN-LABEL REACHABILITY propagation for batch-bounded
+    * DIRECTED graphs — the SCC inner-propagation device. Computes
+    * state(v) = min id over {v} ∪ ancestors(v) (`forward = true`, labels
+    * flow src→dst) or over {v} ∪ descendants(v) (`forward = false`).
     *
-    * Output (id, state): one row per row of `vertices` (which must
+    * It runs the SAME synchronous rounds as the distributed
+    * [[graft.pregel.Pregel]] min-propagation: round 1 sends from every
+    * vertex, each later round only from the vertices whose label changed
+    * in the previous one, and every round reads the labels as they were
+    * when it began. So the labels, the round count (`iterations`, the
+    * superstep count of the distributed run) and `converged` (false when
+    * `maxRounds` rounds ended with a label still changing) all match the
+    * distributed path; callers enforce one cap contract on both.
+    *
+    * Same cap-and-decline contract as [[minLabel]]: None over `maxEdges`
+    * edges (or vertices) or on non-integral ids — callers fall back to
+    * the distributed path, so nothing corpus-sized ever lands on the
+    * driver.
+    *
+    * Output state (id, state): one row per row of `vertices` (which must
     * cover every edge endpoint — the SCC loop's residual contract),
     * sorted by id for determinism.
     */
   def minReach(
       vertices: DataFrame, edges: DataFrame,
-      srcCol: String, dstCol: String, forward: Boolean,
-      maxEdges: Int = 100000): Option[DataFrame] = {
+      srcCol: String, dstCol: String, forward: Boolean, maxRounds: Int,
+      maxEdges: Int = 100000): Option[PregelResult] = {
     import org.apache.spark.sql.types._
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     if (!integral(vertices.schema("id").dataType)) return None
@@ -96,29 +102,34 @@ object UnionFind {
       if (vrows.length > maxEdges) None
       else {
         val vs = vrows.map(_.getLong(0)).sorted
-        val label = scala.collection.mutable.Map.empty[Long, Long]
+        val label = mutable.Map.empty[Long, Long]
         vs.foreach(v => label(v) = v)
-        val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
+        val adj = mutable.Map.empty[Long, mutable.ArrayBuffer[Long]]
         es.foreach { case (s, d) =>
           val (from, to) = if (forward) (s, d) else (d, s)
-          adj.getOrElseUpdate(from, scala.collection.mutable.ArrayBuffer.empty) += to
+          adj.getOrElseUpdate(from, mutable.ArrayBuffer.empty) += to
         }
-        val queue = new java.util.ArrayDeque[Long]()
-        val inQueue = scala.collection.mutable.Set.empty[Long]
-        vs.foreach { v => queue.add(v); inQueue += v }
-        while (!queue.isEmpty) {
-          val u = queue.poll(); inQueue -= u
-          val lu = label(u)
-          adj.get(u).foreach(_.foreach { w =>
-            if (lu < label(w)) {
-              label(w) = lu
-              if (!inQueue(w)) { queue.add(w); inQueue += w }
-            }
-          })
+        var frontier: Iterable[Long] = vs
+        var rounds = 0
+        var converged = false
+        while (rounds < maxRounds && !converged) {
+          val lowered = mutable.Map.empty[Long, Long]
+          frontier.foreach { u =>
+            val lu = label(u)
+            adj.get(u).foreach(_.foreach { w =>
+              if (lu < lowered.getOrElse(w, label(w))) lowered(w) = lu
+            })
+          }
+          lowered.foreach { case (w, l) => label(w) = l }
+          frontier = lowered.keys
+          converged = lowered.isEmpty
+          rounds += 1
         }
         val spark = vertices.sparkSession
         import spark.implicits._
-        Some(vs.toSeq.map(v => (v, label(v))).toDF("id", graft.core.Columns.STATE))
+        Some(PregelResult(
+          vs.toSeq.map(v => (v, label(v))).toDF("id", graft.core.Columns.STATE),
+          converged, rounds))
       }
     }
   }

@@ -1,6 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{coalesce, lit, sum}
+import org.apache.spark.sql.types.DecimalType
 
 /** How iterative loops pin per-round state (truncate lineage + materialize).
   *
@@ -18,19 +23,39 @@ import org.apache.spark.sql.DataFrame
   *    setting for 100 TB jobs where some executor failure per hour is the
   *    expected case, not the exception. Requires
   *    `spark.sparkContext.setCheckpointDir(...)` up front.
+  *
+  * A loop that needs a scalar from each round (changed count, dangling
+  * mass, delta, fingerprint) takes it from [[pinObserved]], which reads
+  * it off the pinning pass itself. Under AQE a round then costs one job
+  * per shuffle or broadcast stage plus the checkpoint job: a Pregel
+  * connected-components superstep on a 105k-edge graph measured 5.5
+  * jobs, where a lazy pin followed by a separate count cost 10.25.
   */
 sealed trait CheckpointPolicy {
-  /** Pin `df`: truncate lineage; materialize now (`eager`) or on the
-    * caller's next action over the result (lazy — lets one job per round
-    * both materialize and compute the convergence scalar). */
-  def pin(df: DataFrame, eager: Boolean = true): DataFrame
+  /** Pin `df`: truncate lineage and materialize it now. */
+  def pin(df: DataFrame): DataFrame
+
+  /** Pin `df` and return, from the same pass over its rows, the one-row
+    * aggregate `metric +: metrics` (via `Dataset.observe`). `label`
+    * becomes the Spark job description of the pass (e.g. `pregel
+    * superstep 7`); the caller's description is restored afterwards.
+    *
+    * Observed aggregates merge their per-task partials in task
+    * COMPLETION order, so a floating-point `sum` would not replay bit
+    * for bit between runs: observe exact aggregates (`count`, `max`,
+    * `bit_xor`, integral sums, [[CheckpointPolicy.exactSum]]). */
+  def pinObserved(df: DataFrame, label: String, metric: Column, metrics: Column*): (DataFrame, Row) =
+    CheckpointPolicy.described(df, label) {
+      val obs = Observation()
+      val pinned = pin(df.observe(obs, metric, metrics: _*))
+      (pinned, Await.result(obs.future, Duration.Inf))
+    }
 }
 
 object CheckpointPolicy {
 
   case object Local extends CheckpointPolicy {
-    def pin(df: DataFrame, eager: Boolean = true): DataFrame =
-      df.localCheckpoint(eager)
+    def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
   }
 
   /** No pinning at all: `pin` returns the frame unchanged, so every
@@ -44,17 +69,41 @@ object CheckpointPolicy {
     * exchange back into every round, while re-reading the bucketed
     * table costs a scan and NO shuffle (GraphIOSpec asserts both
     * sides). Use for the static side of an iteration over bucketed
-    * storage; keep Local/Reliable for the evolving per-round state. */
+    * storage; keep Local/Reliable for the evolving per-round state.
+    *
+    * `pinObserved` runs no pass of its own to observe, so it computes
+    * the metrics with one plain aggregate and returns `df` unpinned. */
   case object Passthrough extends CheckpointPolicy {
-    def pin(df: DataFrame, eager: Boolean = true): DataFrame = df
+    def pin(df: DataFrame): DataFrame = df
+
+    override def pinObserved(
+        df: DataFrame, label: String, metric: Column, metrics: Column*): (DataFrame, Row) =
+      described(df, label)((df, df.agg(metric, metrics: _*).head()))
   }
 
   case object Reliable extends CheckpointPolicy {
-    def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
+    def pin(df: DataFrame): DataFrame = {
       require(
         df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "CheckpointPolicy.Reliable needs spark.sparkContext.setCheckpointDir(...)")
-      df.checkpoint(eager)
+      df.checkpoint(eager = true)
     }
+  }
+
+  /** Order-independent sum of a fractional column for [[CheckpointPolicy.pinObserved]]:
+    * each value rounds once to 18 decimal places, then sums exactly, so
+    * the result does not depend on the order partials merge in. Values
+    * and the sum must stay below 1e20 in magnitude; no rows (or only
+    * NULLs) sum to 0. */
+  def exactSum(c: Column): Column =
+    coalesce(sum(c.cast(DecimalType(38, 18))).cast("double"), lit(0.0))
+
+  private def described[A](df: DataFrame, label: String)(body: => A): A = {
+    val sc = df.sparkSession.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(label)
+    try body
+    finally sc.setLocalProperty(key, prev)
   }
 }
