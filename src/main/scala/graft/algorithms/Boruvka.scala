@@ -3,7 +3,7 @@ package graft.algorithms
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{CheckpointPolicy, Columns, Graph}
+import graft.core.{CheckpointPolicy, Columns}
 
 /** Borůvka minimum spanning forest — the MST algorithm that is natively
   * data-parallel: every round EVERY component picks its lightest outgoing
@@ -87,28 +87,9 @@ case class Boruvka(
         forest = forest.unionAll(
           sel.select(col(SRC), col(DST), col(weightCol))
             .withColumn("round", lit(round)))
-        val mergeEdges = sel
-          .select(col("_ca").as(SRC), col("_cb").as(DST))
-          .withColumn(EDGE_ID, xxhash64(col(SRC), col(DST)))
-        val mergeVerts = sel.select(col("_ca").as(ID))
-          .union(sel.select(col("_cb").as(ID))).distinct()
-        // requireConvergence: an unconverged contraction would mislabel
-        // components and silently corrupt the forest (ADVICE r8).
-        // The merge graph shrinks with the component count — on small
-        // inputs (and on EVERY late round of a big one) the capped
-        // driver union-find replaces ~10 star rounds of pure job
-        // overhead with microseconds, identical min-labels
-        // (AlgorithmsSpec pins UnionFind ≡ AltCC); over the cap the
-        // distributed rounds remain the path. The default 100k cap is
-        // deliberate: raising it to 1M was MEASURED a wash at sfx10 —
-        // an ~850k-edge round pays collect + a driver-built label frame
-        // shipped back out, rivaling the star rounds it replaces — so
-        // the driver serves only the genuinely small rounds, where the
-        // saving is the whole per-round job overhead (g45: 2.6→1.7 s).
-        val cc = UnionFind.minLabel(mergeEdges, SRC, DST)
-          .getOrElse(AlternatingConnectedComponents(maxIterations = 20,
-              requireConvergence = true)
-            .run(Graph(mergeVerts, mergeEdges, directed = false)))
+        // the contraction consumes the labels as final component ids:
+        // unconverged labels would silently corrupt the forest
+        val cc = AlternatingConnectedComponents.minLabels(sel, "_ca", "_cb")
           .select(col(ID).as("_oc"), col(COMPONENT).as("_nc"))
         comp = checkpoint.pin(
           comp.join(cc, col(COMPONENT) === col("_oc"), "left")

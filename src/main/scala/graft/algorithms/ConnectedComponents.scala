@@ -91,8 +91,11 @@ final case class AlternatingConnectedComponents(
       .union(e.select(col(SRC), col(MIN_NBR).as(DST)))
   }
 
-  def run(g: Graph): DataFrame = {
-    var edges = g.edges.select(col(SRC), col(DST))
+  def run(g: Graph): DataFrame = runEdges(g.edges)
+
+  /** The star rounds read only the (src, dst) columns of the edges. */
+  private def runEdges(input: DataFrame): DataFrame = {
+    var edges = input.select(col(SRC), col(DST))
     var prev: (Long, Long) = (-1L, 0L)
     var converged = false
     var i = 0
@@ -115,4 +118,36 @@ final case class AlternatingConnectedComponents(
           s"$maxIterations rounds; raise maxIterations (bound is O(log^2 |V|))")
     edges.select(col(SRC).as(ID), col(DST).as(COMPONENT))
   }
+}
+
+object AlternatingConnectedComponents {
+  import Columns._
+
+  /** Exact min-label WEAK components of an edge list: `(id, component)`
+    * for the endpoints of `edges`, component = the least id of the
+    * endpoint's connected set (edge direction ignored). Vertices that no
+    * edge touches are absent, and so may be vertices whose only edge is
+    * a self-loop: callers left-join their vertex set and coalesce a
+    * missing component to the vertex's own id.
+    *
+    * The one place that chooses between two paths with the same labels:
+    *  - the driver ([[UnionFind.minLabel]]) when both id columns are
+    *    integral and there are at most [[UnionFind.DriverCap]] edges.
+    *    The callers' graphs are usually small (a batch's label-merge
+    *    graph, the subgraph a delete touched, a Borůvka contraction, a
+    *    near-duplicate pair graph), and there the star rounds cost job
+    *    overhead per round, not data — the per-superstep overhead
+    *    GraphX (OSDI 2014) weighs against communication. Its probe
+    *    `collect` is described `min-label cc driver probe`;
+    *  - otherwise the star rounds over `edges.select(src, dst)` alone,
+    *    described `star cc round i`.
+    *
+    * Both are exact or fail: the driver always reaches the fixpoint,
+    * and the star rounds throw an IllegalStateException when 20 rounds
+    * (O(log² |V|)) end with the edge set still changing. */
+  def minLabels(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    CheckpointPolicy.described(edges, "min-label cc driver probe")(
+      UnionFind.minLabel(edges, srcCol, dstCol))
+      .getOrElse(AlternatingConnectedComponents(20, requireConvergence = true)
+        .runEdges(edges.select(col(srcCol).as(SRC), col(dstCol).as(DST))))
 }

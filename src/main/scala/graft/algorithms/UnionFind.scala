@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 import graft.pregel.PregelResult
 
@@ -19,10 +20,12 @@ import graft.pregel.PregelResult
   * — which dominates every batch's latency. A union-find over a
   * collected edge list is exact, deterministic (min-label), and
   * microseconds at batch scale; memory is bounded by the explicit edge
-  * cap, and callers FALL BACK to the distributed path when the cap is
-  * exceeded or an id column is non-integral (None), so nothing
-  * corpus-sized ever lands on the driver and no caller-typed id is
-  * coerced into a different label ordering.
+  * cap, and [[minLabel]] declines (None) when the cap is exceeded or an
+  * id column is non-integral, so nothing corpus-sized ever lands on the
+  * driver and no caller-typed id is coerced into a different label
+  * ordering. Callers do not choose between the two paths themselves:
+  * [[AlternatingConnectedComponents.minLabels]] is the one entry point
+  * that tries the driver and falls back to the star rounds.
   *
   * Output (id, component): one row per edge ENDPOINT, component = the
   * minimum id of its connected set — identical, row for row, to the
@@ -32,9 +35,17 @@ import graft.pregel.PregelResult
   */
 object UnionFind {
 
+  /** The default edge (and vertex) cap of the driver paths. Raising it
+    * to 1M was measured a wash at sfx10: an ~850k-edge Borůvka
+    * contraction round pays the collect plus a driver-built label frame
+    * shipped back out, rivalling the star rounds it replaces. So the
+    * driver serves only the genuinely small inputs, where the saving is
+    * the whole per-round job overhead (g45 Borůvka: 2.6 s → 1.7 s). */
+  val DriverCap: Int = 100000
+
   def minLabel(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxEdges: Int = 100000): Option[DataFrame] =
+      maxEdges: Int = DriverCap): Option[DataFrame] =
     collectIntegral(edges, srcCol, dstCol, maxEdges).map { rows =>
       val uf = new Forest
       rows.foreach { case (a, b) => uf.union(a, b) }
@@ -57,7 +68,7 @@ object UnionFind {
     * the scan order is the sorted edge list. */
   def spanningPairs(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxEdges: Int = 100000): Option[DataFrame] =
+      maxEdges: Int = DriverCap): Option[DataFrame] =
     collectIntegral(edges, srcCol, dstCol, maxEdges).map { rows =>
       val uf = new Forest
       val chosen = rows.sorted.filter { case (a, b) => uf.union(a, b) }
@@ -92,9 +103,7 @@ object UnionFind {
   def minReach(
       vertices: DataFrame, edges: DataFrame,
       srcCol: String, dstCol: String, forward: Boolean, maxRounds: Int,
-      maxEdges: Int = 100000): Option[PregelResult] = {
-    import org.apache.spark.sql.types._
-    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+      maxEdges: Int = DriverCap): Option[PregelResult] = {
     if (!integral(vertices.schema("id").dataType)) return None
     collectIntegral(edges, srcCol, dstCol, maxEdges).flatMap { es =>
       val vrows = vertices.select(col("id").cast("long"))
@@ -134,6 +143,10 @@ object UnionFind {
     }
   }
 
+  /** Id types the driver paths serve: their values convert to Long
+    * without loss and order the same way as Longs. */
+  private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
   /** The shared cap-and-decline collect: Some(edge pairs) only when both
     * key columns are integral (a string id would cast to null — NPE at
     * getLong — and a NUMERIC string would get numeric min-label ordering
@@ -143,8 +156,6 @@ object UnionFind {
   private def collectIntegral(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxEdges: Int): Option[Array[(Long, Long)]] = {
-    import org.apache.spark.sql.types._
-    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     val fields = edges.schema
     if (!integral(fields(srcCol).dataType) || !integral(fields(dstCol).dataType))
       return None

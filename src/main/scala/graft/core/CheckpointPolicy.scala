@@ -98,7 +98,9 @@ object CheckpointPolicy {
   def exactSum(c: Column): Column =
     coalesce(sum(c.cast(DecimalType(38, 18))).cast("double"), lit(0.0))
 
-  private def described[A](df: DataFrame, label: String)(body: => A): A = {
+  /** Run `body` with `label` as the Spark job description of the jobs
+    * it starts, restoring the caller's description afterwards. */
+  private[graft] def described[A](df: DataFrame, label: String)(body: => A): A = {
     val sc = df.sparkSession.sparkContext
     val key = "spark.job.description"
     val prev = sc.getLocalProperty(key)

@@ -91,22 +91,18 @@ object DedupIndex {
       * this exploded to exact copies. Min-id labels are deterministic,
       * which is what makes the incremental advance
       * ([[DedupIndex.advanceClusters]]) provably ≡ this rebuilt.
+      *
+      * The labels are exact on both paths of
+      * [[graft.algorithms.AlternatingConnectedComponents.minLabels]]:
+      * a pair graph whose star rounds have not converged after 20
+      * rounds throws an IllegalStateException instead of returning
+      * unconverged labels.
       */
-    def nearClusters(
-        threshold: Double,
-        maxBucketSize: Int = 0,
-        maxIterations: Int = 20): DataFrame = {
-      import graft.core.{Columns, Graph}
+    def nearClusters(threshold: Double, maxBucketSize: Int = 0): DataFrame = {
+      import graft.core.Columns
       val reps = clusters.select(col("keep_id").as(Columns.ID))
-      val edges = pairs(threshold, maxBucketSize)
-        .select(col("id_a").as(Columns.SRC), col("id_b").as(Columns.DST))
-      // the pair graph is usually tiny next to its star-round job
-      // overhead — driver union-find under the cap, distributed CC over
-      // it (both min-label, AlgorithmsSpec-pinned identical)
-      val cc = graft.algorithms.UnionFind
-        .minLabel(edges, Columns.SRC, Columns.DST)
-        .getOrElse(graft.algorithms.AlternatingConnectedComponents(maxIterations)
-          .run(Graph(reps, edges, directed = false)))
+      val cc = graft.algorithms.AlternatingConnectedComponents
+        .minLabels(pairs(threshold, maxBucketSize), "id_a", "id_b")
       reps
         .join(cc, Seq(Columns.ID), "left")
         .select(col(Columns.ID).as("id"),
@@ -117,15 +113,13 @@ object DedupIndex {
       * the stored index: connected components over the near-dup pair
       * graph among representatives, then every exact copy inherits its
       * representative's component. Output (idColOut, cluster_id), one
-      * row per input document.
+      * row per input document. Exact or fails, as [[nearClusters]].
       */
     def clusterAssign(
         threshold: Double,
         idColOut: String,
-        maxBucketSize: Int = 0,
-        maxIterations: Int = 20): DataFrame =
-      clusterAssignFrom(
-        nearClusters(threshold, maxBucketSize, maxIterations), idColOut)
+        maxBucketSize: Int = 0): DataFrame =
+      clusterAssignFrom(nearClusters(threshold, maxBucketSize), idColOut)
 
     /** [[clusterAssign]] from an ALREADY-BUILT representative-level
       * cluster map — the consumer face of the maintained table
@@ -379,9 +373,8 @@ object DedupIndex {
       m: MergeResult,
       oldClusters: DataFrame,
       threshold: Double,
-      maxBucketSize: Int = 0,
-      maxIterations: Int = 20): DataFrame = {
-    import graft.core.{Columns, Graph}
+      maxBucketSize: Int = 0): DataFrame = {
+    import graft.core.Columns
     val rk = m.rekey
     // 1. rekey both columns (two broadcast lookups, one narrow pass)
     val k1 = rk.select(col("_oldid").as("_ko"), col("_newid").as("_kn"))
@@ -447,21 +440,8 @@ object DedupIndex {
       .localCheckpoint()
     if (touched.isEmpty) cur
     else {
-      // batch-bounded label-merge graph: driver union-find (the GraphIO
-      // device) instead of distributed star-round job overhead;
-      // distributed CC is the over-cap fallback
-      val labels = graft.algorithms.UnionFind
-        .minLabel(touched, "_la", "_lb")
-        .getOrElse {
-          val mergeEdges = touched
-            .select(col("_la").as(Columns.SRC), col("_lb").as(Columns.DST))
-            .withColumn(Columns.EDGE_ID, xxhash64(col(Columns.SRC), col(Columns.DST)))
-          val mergeVerts = mergeEdges.select(col(Columns.SRC).as(Columns.ID))
-            .union(mergeEdges.select(col(Columns.DST))).distinct()
-          graft.algorithms.AlternatingConnectedComponents(
-            maxIterations, requireConvergence = true)
-            .run(Graph(mergeVerts, mergeEdges, directed = false))
-        }
+      val labels = graft.algorithms.AlternatingConnectedComponents
+        .minLabels(touched, "_la", "_lb")
       val mapping = labels
         .filter(col(Columns.ID) =!= col(Columns.COMPONENT))
         .select(col(Columns.ID).as("_old"), col(Columns.COMPONENT).as("_new"))
@@ -680,8 +660,8 @@ object DedupIndex {
     * affected clusters only). */
   def repairClustersAfterDelete(
       r: DeleteResult, oldNcl: DataFrame, threshold: Double,
-      maxBucketSize: Int = 0, maxIterations: Int = 20): DataFrame = {
-    import graft.core.{Columns, Graph}
+      maxBucketSize: Int = 0): DataFrame = {
+    import graft.core.Columns
     val touchedIds = r.emptiedRepIds
       .unionByName(r.rekey.select(col("_oldid").as("id")))
       .distinct().localCheckpoint()
@@ -715,15 +695,7 @@ object DedupIndex {
       .filter(
         (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b")))) >= threshold)
-      .select(col("id_a").as(Columns.SRC), col("id_b").as(Columns.DST))
-    // affected-mass-bounded pair subgraph: driver union-find when small,
-    // distributed CC over the cap
-    val cc = graft.algorithms.UnionFind
-      .minLabel(edges, Columns.SRC, Columns.DST)
-      .getOrElse(graft.algorithms.AlternatingConnectedComponents(
-        maxIterations, requireConvergence = true)
-        .run(Graph(survivors.select(col("id").as(Columns.ID)), edges,
-          directed = false)))
+    val cc = graft.algorithms.AlternatingConnectedComponents.minLabels(edges, "id_a", "id_b")
     val repaired = survivors
       .join(cc, survivors("id") === cc(Columns.ID), "left")
       .select(survivors("id"),

@@ -196,9 +196,9 @@ object CatalogTables {
   def prepareOverwrite(spark: SparkSession, table: String): Unit = {
     val location: Option[String] =
       if (spark.catalog.tableExists(table))
-        // direct catalog-metadata read (OPTIMIZATION_r18): the previous
-        // `DESCRIBE TABLE EXTENDED` ran a full SQL command + collect per
-        // call — tens of ms of driver latency × every staged swap; the
+        // read the catalog metadata directly: `DESCRIBE TABLE EXTENDED`
+        // runs a full SQL command + collect per call — tens of ms of
+        // driver latency on every staged swap; the
         // metadata object carries the same resolved location (None for
         // a view, which deletes nothing — unchanged semantics)
         spark.sessionState.catalog

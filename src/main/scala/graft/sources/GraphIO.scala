@@ -78,8 +78,8 @@ object GraphIO {
     * staged swaps keep their per-swap stale-base check; failures
     * surface after all branches settle (no detached job stream). */
   /** Align a frame to its destination's bucket layout before a bucketed
-    * write (guide §6, OPTIMIZATION_r18): repartition into exactly
-    * `buckets` partitions on the bucket key — HashPartitioning, the same
+    * write: repartition into exactly `buckets` partitions on the
+    * bucket key — HashPartitioning, the same
     * murmur hash `bucketBy` assigns bucket ids with — so each write task
     * owns ONE whole bucket and the table lands as one file per bucket.
     * Without it a bucketed write emits up to (input tasks × buckets)
@@ -146,9 +146,8 @@ object GraphIO {
         CatalogTables.prepareOverwrite(g.vertices.sparkSession, s"${name}_$t"))
       // the vertex and edge writes are INDEPENDENT (each consumes its own
       // half of the caller's indexing chain) — run them as concurrent job
-      // streams (guide §2.6, OPTIMIZATION_r18) so each write's straggler
-      // tail and driver-side commit latency hide behind the sibling's
-      // jobs. The degree write stays AFTER the edge write: it reads the
+      // streams so each write's straggler tail and driver-side commit
+      // latency hide behind the sibling's jobs. The degree write stays AFTER the edge write: it reads the
       // just-written table (see below).
       inParallel(
         () =>
@@ -225,27 +224,16 @@ object GraphIO {
     * — deterministic, so the maintained table and a whole-rebuild agree
     * row for row (GraphAppendSpec pins it).
     */
-  def componentsOf(g: Graph, maxIterations: Int = 20): DataFrame =
-    labelsFor(g.vertices,
-      g.edges.select(org.apache.spark.sql.functions.col("src"),
-        org.apache.spark.sql.functions.col("dst")), maxIterations)
+  def componentsOf(g: Graph): DataFrame = labelsFor(g.vertices, g.edges)
 
   /** Min-id weak-connectivity labels of an edge frame over a vertex set
     * — [[componentsOf]]'s engine, shared with the certificate-scoped
-    * [[refreshLabels]]. Batch-bounded inputs take the driver union-find
-    * (the [[repairComponentTable]] device, OPTIMIZATION_r18: a full CC's
-    * ~10 star rounds are pure job overhead on a small graph — measured
-    * ~40 driver round-trips for a 1 500-vertex store); over the cap the
-    * distributed star rounds run exactly as before. Labels are
-    * identical either way (min-label CC is deterministic;
-    * AlgorithmsSpec pins the equivalence). */
-  private def labelsFor(
-      vertices: DataFrame, edges: DataFrame, maxIterations: Int): DataFrame = {
+    * [[refreshLabels]] and the delete repairs: the exact labels of
+    * [[graft.algorithms.AlternatingConnectedComponents.minLabels]],
+    * with every vertex no edge labels taking its own id. */
+  private def labelsFor(vertices: DataFrame, edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val cc = graft.algorithms.UnionFind.minLabel(edges, "src", "dst")
-      .getOrElse(graft.algorithms.AlternatingConnectedComponents(
-        maxIterations, requireConvergence = true)
-        .run(Graph(vertices.select(col("id")), edges, directed = false)))
+    val cc = graft.algorithms.AlternatingConnectedComponents.minLabels(edges, "src", "dst")
     vertices.select(col("id"))
       .join(cc, Seq("id"), "left")
       .select(col("id"),
@@ -260,9 +248,9 @@ object GraphIO {
     * re-runs CC over the corpus: the O(log²) star rounds run once here,
     * then each batch pays a batch-sized merge (see [[appendEdges]]).
     */
-  def buildComponents(spark: SparkSession, name: String, maxIterations: Int = 20): Unit =
+  def buildComponents(spark: SparkSession, name: String): Unit =
     mutate(spark, name) {
-      val comps = componentsOf(readBucketed(spark, name), maxIterations)
+      val comps = componentsOf(readBucketed(spark, name))
       val cb = tableBuckets(spark, s"${name}_edges")
       CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
         toBuckets(comps, cb, "id").write.mode("overwrite")
@@ -297,11 +285,11 @@ object GraphIO {
     * certificate drops it loudly first (see [[dropUntrustedForest]]).
     * Want fresh labels without paying the certificate rebuild? That is
     * [[refreshLabels]]. */
-  def refreshComponents(spark: SparkSession, name: String, maxIterations: Int = 20): Unit =
+  def refreshComponents(spark: SparkSession, name: String): Unit =
     mutate(spark, name) {
       val rebuildForest = hasForest(spark, name)
       if (rebuildForest) setRefreshPending(spark, name)
-      buildComponents(spark, name, maxIterations)
+      buildComponents(spark, name)
       if (rebuildForest) buildForest(spark, name)
       clearRefreshPending(spark, name)
     }
@@ -324,15 +312,15 @@ object GraphIO {
     * unguarded check could otherwise slide this rebuild into the
     * pending window — the epoch guard made that race benign, but the
     * contract should not lean on that reasoning chain. */
-  def refreshLabels(spark: SparkSession, name: String, maxIterations: Int = 20): Unit =
+  def refreshLabels(spark: SparkSession, name: String): Unit =
     mutate(spark, name) {
       import org.apache.spark.sql.functions._
       require(!refreshPending(spark, name),
         s"an interrupted refreshComponents left '$name''s certificate untrusted — " +
           s"labels-only refresh would pair fresh labels with phantom witnesses; " +
           s"re-run refreshComponents('$name')")
-      // CERTIFICATE-SCOPED relabel (guide §1.2/§2.4, OPTIMIZATION_r18):
-      // when the maintained certificate exists — and the pending gate
+      // CERTIFICATE-SCOPED relabel: when the maintained certificate
+      // exists — and the pending gate
       // above just proved it TRUSTED — CC over its TREE-sized rows
       // (≤ V−1, a subset of the stored edges spanning exactly the same
       // components, the [[buildForest]] contract) yields the identical
@@ -341,17 +329,14 @@ object GraphIO {
       // the equivalence against the full rebuild. No certificate → the
       // full [[buildComponents]] pass, unchanged.
       if (hasForest(spark, name)) {
-        val comps = labelsFor(
-          spark.table(s"${name}_vertices"),
-          readForest(spark, name).select(col("src"), col("dst")),
-          maxIterations)
+        val comps = labelsFor(spark.table(s"${name}_vertices"), readForest(spark, name))
         val cb = tableBuckets(spark, s"${name}_edges")
         CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
           toBuckets(comps, cb, "id").write.mode("overwrite")
             .bucketBy(cb, "id").sortBy("id")
             .saveAsTable(t)
         }
-      } else buildComponents(spark, name, maxIterations)
+      } else buildComponents(spark, name)
     }
 
   /** True while a [[refreshComponents]] pair is incomplete: set before
@@ -636,9 +621,8 @@ object GraphIO {
     val buckets = tableBuckets(spark, s"${name}_edges")
     // the batch-sized edge append and the degree fold are independent
     // (fresh is pinned; merged reads the live degree table only) —
-    // concurrent job streams (guide §2.6, OPTIMIZATION_r18); the crash
-    // contract is the documented one either way (a stale cache is
-    // rebuilt by refreshDegrees)
+    // concurrent job streams; the crash contract is the documented one
+    // either way (a stale cache is rebuilt by refreshDegrees)
     inParallel(
       () =>
         fresh.transform(toBuckets(_, buckets, "src"))
@@ -709,21 +693,8 @@ object GraphIO {
             .bucketBy(fb0, "src").sortBy("src")
             .saveAsTable(s"${name}_forest")
         }
-        // the merge graph is batch-bounded by contract — a driver-side
-        // union-find beats ~10 distributed star rounds of pure job
-        // overhead; the distributed path remains the (never-expected)
-        // over-cap fallback
-        val labels = graft.algorithms.UnionFind
-          .minLabel(touched, "_ca", "_cb")
-          .getOrElse {
-            val mergeEdges = touched.select(col("_ca").as("src"), col("_cb").as("dst"))
-              .withColumn("edge_id", xxhash64(col("src"), col("dst")))
-            val mergeVerts = mergeEdges.select(col("src").as("id"))
-              .union(mergeEdges.select(col("dst"))).distinct()
-            graft.algorithms.AlternatingConnectedComponents(
-              maxIterations = 20, requireConvergence = true)
-              .run(Graph(mergeVerts, mergeEdges, directed = false))
-          }
+        val labels = graft.algorithms.AlternatingConnectedComponents
+          .minLabels(touched, "_ca", "_cb")
         val mapping = labels
           .filter(col("id") =!= col("component"))
           .select(col("id").as("_old"), col("component").as("_new"))
@@ -1070,8 +1041,8 @@ object GraphIO {
       .filter(col("out_degree") > 0L || col("in_degree") > 0L)
     // the two rewrites are independent (kept reads the live EDGE table;
     // merged reads the live DEGREE table + the pinned removed delta) —
-    // concurrent job streams (guide §2.6, OPTIMIZATION_r18). Crash
-    // honesty is unchanged in kind: either table can now be the stale
+    // concurrent job streams. Crash honesty is unchanged in kind:
+    // either table can now be the stale
     // one after a crash mid-pair, and [[refreshDegrees]] rebuilds the
     // degree cache from the edge table in both orders.
     // the conf scope must cover the ACTIONS: physical planning of the
@@ -1167,14 +1138,7 @@ object GraphIO {
       else {
         val subEdges = spark.table(s"${name}_edges")
           .join(survivors.select(col("id").as("src")), Seq("src"), "left_semi")
-        // small affected mass (the common case): driver union-find
-        // instead of ~10 star rounds of job overhead; big: distributed
-        val cc = graft.algorithms.UnionFind.minLabel(subEdges, "src", "dst")
-          .getOrElse(graft.algorithms.AlternatingConnectedComponents(
-            maxIterations = 20, requireConvergence = true)
-            .run(Graph(survivors, subEdges, directed = true)))
-        survivors.join(cc, Seq("id"), "left")
-          .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+        labelsFor(survivors, subEdges)
       }
     // LAZY: the staged write reads the live component table
     val next = comp.join(lbl, comp("component") === lbl("_lbl"), "left_anti")
@@ -1241,12 +1205,8 @@ object GraphIO {
       .join(survivors.select(col("id").as("src")), Seq("src"), "left_semi")
       .select(col("src"), col("dst"))
       .localCheckpoint()
-    val pieceCc = graft.algorithms.UnionFind.minLabel(forestAff, "src", "dst")
-      .getOrElse(graft.algorithms.AlternatingConnectedComponents(
-        maxIterations = 20, requireConvergence = true)
-        .run(Graph(survivors, forestAff, directed = true)))
-    val pieces = survivors.join(pieceCc, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("_piece"))
+    val pieces = labelsFor(survivors, forestAff)
+      .select(col("id"), col("component").as("_piece"))
       .localCheckpoint()
     // 2. the probe side: all pieces EXCEPT each component's largest
     // (ties broken by piece label — exactly one exempt piece per
@@ -1289,15 +1249,7 @@ object GraphIO {
       .groupBy(col("_pa"), col("_pb")).agg(min(col("_e")).as("_e"))
       .localCheckpoint()
     // 3a. merged labels over the piece graph (min-label = final min id)
-    val pieceMerge = graft.algorithms.UnionFind.minLabel(rep, "_pa", "_pb")
-      .getOrElse {
-        val mEdges = rep.select(col("_pa").as("src"), col("_pb").as("dst"))
-        val mVerts = mEdges.select(col("src").as("id"))
-          .union(mEdges.select(col("dst"))).distinct()
-        graft.algorithms.AlternatingConnectedComponents(
-          maxIterations = 20, requireConvergence = true)
-          .run(Graph(mVerts, mEdges, directed = false))
-      }
+    val pieceMerge = graft.algorithms.AlternatingConnectedComponents.minLabels(rep, "_pa", "_pb")
     // 3b. the spanning subset of piece pairs → their representative
     // edges splice into the certificate (adding EVERY crossing pair
     // would bloat it toward pieces² rows; the spanning subset keeps it
@@ -1500,9 +1452,9 @@ object GraphIO {
   /** Bucket count of an existing catalog table (so appends never have to
     * re-state — or mis-state — the write-time spec). */
   private def tableBuckets(spark: SparkSession, table: String): Int =
-    // direct catalog-metadata read (OPTIMIZATION_r18): the previous
-    // DESCRIBE ran a full SQL command + collect — tens of ms × the
-    // ~15 lookups a single lifecycle mutation makes
+    // read the catalog metadata directly: a DESCRIBE runs a full SQL
+    // command + collect, tens of ms for each of the ~15 lookups a
+    // single lifecycle mutation makes
     scala.util.Try(
       spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))

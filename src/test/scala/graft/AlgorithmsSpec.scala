@@ -962,10 +962,22 @@ class AlgorithmsSpec extends SparkSpec {
       // compare at the CONSUMPTION contract (every call site left-joins
       // and coalesces): AltCC omits self-loop-only vertices, UnionFind
       // labels every endpoint — both coalesce to the same rows
-      val dist = verts.join(distCc, Seq(ID), "left")
-        .select(col(ID).as("id"),
-          coalesce(col(COMPONENT), col(ID)).as("component"))
+      def consumed(vs: org.apache.spark.sql.DataFrame, cc: org.apache.spark.sql.DataFrame) =
+        vs.join(cc, Seq(ID), "left")
+          .select(col(ID).as("id"),
+            coalesce(col(COMPONENT), col(ID)).as("component"))
+      val dist = consumed(verts, distCc)
       assert(rowSet(local) === rowSet(dist), s"seed $seed")
+      // the one entry point: long ids take the driver path…
+      assert(rowSet(consumed(verts, AlternatingConnectedComponents.minLabels(edges, SRC, DST))) ===
+        rowSet(dist), s"seed $seed minLabels")
+      // …string ids the star rounds; zero-padded, so string order is id order
+      def padded(c: String) = lpad(col(c).cast("string"), 3, "0")
+      val strEdges = edges.select(padded(SRC).as("a"), padded(DST).as("b"))
+      val strLabels = consumed(verts.select(padded(ID).as(ID)),
+          AlternatingConnectedComponents.minLabels(strEdges, "a", "b"))
+        .select(col("id").cast("long"), col("component").cast("long"))
+      assert(rowSet(strLabels) === rowSet(dist), s"seed $seed minLabels on string ids")
     }
     // over-cap input must decline, not truncate
     val big = spark.range(0, 50).select(col("id").as(SRC), (col("id") + 1).as(DST))

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
 import graft.algorithms.{ConnectedComponents, PageRank, UnionFind}
 import graft.core.{CheckpointPolicy, Columns, Graph}
 import graft.pregel.Pregel
+import graft.sources.GraphIO
 
 /** The one-pass-per-iteration contract: [[CheckpointPolicy.pinObserved]]
-  * and the loops built on it (Pregel, PageRank, the SCC driver path). */
+  * and the loops built on it (Pregel, PageRank, the SCC driver path),
+  * and the job labels that show which components path ran. */
 class IterationSpec extends SparkSpec {
   import Columns._
 
@@ -134,6 +136,24 @@ class IterationSpec extends SparkSpec {
         assert(rowSet(local.state) === rowSet(dist.state.select(col(ID), col(STATE))), ctx)
       }
       assert(full.converged)
+    }
+  }
+
+  test("appendEdges merges a small store's components on the driver: a probe job, no star rounds") {
+    import spark.implicits._
+    val name = "iteration_append"
+    GraphIO.writeBucketed(Graph.index(Seq("a", "b", "c", "d").toDF("id"),
+      Seq(("a", "b"), ("c", "d")).toDF("src", "dst")), name, buckets = 2)
+    try {
+      GraphIO.buildComponents(spark, name)
+      val jobs = jobDescriptions(GraphIO.appendEdges(spark, name, Seq(("b", "c")).toDF("src", "dst")))
+      assert(jobs.contains("min-label cc driver probe"), jobs)
+      assert(!jobs.exists(_.startsWith("star cc round")), jobs)
+      assert(GraphIO.readComponents(spark, name).select("component").distinct().count() === 1L)
+    } finally {
+      Seq("vertices", "edges", "degrees", "components")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
+      spark.sql(s"DROP TABLE IF EXISTS ${name}__epoch")
     }
   }
 

@@ -147,7 +147,7 @@ object ComponentMergeStress {
       graft.sources.GraphIO.writeBucketed(g, "stress_cm", buckets = 32)
     }
     timed("components-build") {
-      graft.sources.GraphIO.buildComponents(spark, "stress_cm", maxIterations = 20)
+      graft.sources.GraphIO.buildComponents(spark, "stress_cm")
     }
     val c0 = graft.sources.GraphIO.readComponents(spark, "stress_cm")
       .select(col("component")).distinct().count()
