@@ -75,17 +75,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = envInt("SPARK_GRAFT_CPUS", 4)
     val repeats = envInt("SPARK_GRAFT_REPEATS", 3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // warm the page cache / file index once so cold-read cost is not
     // attributed to whichever query happens to touch a table first
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -183,7 +175,7 @@ object Bench {
     val nQ = names.count { case (k, _) => roundedPasses.contains(k) }
     val nE = names.count { case (k, _) => !best.contains(k) && errors.contains(k) }
     val compact = s"""{"metric":"total","value":${s3(total)},"unit":"sec",""" +
-      s""""repeats":$repeats,"n_queries":$nQ,"n_errors":$nE,"cpus":"${esc(cpus)}",""" +
+      s""""repeats":$repeats,"n_queries":$nQ,"n_errors":$nE,"cpus":"$cpus",""" +
       s""""sf":"${esc(sfDir)}","queries_in":"full line above; file copy in """ +
       s"""SPARK_GRAFT_BENCH_OUT (default BENCH_SELF.json)"}"""
     println(compact)

@@ -16,8 +16,7 @@ import graft.pregel.Pregel
   */
 final case class ConnectedComponents(
     maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
-    saltBuckets: Int = 0) {
+    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
   import Columns._
 
   def run(g: Graph): DataFrame =
@@ -28,13 +27,7 @@ final case class ConnectedComponents(
       msgToDst = Some(col(STATE)),
       updateExpr = Some(least(col(MSG), col(STATE))),
       maxIterations = maxIterations,
-      checkpoint = checkpoint,
-      // min is self-decomposable so salting is VALID here; it is off by
-      // default because Spark's hash aggregate already partial-combines
-      // map-side (see Pregel.saltBuckets) and the extra exchange measured
-      // ~6x per-superstep overhead at sf0.1. Turn on for extreme hubs
-      // combined with very high map-task counts.
-      saltBuckets = saltBuckets)
+      checkpoint = checkpoint)
       .run(g)
       .select(col(ID), col(STATE).as(COMPONENT))
 }
@@ -53,11 +46,16 @@ final case class ConnectedComponents(
   *    the edge set instead of `sum(dst)` alone (collision-prone, and a long
   *    sum overflows under ANSI mode; xor over a distinct set is exact,
   *    order-independent and constant-size).
+  *
+  * The labels are exact or the run throws: when `maxIterations` rounds
+  * end with the edge set still changing, an IllegalStateException names
+  * the cap. `requireConvergence = false` returns the truncated labels
+  * instead, for callers that want a partial labelling on purpose.
   */
 final case class AlternatingConnectedComponents(
     maxIterations: Int = 10,
     checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
-    requireConvergence: Boolean = false) {
+    requireConvergence: Boolean = true) {
   import Columns._
 
   private val MIN_NBR = "min_nbr"
@@ -109,9 +107,7 @@ final case class AlternatingConnectedComponents(
       converged = cur == prev
       prev = cur
     }
-    // Callers that consume the labels as *final* component ids (e.g. Boruvka's
-    // contraction) must not receive a silently-unconverged labelling: the
-    // star rounds only guarantee correct components at the fixpoint.
+    // the star rounds only guarantee correct components at the fixpoint
     if (requireConvergence && !converged)
       throw new IllegalStateException(
         s"AlternatingConnectedComponents: edge set still changing after " +
@@ -148,6 +144,6 @@ object AlternatingConnectedComponents {
   def minLabels(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     CheckpointPolicy.described(edges, "min-label cc driver probe")(
       UnionFind.minLabel(edges, srcCol, dstCol))
-      .getOrElse(AlternatingConnectedComponents(20, requireConvergence = true)
+      .getOrElse(AlternatingConnectedComponents(20)
         .runEdges(edges.select(col(srcCol).as(SRC), col(dstCol).as(DST))))
 }

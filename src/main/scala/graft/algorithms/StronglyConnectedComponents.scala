@@ -35,8 +35,7 @@ import graft.pregel.Pregel
 final case class StronglyConnectedComponents(
     maxIterations: Int = 10,
     propagationIterations: Int = 1000,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
-    saltBuckets: Int = 0) {
+    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
   import Columns._
 
   private def minReach(vertices: DataFrame, edges: DataFrame, forward: Boolean): DataFrame = {
@@ -54,9 +53,7 @@ final case class StronglyConnectedComponents(
         msgToDst = if (forward) Some(col(STATE)) else None,
         updateExpr = Some(least(col(MSG), col(STATE))),
         maxIterations = propagationIterations,
-        checkpoint = checkpoint,
-        // min is self-decomposable — hub-salted two-level aggregation
-        saltBuckets = saltBuckets)
+        checkpoint = checkpoint)
         .runWithStatus(Graph(vertices, edges, directed = true)))
     if (!res.converged)
       throw new IllegalStateException(

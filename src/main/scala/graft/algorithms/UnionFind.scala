@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
+import graft.core.CheckpointPolicy
 import graft.pregel.PregelResult
 
 /** Driver-side min-label connected components for BATCH-BOUNDED merge
@@ -65,11 +66,13 @@ object UnionFind {
     * [[minLabel]] (the scaffolding is shared, so the two faces cannot
     * diverge): None over `maxEdges` rows or on non-integral key
     * columns — callers fall back to distributed Borůvka. Deterministic:
-    * the scan order is the sorted edge list. */
+    * the scan order is the sorted edge list. The probe `collect` is
+    * described `spanning-pairs driver probe`. */
   def spanningPairs(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxEdges: Int = DriverCap): Option[DataFrame] =
-    collectIntegral(edges, srcCol, dstCol, maxEdges).map { rows =>
+    CheckpointPolicy.described(edges, "spanning-pairs driver probe")(
+      collectIntegral(edges, srcCol, dstCol, maxEdges)).map { rows =>
       val uf = new Forest
       val chosen = rows.sorted.filter { case (a, b) => uf.union(a, b) }
       val spark = edges.sparkSession
@@ -94,7 +97,7 @@ object UnionFind {
     * Same cap-and-decline contract as [[minLabel]]: None over `maxEdges`
     * edges (or vertices) or on non-integral ids — callers fall back to
     * the distributed path, so nothing corpus-sized ever lands on the
-    * driver.
+    * driver. The probe `collect`s are described `min-reach driver probe`.
     *
     * Output state (id, state): one row per row of `vertices` (which must
     * cover every edge endpoint — the SCC loop's residual contract),
@@ -105,9 +108,10 @@ object UnionFind {
       srcCol: String, dstCol: String, forward: Boolean, maxRounds: Int,
       maxEdges: Int = DriverCap): Option[PregelResult] = {
     if (!integral(vertices.schema("id").dataType)) return None
-    collectIntegral(edges, srcCol, dstCol, maxEdges).flatMap { es =>
-      val vrows = vertices.select(col("id").cast("long"))
-        .limit(maxEdges + 1).collect()
+    CheckpointPolicy.described(edges, "min-reach driver probe")(
+      collectIntegral(edges, srcCol, dstCol, maxEdges).map { es =>
+        (es, vertices.select(col("id").cast("long")).limit(maxEdges + 1).collect())
+      }).flatMap { case (es, vrows) =>
       if (vrows.length > maxEdges) None
       else {
         val vs = vrows.map(_.getLong(0)).sorted

@@ -218,6 +218,8 @@ object Dedup {
     * `cluster_id` is the minimum doc id of the merged
     * (exact ∪ transitive-near-dup) cluster; unique documents are their own
     * singleton cluster. Survivors = `groupBy(cluster_id).agg(min(idCol))`.
+    * Throws IllegalStateException when the CC step needs more than
+    * `maxIterations` rounds, rather than return partial clusters.
     *
     * 100 TB shape: the CC step runs on the PAIR graph only — pairs are a
     * vanishing fraction of the corpus — so the added cost over

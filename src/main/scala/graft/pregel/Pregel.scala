@@ -50,30 +50,6 @@ final case class PregelResult(state: DataFrame, converged: Boolean, iterations: 
   * @param checkpoint    where per-superstep state pins live —
   *                      [[CheckpointPolicy.Reliable]] for cluster jobs that
   *                      must survive executor loss
-  * @param saltBuckets   power-law hub hardening: when > 1, inbound
-  *                      messages aggregate in TWO levels — first by
-  *                      (recipient, salt) with `saltBuckets` salts, then
-  *                      by recipient — so a hub vertex's reduce work
-  *                      spreads over `saltBuckets` reducers before the
-  *                      (now tiny) final combine. ONLY sound when
-  *                      `aggExpr` is self-decomposable (min/max/sum/
-  *                      count-as-sum/bit ops: agg(agg(xs), agg(ys)) ==
-  *                      agg(xs ++ ys)); order-sensitive or holistic
-  *                      aggregates (collect_list-based hashes, exact
-  *                      medians) must keep the default 0. The salt is the
-  *                      sender's shuffle partition id, so results are
-  *                      invariant — any grouping of a decomposable agg
-  *                      yields the same total.
-  *
-  *                      Default OFF, deliberately: for decomposable aggs
-  *                      Spark's hash aggregate already partial-combines
-  *                      map-side, so a hub's reduce fan-in is bounded by
-  *                      the upstream MAP-TASK count, not its degree, and
-  *                      the extra exchange measured ~6x per-superstep
-  *                      overhead at toy scale. Reach for this only when
-  *                      map-task counts are so high (or the merge so
-  *                      expensive) that even one partial row per map task
-  *                      overloads a single reducer.
   * @param messageAggregator full replacement for the per-superstep
   *                      `groupBy(id).agg(aggExpr)`: a function from the
   *                      raw message frame (columns [[Columns.ID]],
@@ -83,8 +59,7 @@ final case class PregelResult(state: DataFrame, converged: Boolean, iterations: 
   *                      — e.g. `mode` as count-per-(id, value) + argmax,
   *                      both partial-aggregable — this turns a per-hub
   *                      hashmap on one reducer into two skew-free hash
-  *                      aggregations. When set, `aggExpr` and
-  *                      `saltBuckets` are ignored.
+  *                      aggregations. When set, `aggExpr` is ignored.
   * @param superstepListener called after every materialized superstep with
   *                      (iteration, seconds since the previous callback) —
   *                      the progress/ops hook for multi-hour propagations
@@ -100,7 +75,6 @@ final case class Pregel(
     comparison: (Column, Column) => Column = GraphUtil.neNullSafe,
     maxIterations: Int = 10,
     checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
-    saltBuckets: Int = 0,
     messageAggregator: Option[DataFrame => DataFrame] = None,
     superstepListener: Option[(Int, Double) => Unit] = None) {
   import Columns._
@@ -113,7 +87,6 @@ final case class Pregel(
   private val DIR = "_dir"
   private val HIT = "_hit"
   private val CHANGED = "_changed"
-  private val SALT = "_salt"
 
   def run(g: Graph): DataFrame = runWithStatus(g).state
 
@@ -144,11 +117,6 @@ final case class Pregel(
 
       val aggMessages =
         if (messageAggregator.nonEmpty) messageAggregator.get(messages)
-        else if (saltBuckets > 1)
-          messages
-            .withColumn(SALT, pmod(spark_partition_id().cast("long"), lit(saltBuckets.toLong)))
-            .groupBy(col(ID), col(SALT)).agg(aggExpr.as(MSG))
-            .groupBy(col(ID)).agg(aggExpr.as(MSG))
         else messages.groupBy(col(ID)).agg(aggExpr.as(MSG))
 
       // upsert: every vertex that received a message (even one whose

@@ -469,6 +469,8 @@ object Ann {
     * id of the cluster (CC labels components by min rep id, and each rep
     * is already the min id of its copy group, so the min rep IS the min
     * member), `keep` = 1 exactly for the one member equal to it.
+    * Throws IllegalStateException when the CC step needs more than
+    * `maxIterations` rounds, rather than return partial clusters.
     */
   def semanticDedupClusters(items: DataFrame, idCol: String, vecCol: String,
       labelCol: String, minDot: Long, maxIterations: Int = 20): DataFrame = {

@@ -21,7 +21,7 @@ class AlgorithmsSpec extends SparkSpec {
     assert(sizes.toSeq === Seq(3, 3))
   }
 
-  test("salted pregel: power-law hub graph — CC correct, salted == unsalted") {
+  test("pregel: power-law hub graph — CC finds the hub star and the chain") {
     import spark.implicits._
     // hub 0 carries ~half of all edges (the degree-skew shape that makes
     // one reducer the bottleneck at scale); plus a chain and an island
@@ -31,22 +31,9 @@ class AlgorithmsSpec extends SparkSpec {
     val verts = (0L to 70L).toDF(ID)
     val g = Graph(verts, edges.withColumn(EDGE_ID, xxhash64(col(SRC), col(DST))),
       directed = false)
-    val salted = ConnectedComponents(maxIterations = 30, saltBuckets = 8).run(g)
-    val unsalted = ConnectedComponents(maxIterations = 30, saltBuckets = 0).run(g)
-    assert(rowSet(salted) === rowSet(unsalted))
-    val sizes = salted.groupBy(COMPONENT).count()
+    val sizes = ConnectedComponents(maxIterations = 30).run(g).groupBy(COMPONENT).count()
       .select("count").collect().map(_.getLong(0)).sorted
     assert(sizes.toSeq === Seq(20, 51))
-    // and a decomposable SUM aggregate: salted two-level == single-level
-    def degreeSum(buckets: Int) = Pregel(
-      initialState = lit(1L),
-      aggExpr = sum(col(MSG)),
-      msgToDst = Some(col(STATE)),
-      msgToSrc = Some(col(STATE)),
-      maxIterations = 1,
-      saltBuckets = buckets)
-      .run(g)
-    assert(rowSet(degreeSum(8)) === rowSet(degreeSum(0)))
   }
 
   test("MODE_EQUIVALENCE: scalable two-step mode == Spark deterministic mode") {
@@ -86,6 +73,19 @@ class AlgorithmsSpec extends SparkSpec {
         .join(AlternatingConnectedComponents(maxIterations = 20).run(g), Seq(ID), "left")
         .select(col(ID), coalesce(col(COMPONENT), col(ID)).as(COMPONENT))
       assert(componentPartition(p) === componentPartition(a))
+    }
+  }
+
+  test("g04_cc_alternating throws when its star CC cap is too small for a chain") {
+    import spark.implicits._
+    // nation keys 1000..2999 with region keys 1..2000 put every edge
+    // (nationkey, regionkey + 1000) on one 2001-vertex path, which the
+    // star rounds need 12 rounds to label — past the query's cap of 10
+    val dir = java.nio.file.Files.createTempDirectory("graft-g04").toString
+    (0L until 2000L).map(i => (1000L + i, i + 1)).toDF("n_nationkey", "n_regionkey")
+      .write.parquet(s"$dir/nation.parquet")
+    intercept[IllegalStateException] {
+      graft.queries.GraphQueries.queries("g04_cc_alternating")(spark, dir).collect()
     }
   }
 

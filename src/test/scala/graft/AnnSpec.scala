@@ -462,6 +462,20 @@ class AnnSpec extends SparkSpec {
       (20L, 20L, 1)))
   }
 
+  test("semantic dedup throws when the CC cap is too small for a chain") {
+    import spark.implicits._
+    // unit vectors 20° apart in one cell: each is near its neighbours
+    // only (cos 20° ≈ 0.94 > 0.9 > cos 40° ≈ 0.77) — a 10-vertex path
+    val items = (0 until 10).map { i =>
+      val a = math.toRadians(20.0 * i)
+      (i.toLong, Seq(math.cos(a).toFloat, math.sin(a).toFloat), 0)
+    }.toDF("vec_id", "embedding", "label")
+    intercept[IllegalStateException] {
+      Ann.semanticDedupClusters(items, "vec_id", "embedding", "label",
+        minDot = 900000L, maxIterations = 2).collect()
+    }
+  }
+
   test("prefix re-rank: exact when shortlist covers the corpus") {
     val items = clustered()
     val queries = items.filter(col("vec_id") < 3)

@@ -157,6 +157,16 @@ class IterationSpec extends SparkSpec {
     }
   }
 
+  test("minReach and spanningPairs label their driver probe jobs") {
+    import spark.implicits._
+    val verts = spark.range(0, 4, 1, 2).toDF(ID)
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF(SRC, DST).repartition(2)
+    val reach = jobDescriptions(UnionFind.minReach(verts, edges, SRC, DST, forward = true, 10).get)
+    assert(reach.nonEmpty && reach.forall(_ == "min-reach driver probe"), reach)
+    val span = jobDescriptions(UnionFind.spanningPairs(edges, SRC, DST).get)
+    assert(span.nonEmpty && span.forall(_ == "spanning-pairs driver probe"), span)
+  }
+
   private def ranks(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 

@@ -1,4 +1,3 @@
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness (test scope only): times each lifecycle phase of the
@@ -12,16 +11,8 @@ import org.apache.spark.sql.functions._
 object LifecyclePhases {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SMOKE_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SMOKE_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SMOKE_CPUS", "32").toInt
+    val spark = graft.LocalSession(cpus)
     val s = spark
     val d = sfDir
     def timed[T](label: String)(body: => T): T = {

@@ -1,5 +1,3 @@
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness (test scope only — never ships in the library jar): dumps
   * named SparkEntry queries to /tmp/smoke_out for tools/cmp_one.py to
   * cross-check against their DuckDB oracle.
@@ -10,11 +8,7 @@ import org.apache.spark.sql.SparkSession
 object SmokeTest {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SMOKE_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(8, "ERROR")
     args.toSeq.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       df.coalesce(1).write.mode("overwrite").parquet(s"/tmp/smoke_out/$n.parquet")

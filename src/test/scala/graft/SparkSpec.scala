@@ -15,21 +15,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // legacy events layouts store TIMESTAMP(NANOS); read those as raw long ns, the
-      // same convention Verify/Bench run under
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Four cores, whatever the host has: the plan-shape and job-count
+    * specs assume this session. */
+  lazy val session: SparkSession = LocalSession(4, "ERROR")
 }
 
 /** Canonical sample graphs — port of reference tests/samples.py:6-35. */

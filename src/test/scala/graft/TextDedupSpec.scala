@@ -177,6 +177,17 @@ class TextDedupSpec extends SparkSpec {
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
   }
 
+  test("nearDupClusters throws when the CC cap is too small for a chain") {
+    // twelve documents, each the last shifted by two words: neighbours
+    // are near-dups (J = 8/12), documents two apart are not (J = 6/14),
+    // so the pair graph is a 12-vertex path — more than two star rounds
+    val d = docs((0 until 12).map(i =>
+      (i.toLong, (2 * i until 2 * i + 12).map(w => s"w$w").mkString(" "))): _*)
+    intercept[IllegalStateException] {
+      Dedup.nearDupClusters(d, "doc_id", "text", maxIterations = 2).collect()
+    }
+  }
+
   test("evalContainment: leaked eval item scores high where Jaccard would not") {
     val evalItem = "what is the capital of france the answer is paris"
     val filler = (1 to 60).map(i => s"w$i").mkString(" ")
