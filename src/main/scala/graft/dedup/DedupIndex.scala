@@ -536,24 +536,18 @@ object DedupIndex {
       idCol: String, textCol: String, numBuckets: Int = 32): Unit = mutate(spark, name) {
     val idx = readBucketed(spark, name)
     val m = mergeDetailed(idx, newDocs, idCol, textCol)
-    val nclT = s"${name}_nearclusters"
     val advanced =
       nclParams(spark, name).map { case (threshold, maxBucketSize) =>
         // pinned: the writeBucketed below overwrites the bucket/shingle
         // tables; the merge frames the advance probes are themselves
         // pinned, but the advance output must not replan against the
         // rewritten tables either
-        advanceClusters(m, spark.table(nclT),
+        advanceClusters(m, readNearClusters(spark, name),
           threshold = threshold, maxBucketSize = maxBucketSize)
           .localCheckpoint()
       }
     writeBucketed(m.index, name, numBuckets)
-    advanced.foreach { a =>
-      graft.sources.CatalogTables.stagedOverwrite(spark, nclT) { t =>
-        a.write.mode("overwrite")
-          .bucketBy(numBuckets, "id").sortBy("id").saveAsTable(t)
-      }
-    }
+    advanced.foreach(writeNclTable(spark, name, _, numBuckets))
   }
 
   /** [[deleteDetailed]]'s working parts: `touchedShas` the groups the
@@ -714,20 +708,14 @@ object DedupIndex {
     val idx = readBucketed(spark, name)
     val r = deleteDetailed(idx, ids, idCol)
     if (r.touchedShas.isEmpty) return
-    val nclT = s"${name}_nearclusters"
     val repaired =
       nclParams(spark, name).map { case (threshold, maxBucketSize) =>
-        repairClustersAfterDelete(r, spark.table(nclT),
+        repairClustersAfterDelete(r, readNearClusters(spark, name),
           threshold = threshold, maxBucketSize = maxBucketSize)
           .localCheckpoint()
       }
     writeBucketed(r.index, name, numBuckets)
-    repaired.foreach { a =>
-      graft.sources.CatalogTables.stagedOverwrite(spark, nclT) { t =>
-        a.write.mode("overwrite")
-          .bucketBy(numBuckets, "id").sortBy("id").saveAsTable(t)
-      }
-    }
+    repaired.foreach(writeNclTable(spark, name, _, numBuckets))
   }
 
   /** Streaming face of [[deleteBucketed]] — the delete side of a CDC
@@ -828,15 +816,21 @@ object DedupIndex {
       spark: SparkSession, name: String, ncl: DataFrame, threshold: Double,
       maxBucketSize: Int = 0, numBuckets: Int = 32): Unit = mutate(spark, name) {
     import spark.implicits._
-    graft.sources.CatalogTables.stagedOverwrite(spark, s"${name}_nearclusters") { t =>
-      ncl.write.mode("overwrite")
-        .bucketBy(numBuckets, "id").sortBy("id").saveAsTable(t)
-    }
+    writeNclTable(spark, name, ncl, numBuckets)
     graft.sources.CatalogTables.stagedOverwrite(spark, s"${name}_nclmeta") { t =>
       Seq((threshold, maxBucketSize)).toDF("threshold", "max_bucket_size")
         .coalesce(1).write.mode("overwrite").saveAsTable(t)
     }
   }
+
+  /** The one `<name>_nearclusters` writer: a staged overwrite,
+    * id-bucketed. */
+  private def writeNclTable(
+      spark: SparkSession, name: String, ncl: DataFrame, numBuckets: Int): Unit =
+    graft.sources.CatalogTables.stagedOverwrite(spark, s"${name}_nearclusters") { t =>
+      ncl.write.mode("overwrite")
+        .bucketBy(numBuckets, "id").sortBy("id").saveAsTable(t)
+    }
 
   /** The maintained representative-level cluster table — always ≡
     * `readBucketed(name).nearClusters(threshold)` rebuilt, across any

@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Catalog-table write hygiene shared by the bucketed-table writers
-  * ([[GraphIO.writeBucketed]], [[graft.dedup.DedupIndex.writeBucketed]]).
+  * (`GraphIO.writeTable`, the one writer of a graph family's tables, and
+  * [[graft.dedup.DedupIndex.writeBucketed]]).
   *
   * With the default in-memory catalog, table METADATA dies with the
   * session but the warehouse DIRECTORY does not — a fresh session that
@@ -16,18 +17,6 @@ import org.apache.spark.sql.SparkSession
   */
 object CatalogTables {
 
-  /** Make `table` writable: drop a registered table of that name and
-    * delete its data directory.
-    *
-    * When the table EXISTS, its actual location is resolved from the
-    * catalog (DESCRIBE EXTENDED) before anything is deleted — a table
-    * registered with a custom LOCATION or under a non-default database
-    * must not have an unrelated `warehouse/<name>` directory removed in
-    * its stead. The default warehouse path is deleted only when NO table
-    * of that name is registered (the genuinely-orphaned-directory case
-    * this helper exists for); if the name resolves to something without a
-    * location (a view), nothing is deleted.
-    */
   /** Crash-safe replacement of a catalog table: `write` the new
     * contents into `<table>__staged` FIRST — the live table stays
     * intact and readable throughout, so plans that derive the new
@@ -193,6 +182,18 @@ object CatalogTables {
     try body finally epochCtx.set(prev)
   }
 
+  /** Make `table` writable: drop a registered table of that name and
+    * delete its data directory.
+    *
+    * When the table EXISTS, its actual location is resolved from the
+    * catalog metadata before anything is deleted — a table
+    * registered with a custom LOCATION or under a non-default database
+    * must not have an unrelated `warehouse/<name>` directory removed in
+    * its stead. The default warehouse path is deleted only when NO table
+    * of that name is registered (the genuinely-orphaned-directory case
+    * this helper exists for); if the name resolves to something without a
+    * location (a view), nothing is deleted.
+    */
   def prepareOverwrite(spark: SparkSession, table: String): Unit = {
     val location: Option[String] =
       if (spark.catalog.tableExists(table))

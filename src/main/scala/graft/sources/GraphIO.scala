@@ -67,6 +67,48 @@ object GraphIO {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** The store's table layout: every `<name>_<table>` of a graph
+    * family is bucketed and sorted on its key here. */
+  private[graft] val layout = Map(
+    "vertices" -> "id", "edges" -> "src", "degrees" -> "id",
+    "components" -> "id", "forest" -> "src", "ranks" -> "id")
+
+  /** The one writer of a family's tables: `df` lands in `<name>_<table>`
+    * bucketed and sorted on the table's [[layout]] key. The bucket count
+    * is `buckets`, else the `<name>_edges` count — one count holds across
+    * the family, because [[writeBucketed]] drops every derived table when
+    * it rewrites the base, so every table is created after the base
+    * write. An overwrite is a [[CatalogTables.stagedOverwrite]] (the live
+    * table stays readable while its replacement is written, so `df` may
+    * derive from it); an append writes in place.
+    *
+    * The frame is first repartitioned into exactly that many partitions
+    * on the key — HashPartitioning, the same murmur hash `bucketBy`
+    * assigns bucket ids with — so each write task owns ONE whole bucket
+    * and the table lands as one file per bucket. Without it a bucketed
+    * write emits up to (input tasks × buckets) fragments: every lifecycle
+    * rewrite of a small store was producing hundreds of KB-sized files,
+    * and every subsequent probe paid their listing + open cost. */
+  private def writeTable(
+      spark: SparkSession, name: String, table: String, df: DataFrame,
+      append: Boolean = false, buckets: Option[Int] = None): Unit = {
+    val key = layout(table)
+    val n = buckets.getOrElse(familyBuckets(spark, name))
+    def save(target: String, mode: String): Unit =
+      df.repartition(n, org.apache.spark.sql.functions.col(key))
+        .write.mode(mode).bucketBy(n, key).sortBy(key).saveAsTable(target)
+    if (append) save(s"${name}_$table", "append")
+    else CatalogTables.stagedOverwrite(spark, s"${name}_$table")(save(_, "overwrite"))
+  }
+
+  /** The family's bucket count: the `<name>_edges` table's, read from the
+    * catalog metadata (no SQL command, no job). */
+  private def familyBuckets(spark: SparkSession, name: String): Int =
+    spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_edges"))
+      .bucketSpec.map(_.numBuckets)
+      .getOrElse(sys.error(s"${name}_edges is not a bucketed graph table"))
+
   /** Run independent table writes as CONCURRENT Spark job streams
     * (guide §2.6): actions are only sequential because the driver calls
     * them sequentially, and a mutation's derived-table writes are
@@ -77,19 +119,6 @@ object GraphIO {
     * epoch-guard context is propagated onto each worker thread so
     * staged swaps keep their per-swap stale-base check; failures
     * surface after all branches settle (no detached job stream). */
-  /** Align a frame to its destination's bucket layout before a bucketed
-    * write: repartition into exactly `buckets` partitions on the
-    * bucket key — HashPartitioning, the same
-    * murmur hash `bucketBy` assigns bucket ids with — so each write task
-    * owns ONE whole bucket and the table lands as one file per bucket.
-    * Without it a bucketed write emits up to (input tasks × buckets)
-    * fragments: every lifecycle rewrite of a small store was producing
-    * hundreds of KB-sized files, and every subsequent probe paid their
-    * listing + open cost. At scale the same alignment is what keeps
-    * bucket files contiguous instead of sharded per upstream task. */
-  private def toBuckets(df: DataFrame, buckets: Int, key: String): DataFrame =
-    df.repartition(buckets, org.apache.spark.sql.functions.col(key))
-
   private def inParallel(tasks: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -132,8 +161,12 @@ object GraphIO {
     * jobs; for one-shot reads prefer [[write]] (`partitionByKey`), which
     * keeps plain portable parquet files.
     *
-    * Catalog tables `<name>_edges` / `<name>_vertices` are (over)written.
-    * The directedness flag is stored as a constant `_directed` column in
+    * Catalog tables `<name>_edges` / `<name>_vertices` / `<name>_degrees`
+    * are (over)written; an earlier graph's derived `_components`,
+    * `_forest` and `_ranks` tables are dropped, since they describe a
+    * graph that is gone (rebuild them with [[buildComponents]],
+    * [[buildForest]], [[buildRanks]]). The directedness flag is stored
+    * as a constant `_directed` column in
     * the VERTICES table (not on the edges table, whose layout is owned by
     * the bucketing spec; not as a catalog table property, which would tie
     * the format to one metastore). The column is a single literal, so it
@@ -141,29 +174,30 @@ object GraphIO {
     */
   def writeBucketed(g: Graph, name: String, buckets: Int = 32): Unit = {
     import org.apache.spark.sql.functions._
-    mutate(g.vertices.sparkSession, name) {
-      Seq("vertices", "edges", "degrees").foreach(t =>
-        CatalogTables.prepareOverwrite(g.vertices.sparkSession, s"${name}_$t"))
-      // the vertex and edge writes are INDEPENDENT (each consumes its own
+    val spark = g.vertices.sparkSession
+    val n = Some(buckets)
+    mutate(spark, name) {
+      // a new base makes every derived table stale: drop components,
+      // forest, the refresh marker and ranks BEFORE the swaps, so no
+      // append maintains labels of the old graph and every table of the
+      // family is created after this write, at its bucket count
+      invalidateComponents(spark, name)
+      spark.sql(s"DROP TABLE IF EXISTS `${name}_ranks`")
+      // staged swaps, so `g` may read the very tables it replaces — a
+      // compaction is writeBucketed(readBucketed(spark, name), name, buckets).
+      // The vertex and edge writes are INDEPENDENT (each consumes its own
       // half of the caller's indexing chain) — run them as concurrent job
       // streams so each write's straggler tail and driver-side commit
-      // latency hide behind the sibling's jobs. The degree write stays AFTER the edge write: it reads the
-      // just-written table (see below).
+      // latency hide behind the sibling's jobs. The degree write stays
+      // AFTER the edge write: it reads the just-written table (see below).
       inParallel(
-        () =>
-          // vertices bucketed by id: the append lifecycle's
-          // endpoint-membership semi-joins (and any vertex-keyed probe)
-          // then plan no exchange on the stored side
-          g.vertices.withColumn("_directed", lit(g.directed))
-            .transform(toBuckets(_, buckets, "id"))
-            .write.mode("overwrite")
-            .bucketBy(buckets, "id").sortBy("id")
-            .saveAsTable(s"${name}_vertices"),
+        // vertices bucketed by id: the append lifecycle's
+        // endpoint-membership semi-joins (and any vertex-keyed probe)
+        // then plan no exchange on the stored side
+        () => writeTable(spark, name, "vertices",
+          g.vertices.withColumn("_directed", lit(g.directed)), buckets = n),
         () => {
-          g.edges.transform(toBuckets(_, buckets, "src"))
-            .write.mode("overwrite")
-            .bucketBy(buckets, "src").sortBy("src")
-            .saveAsTable(s"${name}_edges")
+          writeTable(spark, name, "edges", g.edges, buckets = n)
           // maintained degree cache — [[appendEdges]] folds batch deltas
           // into it instead of re-scanning the edge table. Derived from
           // the JUST-WRITTEN table, not from `g.edges` (OPTIMIZATION_r17):
@@ -173,11 +207,8 @@ object GraphIO {
           // holds exactly those rows, its scan is one bucketed read, and
           // the out-degree half aggregates with NO exchange on the
           // bucketed src.
-          degreesOf(g.vertices.sparkSession.table(s"${name}_edges"))
-            .transform(toBuckets(_, buckets, "id"))
-            .write.mode("overwrite")
-            .bucketBy(buckets, "id").sortBy("id")
-            .saveAsTable(s"${name}_degrees")
+          writeTable(spark, name, "degrees",
+            degreesOf(spark.table(s"${name}_edges")), buckets = n)
         })
     }
   }
@@ -250,13 +281,7 @@ object GraphIO {
     */
   def buildComponents(spark: SparkSession, name: String): Unit =
     mutate(spark, name) {
-      val comps = componentsOf(readBucketed(spark, name))
-      val cb = tableBuckets(spark, s"${name}_edges")
-      CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
-        toBuckets(comps, cb, "id").write.mode("overwrite")
-          .bucketBy(cb, "id").sortBy("id")
-          .saveAsTable(t)
-      }
+      writeTable(spark, name, "components", componentsOf(readBucketed(spark, name)))
     }
 
   /** The maintained component table — always equal to
@@ -328,15 +353,10 @@ object GraphIO {
       // refresh stops touching the corpus entirely. GraphAppendSpec pins
       // the equivalence against the full rebuild. No certificate → the
       // full [[buildComponents]] pass, unchanged.
-      if (hasForest(spark, name)) {
-        val comps = labelsFor(spark.table(s"${name}_vertices"), readForest(spark, name))
-        val cb = tableBuckets(spark, s"${name}_edges")
-        CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
-          toBuckets(comps, cb, "id").write.mode("overwrite")
-            .bucketBy(cb, "id").sortBy("id")
-            .saveAsTable(t)
-        }
-      } else buildComponents(spark, name)
+      if (hasForest(spark, name))
+        writeTable(spark, name, "components",
+          labelsFor(spark.table(s"${name}_vertices"), readForest(spark, name)))
+      else buildComponents(spark, name)
     }
 
   /** True while a [[refreshComponents]] pair is incomplete: set before
@@ -421,13 +441,7 @@ object GraphIO {
       .parentForest(roots, edges.select(col("src"), col("dst")),
         totalVertices = Some(comps.count()))
       .getOrElse(forestOf(edges))
-    val buckets = tableBuckets(spark, s"${name}_edges")
-    CatalogTables.stagedOverwrite(spark, s"${name}_forest") { t =>
-      forest.transform(toBuckets(_, buckets, "src"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "src").sortBy("src")
-        .saveAsTable(t)
-    }
+    writeTable(spark, name, "forest", forest)
   }
 
   /** Certificate health: ONE aggregated diagnostics row (the
@@ -532,18 +546,12 @@ object GraphIO {
       .select(stored.columns.map(col).toIndexedSeq: _*)
       // pinned: the append below writes into a table this plan reads
       .localCheckpoint()
-    val vb = tableBuckets(spark, s"${name}_vertices")
-    toBuckets(fresh, vb, "id").write.mode("append")
-      .bucketBy(vb, "id").sortBy("id")
-      .saveAsTable(s"${name}_vertices")
+    writeTable(spark, name, "vertices", fresh, append = true)
     // a genuinely-new vertex is its own weak component until an edge
     // arrives — O(batch) inserted rows, exactly what a rebuild would say
     if (hasComponents(spark, name))
-      toBuckets(fresh.select(col("id"), col("id").as("component")),
-          tableBuckets(spark, s"${name}_components"), "id")
-        .write.mode("append")
-        .bucketBy(tableBuckets(spark, s"${name}_components"), "id").sortBy("id")
-        .saveAsTable(s"${name}_components")
+      writeTable(spark, name, "components",
+        fresh.select(col("id"), col("id").as("component")), append = true)
   }
 
   /** Incrementally fold a batch of edges into a bucketed graph — the
@@ -618,24 +626,13 @@ object GraphIO {
           coalesce(col("d.out_degree"), lit(0L))).as("out_degree"),
         (coalesce(col("o.in_degree"), lit(0L)) +
           coalesce(col("d.in_degree"), lit(0L))).as("in_degree"))
-    val buckets = tableBuckets(spark, s"${name}_edges")
     // the batch-sized edge append and the degree fold are independent
     // (fresh is pinned; merged reads the live degree table only) —
     // concurrent job streams; the crash contract is the documented one
     // either way (a stale cache is rebuilt by refreshDegrees)
     inParallel(
-      () =>
-        fresh.transform(toBuckets(_, buckets, "src"))
-          .write.mode("append")
-          .bucketBy(buckets, "src").sortBy("src")
-          .saveAsTable(s"${name}_edges"),
-      () =>
-        CatalogTables.stagedOverwrite(spark, s"${name}_degrees") { t =>
-          merged.transform(toBuckets(_, buckets, "id"))
-            .write.mode("overwrite")
-            .bucketBy(buckets, "id").sortBy("id")
-            .saveAsTable(t)
-        })
+      () => writeTable(spark, name, "edges", fresh, append = true),
+      () => writeTable(spark, name, "degrees", merged))
 
     // component maintenance (opt-in, see [[buildComponents]]): appends
     // only MERGE components, so the whole update is (1) map the batch's
@@ -647,13 +644,17 @@ object GraphIO {
     // merges nothing (redelivery included) skips the rewrite entirely.
     if (hasComponents(spark, name)) {
       val comp = readComponents(spark, name)
-      val touched = fresh
+      // LAZY: the batch edges that cross two current labels, shared by
+      // the touched label pairs and the certificate upkeep below, each
+      // pinned on its own
+      val labelled = fresh
         .join(comp.select(col("id").as("src"), col("component").as("_ca")),
           Seq("src"))
         .join(comp.select(col("id").as("dst"), col("component").as("_cb")),
           Seq("dst"))
-        .select(col("_ca"), col("_cb"))
         .filter(col("_ca") =!= col("_cb"))
+      val touched = labelled
+        .select(col("_ca"), col("_cb"))
         .distinct()
         .localCheckpoint()
       if (!touched.isEmpty) {
@@ -666,12 +667,7 @@ object GraphIO {
         // the PRE-merge labels before the relabel overwrite below.
         val crossing =
           if (hasForest(spark, name))
-            Some(fresh
-              .join(comp.select(col("id").as("src"), col("component").as("_ca")),
-                Seq("src"))
-              .join(comp.select(col("id").as("dst"), col("component").as("_cb")),
-                Seq("dst"))
-              .filter(col("_ca") =!= col("_cb"))
+            Some(labelled
               .select(least(col("src"), col("dst")).as("src"),
                 greatest(col("src"), col("dst")).as("dst"))
               .distinct()
@@ -685,13 +681,9 @@ object GraphIO {
         // already-present canonical pairs (a fresh parallel edge over a
         // stored one) are anti-joined away
         crossing.foreach { c =>
-          val add = c.join(
+          writeTable(spark, name, "forest", c.join(
             readForest(spark, name).select(col("src"), col("dst")),
-            Seq("src", "dst"), "left_anti")
-          val fb0 = tableBuckets(spark, s"${name}_forest")
-          toBuckets(add, fb0, "src").write.mode("append")
-            .bucketBy(fb0, "src").sortBy("src")
-            .saveAsTable(s"${name}_forest")
+            Seq("src", "dst"), "left_anti"), append = true)
         }
         val labels = graft.algorithms.AlternatingConnectedComponents
           .minLabels(touched, "_ca", "_cb")
@@ -715,16 +707,10 @@ object GraphIO {
         // the fast path.
         if (mapping.count() <= 500000L) {
           // LAZY: the staged write reads the live component table
-          val relabeled = comp
+          writeTable(spark, name, "components", comp
             .join(broadcast(mapping), comp("component") === mapping("_old"), "left")
             .select(col("id"),
-              coalesce(col("_new"), col("component")).as("component"))
-          CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
-            relabeled.transform(toBuckets(_, buckets, "id"))
-              .write.mode("overwrite")
-              .bucketBy(buckets, "id").sortBy("id")
-              .saveAsTable(t)
-          }
+              coalesce(col("_new"), col("component")).as("component")))
         } else refreshComponents(spark, name)
       }
     }
@@ -764,19 +750,13 @@ object GraphIO {
       "upsertVertexAttrs batch contains conflicting rows for the same vertex id")
     // LAZY: the staged write reads the LIVE vertex table while writing
     // its replacement — no O(V) defensive copy, no loss window
-    val merged = stored.join(broadcastIfSmall(renamed), Seq("id"), "left")
-      .select(stored.columns.map { c =>
-        if (attrs.contains(c))
-          when(col("_hit"), col(s"_new_$c")).otherwise(col(c)).as(c)
-        else col(c)
-      }.toIndexedSeq: _*)
-    val buckets = tableBuckets(spark, s"${name}_vertices")
-    CatalogTables.stagedOverwrite(spark, s"${name}_vertices") { t =>
-      merged.transform(toBuckets(_, buckets, "id"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "id").sortBy("id")
-        .saveAsTable(t)
-    }
+    writeTable(spark, name, "vertices",
+      stored.join(broadcastIfSmall(renamed), Seq("id"), "left")
+        .select(stored.columns.map { c =>
+          if (attrs.contains(c))
+            when(col("_hit"), col(s"_new_$c")).otherwise(col(c)).as(c)
+          else col(c)
+        }.toIndexedSeq: _*))
   }
 
   /** Physically remove a batch of edges from a bucketed graph — the
@@ -962,37 +942,20 @@ object GraphIO {
     // The degree table's defining aggregate ranges over the kept edges
     // only; removed endpoints whose counts reach zero drop their row.
     applyEdgeRemoval(spark, name, removed, kept)
-    val buckets = tableBuckets(spark, s"${name}_vertices")
-    CatalogTables.stagedOverwrite(spark, s"${name}_vertices") { t =>
-      keptV.transform(toBuckets(_, buckets, "id"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "id").sortBy("id")
-        .saveAsTable(t)
-    }
+    writeTable(spark, name, "vertices", keptV)
     if (repairComponents) {
       if (fastErase) {
         // the erased rows just LEAVE both narrow tables: labels and
         // connectivity of every survivor are provably unchanged (see
         // the guard above), so no CC runs at all
-        val cb = tableBuckets(spark, s"${name}_components")
-        CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
-          toBuckets(readComponents(spark, name).join(ids, Seq("id"), "left_anti"),
-              cb, "id")
-            .write.mode("overwrite").bucketBy(cb, "id").sortBy("id")
-            .saveAsTable(t)
-        }
-        val fb = tableBuckets(spark, s"${name}_forest")
-        CatalogTables.stagedOverwrite(spark, s"${name}_forest") { t =>
-          readForest(spark, name)
-            .join(ids.select(col("id").as("src")), Seq("src"), "left_anti")
-            .join(ids.select(col("id").as("dst")), Seq("dst"), "left_anti")
-            // USING joins FRONT their keys — restore the stored column
-            // order or the rewrite flips the table to (dst, src)
-            .select(col("src"), col("dst"))
-            .transform(toBuckets(_, fb, "src"))
-            .write.mode("overwrite").bucketBy(fb, "src").sortBy("src")
-            .saveAsTable(t)
-        }
+        writeTable(spark, name, "components",
+          readComponents(spark, name).join(ids, Seq("id"), "left_anti"))
+        writeTable(spark, name, "forest", readForest(spark, name)
+          .join(ids.select(col("id").as("src")), Seq("src"), "left_anti")
+          .join(ids.select(col("id").as("dst")), Seq("dst"), "left_anti")
+          // USING joins FRONT their keys — restore the stored column
+          // order or the rewrite flips the table to (dst, src)
+          .select(col("src"), col("dst")))
       } else
         affected.foreach(repairComponentTable(spark, name, _,
           removedIds = Some(ids), removedPairs = None))
@@ -1001,16 +964,9 @@ object GraphIO {
     // an erased vertex is retained data about it (other vertices' rank
     // VALUES go stale until refreshRanks — documented — but the
     // subject's row must physically go)
-    if (spark.catalog.tableExists(s"${name}_ranks")) {
-      val keptR = spark.table(s"${name}_ranks").join(ids, Seq("id"), "left_anti")
-      val rb = tableBuckets(spark, s"${name}_ranks")
-      CatalogTables.stagedOverwrite(spark, s"${name}_ranks") { t =>
-        keptR.transform(toBuckets(_, rb, "id"))
-          .write.mode("overwrite")
-          .bucketBy(rb, "id").sortBy("id")
-          .saveAsTable(t)
-      }
-    }
+    if (spark.catalog.tableExists(s"${name}_ranks"))
+      writeTable(spark, name, "ranks",
+        spark.table(s"${name}_ranks").join(ids, Seq("id"), "left_anti"))
   }
 
   /** Shared tail of the two delete faces: overwrite the edge table with
@@ -1028,7 +984,9 @@ object GraphIO {
     // pay the O(E) rewrite — measured 21 s of pure no-op at the 100x
     // corpus without this guard
     if (removed.isEmpty) return
-    val buckets = tableBuckets(spark, s"${name}_edges")
+    // resolved before the concurrent pair: the degree write must not
+    // read the edge table's bucket count while the edge swap replaces it
+    val buckets = Some(familyBuckets(spark, name))
     // LAZY: reads the live degree table inside its own staged write
     val merged = readDegrees(spark, name).as("o")
       .join(degreesOf(removed).as("d"), Seq("id"), "left")
@@ -1050,20 +1008,8 @@ object GraphIO {
     // session-wide, so the worker thread sees it)
     withSubsetKeyCoPartition(spark) {
       inParallel(
-        () =>
-          CatalogTables.stagedOverwrite(spark, s"${name}_edges") { t =>
-            kept.transform(toBuckets(_, buckets, "src"))
-              .write.mode("overwrite")
-              .bucketBy(buckets, "src").sortBy("src")
-              .saveAsTable(t)
-          },
-        () =>
-          CatalogTables.stagedOverwrite(spark, s"${name}_degrees") { t =>
-            merged.transform(toBuckets(_, buckets, "id"))
-              .write.mode("overwrite")
-              .bucketBy(buckets, "id").sortBy("id")
-              .saveAsTable(t)
-          })
+        () => writeTable(spark, name, "edges", kept, buckets = buckets),
+        () => writeTable(spark, name, "degrees", merged, buckets = buckets))
     }
   }
 
@@ -1141,15 +1087,9 @@ object GraphIO {
         labelsFor(survivors, subEdges)
       }
     // LAZY: the staged write reads the live component table
-    val next = comp.join(lbl, comp("component") === lbl("_lbl"), "left_anti")
-      .unionByName(repaired)
-    val buckets = tableBuckets(spark, s"${name}_components")
-    CatalogTables.stagedOverwrite(spark, s"${name}_components") { t =>
-      next.transform(toBuckets(_, buckets, "id"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "id").sortBy("id")
-        .saveAsTable(t)
-    }
+    writeTable(spark, name, "components",
+      comp.join(lbl, comp("component") === lbl("_lbl"), "left_anti")
+        .unionByName(repaired))
   }
 
   /** REPLACEMENT-EDGE repair (VERDICT r13 item 1) — the classic
@@ -1259,13 +1199,7 @@ object GraphIO {
         .select(col("src").as("_pa"), col("dst").as("_pb")))
     val splice = spanPieces.join(rep, Seq("_pa", "_pb"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-    val fb = tableBuckets(spark, s"${name}_forest")
-    CatalogTables.stagedOverwrite(spark, s"${name}_forest") { t =>
-      keptForest.unionByName(splice).transform(toBuckets(_, fb, "src"))
-        .write.mode("overwrite")
-        .bucketBy(fb, "src").sortBy("src")
-        .saveAsTable(t)
-    }
+    writeTable(spark, name, "forest", keptForest.unionByName(splice))
     val grp = broadcastIfSmall(pieceMerge
       .select(col("id").as("_piece"), col("component").as("_grp"))
       .localCheckpoint())
@@ -1288,13 +1222,7 @@ object GraphIO {
     * — only the full-outer merge shuffles, and only vertex-sized
     * frames). */
   def refreshDegrees(spark: SparkSession, name: String): Unit = mutate(spark, name) {
-    val d = degreesOf(spark.table(s"${name}_edges"))
-    val db = tableBuckets(spark, s"${name}_edges")
-    CatalogTables.stagedOverwrite(spark, s"${name}_degrees") { t =>
-      toBuckets(d, db, "id").write.mode("overwrite")
-        .bucketBy(db, "id").sortBy("id")
-        .saveAsTable(t)
-    }
+    writeTable(spark, name, "degrees", degreesOf(spark.table(s"${name}_edges")))
   }
 
   /** Build the opt-in maintained PAGERANK table `<name>_ranks` — the
@@ -1351,16 +1279,10 @@ object GraphIO {
       // exchange each round instead of re-shuffling a checkpointed copy
       staticCheckpoint = Some(graft.core.CheckpointPolicy.Passthrough))
 
-  private def writeRanks(spark: SparkSession, name: String, ranks: DataFrame): Unit = {
-    // PageRank's result is already pinned by its per-round checkpoint
-    // policy; the staged write never reads the live rank table anyway
-    val rb = tableBuckets(spark, s"${name}_edges")
-    CatalogTables.stagedOverwrite(spark, s"${name}_ranks") { t =>
-      toBuckets(ranks, rb, "id").write.mode("overwrite")
-        .bucketBy(rb, "id").sortBy("id")
-        .saveAsTable(t)
-    }
-  }
+  // PageRank's result is already pinned by its per-round checkpoint
+  // policy; the staged write never reads the live rank table anyway
+  private def writeRanks(spark: SparkSession, name: String, ranks: DataFrame): Unit =
+    writeTable(spark, name, "ranks", ranks)
 
   /** Streaming face of [[appendEdges]] — continuous edge ingest into the
     * bucketed graph: each micro-batch folds through the same append path,
@@ -1443,23 +1365,9 @@ object GraphIO {
     }
   }
 
-  /** All catalog tables a persisted graph family can own. */
+  /** Refresh every catalog table a persisted graph family can own. */
   private def refreshFamily(spark: SparkSession, name: String): Unit =
-    CatalogTables.refreshTables(spark,
-      Seq("vertices", "edges", "degrees", "components", "forest", "ranks")
-        .map(t => s"${name}_$t"))
-
-  /** Bucket count of an existing catalog table (so appends never have to
-    * re-state — or mis-state — the write-time spec). */
-  private def tableBuckets(spark: SparkSession, table: String): Int =
-    // read the catalog metadata directly: a DESCRIBE runs a full SQL
-    // command + collect, tens of ms for each of the ~15 lookups a
-    // single lifecycle mutation makes
-    scala.util.Try(
-      spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .bucketSpec.map(_.numBuckets))
-      .toOption.flatten.getOrElse(32)
+    CatalogTables.refreshTables(spark, layout.keys.map(t => s"${name}_$t").toSeq)
 
   /** Ingest a delimited edge-list text file (the SNAP/webgraph exchange
     * format): one `src<delim>dst` pair per line, `#` comment lines

@@ -1005,4 +1005,82 @@ class GraphAppendSpec extends SparkSpec {
         rowSet(GraphIO.componentsOf(rebuilt)))
     } finally drop(name)
   }
+
+  test("writeBucketed(readBucketed(name), name) compacts a fragmented store in place") {
+    val v0 = Seq("a", "b", "c", "d", "e")
+    val e0 = Seq(("a", "b"), ("b", "c"))
+    val more = Seq(("c", "d"), ("d", "e"))
+    val name = "ap_compact"
+    GraphIO.writeBucketed(
+      Graph.index(rawVerts(v0), rawEdges(e0), directed = false), name, buckets = 4)
+    try {
+      // each append adds its own files to the bucketed tables
+      more.foreach(e => GraphIO.appendEdges(spark, name, rawEdges(Seq(e))))
+      // the rewrite reads the very tables it replaces
+      GraphIO.writeBucketed(GraphIO.readBucketed(spark, name), name, buckets = 4)
+      val rebuilt = Graph.index(rawVerts(v0), rawEdges(e0 ++ more), directed = false)
+      val got = GraphIO.readBucketed(spark, name)
+      assert(got.directed === rebuilt.directed)
+      assert(rowSet(got.vertices) === rowSet(rebuilt.vertices))
+      assert(rowSet(got.edges) === rowSet(rebuilt.edges))
+      assert(rowSet(GraphIO.readDegrees(spark, name)) ===
+        rowSet(GraphIO.degreesOf(rebuilt.edges)))
+    } finally drop(name)
+  }
+
+  test("writeBucketed drops the old graph's derived tables; rebuilt labels stay exact under appends") {
+    val name = "ap_rewrite"
+    GraphIO.writeBucketed(Graph.index(rawVerts(Seq("a", "b", "c", "d")),
+      rawEdges(Seq(("a", "b"), ("b", "c"), ("c", "d"))), directed = true), name, buckets = 4)
+    try {
+      GraphIO.buildComponents(spark, name)
+      GraphIO.buildForest(spark, name)
+      GraphIO.buildRanks(spark, name, maxIterations = 3)
+      // a different graph, at a different bucket count, under the same name
+      val v1 = Seq("a", "b", "c", "d", "e", "f")
+      val e1 = Seq(("a", "b"), ("e", "f"))
+      GraphIO.writeBucketed(
+        Graph.index(rawVerts(v1), rawEdges(e1), directed = true), name, buckets = 2)
+      Seq("components", "forest", "ranks").foreach { t =>
+        assert(!spark.catalog.tableExists(s"${name}_$t"),
+          s"${name}_$t describes the old graph and must not survive the rewrite")
+      }
+      GraphIO.buildComponents(spark, name)
+      val add = Seq(("b", "c"), ("d", "e"))
+      GraphIO.appendEdges(spark, name, rawEdges(add))
+      assert(rowSet(GraphIO.readComponents(spark, name)) ===
+        rowSet(GraphIO.componentsOf(
+          Graph.index(rawVerts(v1), rawEdges(e1 ++ add), directed = true))))
+    } finally drop(name)
+  }
+
+  test("every table of a family keeps the layout's bucket spec through the whole lifecycle") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    val name = "ap_layout"
+    def verts(vs: Seq[(String, Long)]) = vs.toDF("id", "score")
+    GraphIO.writeBucketed(Graph.index(
+      verts(Seq(("a", 1L), ("b", 2L), ("c", 3L), ("d", 4L), ("e", 5L))),
+      rawEdges(Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"))),
+      directed = true), name, buckets = 3)
+    try {
+      GraphIO.buildComponents(spark, name)
+      GraphIO.buildForest(spark, name)
+      GraphIO.buildRanks(spark, name, maxIterations = 3)
+      GraphIO.appendVertices(spark, name, verts(Seq(("f", 6L), ("g", 7L))))
+      GraphIO.appendEdges(spark, name, rawEdges(Seq(("e", "f"), ("c", "d"))))
+      GraphIO.upsertVertexAttrs(spark, name, verts(Seq(("a", 10L))))
+      GraphIO.deleteEdges(spark, name, rawEdges(Seq(("a", "b"))))
+      GraphIO.deleteVertices(spark, name, verts(Seq(("g", 7L))).select(col("id")))
+      val family = spark.catalog.listTables().collect().map(_.name)
+        .filter(t => t.startsWith(s"${name}_") && !t.endsWith("__epoch")).toSet
+      assert(family === GraphIO.layout.keySet.map(t => s"${name}_$t"))
+      GraphIO.layout.foreach { case (t, key) =>
+        val spec = spark.sessionState.catalog
+          .getTableMetadata(TableIdentifier(s"${name}_$t")).bucketSpec
+        assert(spec === Some(BucketSpec(3, Seq(key), Seq(key))), s"${name}_$t")
+      }
+    } finally drop(name)
+  }
 }
