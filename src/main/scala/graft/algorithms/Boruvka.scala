@@ -70,7 +70,7 @@ case class Boruvka(
           .join(comp.select(col(ID).as(SRC), col(COMPONENT).as("_ca")), SRC)
           .join(comp.select(col(ID).as(DST), col(COMPONENT).as("_cb")), DST)
           .filter(col("_ca") =!= col("_cb")),
-        s"boruvka round $round", count(lit(1)))
+        s"boruvka round $round")(count(lit(1)))
       if (liveCount.getLong(0) == 0) done = true
       else {
         val cand = struct(

@@ -101,7 +101,7 @@ final case class AlternatingConnectedComponents(
       i += 1
       // the fingerprint is observed on the pinning pass itself
       val (pinned, fp) = checkpoint.pinObserved(smallStar(largeStar(edges)).distinct(),
-        s"star cc round $i", count(lit(1)), bit_xor(xxhash64(col(SRC), col(DST))))
+        s"star cc round $i")(count(lit(1)), bit_xor(xxhash64(col(SRC), col(DST))))
       edges = pinned
       val cur = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
       converged = cur == prev

@@ -47,7 +47,7 @@ final case class EigenvectorCentrality(
       val (raw, sq) = checkpoint.pinObserved(x.join(edges, x(ID) === edges(SRC))
         .groupBy(col(DST).as(ID))
         .agg(sum(col("score")).as("_s")),
-        s"eigenvector round ${i + 1}", CheckpointPolicy.exactSum(col("_s") * col("_s")))
+        s"eigenvector round ${i + 1}")(CheckpointPolicy.exactSum(col("_s") * col("_s")))
       val nrm = math.sqrt(sq.getDouble(0))
       require(nrm > 0.0,
         "eigenvector centrality needs at least one edge reachable from a nonzero score")

@@ -46,7 +46,7 @@ final case class Hits(
       val (aRaw, aSq) = checkpoint.pinObserved(hub.join(edges, hub(ID) === edges(SRC))
         .groupBy(col(DST).as(ID))
         .agg(sum(col("hub")).as("_a")),
-        s"hits round ${i + 1} authority", CheckpointPolicy.exactSum(col("_a") * col("_a")))
+        s"hits round ${i + 1} authority")(CheckpointPolicy.exactSum(col("_a") * col("_a")))
       val aNorm = math.sqrt(aSq.getDouble(0))
       require(aNorm > 0.0, "HITS needs at least one edge")
       auth = verts.join(aRaw, Seq(ID), "left")
@@ -57,7 +57,7 @@ final case class Hits(
       val (hRaw, hSq) = checkpoint.pinObserved(auth.join(edges, auth(ID) === edges(DST))
         .groupBy(col(SRC).as(ID))
         .agg(sum(col("authority")).as("_h")),
-        s"hits round ${i + 1} hub", CheckpointPolicy.exactSum(col("_h") * col("_h")))
+        s"hits round ${i + 1} hub")(CheckpointPolicy.exactSum(col("_h") * col("_h")))
       val hNorm = math.sqrt(hSq.getDouble(0))
       require(hNorm > 0.0, "HITS needs at least one edge")
       hub = verts.join(hRaw, Seq(ID), "left")

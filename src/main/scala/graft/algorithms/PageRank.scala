@@ -1,6 +1,7 @@
 package graft.algorithms
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{CheckpointPolicy, Columns, Graph}
@@ -20,10 +21,12 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   * checkpointed once; each round shuffles messages by recipient only.
   * Rank mass is conserved (sums to 1) up to float rounding every round.
   * A round is one pinned pass ([[CheckpointPolicy.pinObserved]]) that
-  * also yields its dangling mass and tolerance delta; it is still
-  * several Spark jobs under AQE, one per shuffle or broadcast stage: a
-  * 10-round run on a 105k-edge, 5k-vertex graph measured 57 jobs, 5 to 6
-  * per round.
+  * also yields its dangling mass and tolerance delta. The routes are
+  * pinned keyed on `src` and the rank frame on `id`, so the contribution
+  * join and the update join need no exchange and the message `groupBy`
+  * is a round's one shuffle: two Spark jobs under AQE. A 10-round run on
+  * a 105k-edge, 5k-vertex graph ran 24 jobs, the caller's collect
+  * included.
   */
 /** @param staticCheckpoint policy for the LOOP-INVARIANT frames (the
   *        routing table; the seed vector in the personalized variant),
@@ -31,9 +34,9 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   *        [[CheckpointPolicy.Passthrough]] when the edges come from a
   *        bucketed table ([[graft.sources.GraphIO.writeBucketed]]): the
   *        per-round join then re-reads the bucketed layout with zero
-  *        exchange instead of re-shuffling a checkpointed copy whose
-  *        partitioning AQE no longer sees. The evolving rank frame keeps
-  *        the main policy — it must be pinned or lineage compounds. */
+  *        exchange instead of copying the table once into a keyed pin.
+  *        The evolving rank frame keeps the main policy — it must be
+  *        pinned or lineage compounds. */
 /** @param weightCol edge-weight column for weighted PageRank: a vertex
   *        distributes rank proportionally to edge weight (share =
   *        w / Σw over its out-edges) instead of uniformly — the standard
@@ -69,8 +72,8 @@ final case class PageRank(
     * iteration. Over a BUCKETED edge table
     * ([[graft.sources.GraphIO.writeBucketed]], directed graphs — an
     * undirected graph unions reversed edges and loses the layout) this
-    * plans ZERO exchanges: the out-degree aggregation and the src-keyed
-    * join both reuse the write-time bucketing, so the only shuffle left
+    * plans ZERO exchanges: the out-degree window reuses the write-time
+    * bucketing, so the only shuffle left
     * per [[run]] round is the inherent message groupBy(dst)
     * (GraphIOSpec asserts both properties). That is the
     * write-once-shuffle-then-iterate story: on a 100 TB edge set the
@@ -84,9 +87,10 @@ final case class PageRank(
       // (and, over a bucketed table, its exchange-free plan) untouched.
       val edges = if (g.directed) g.edges.select(col(SRC), col(DST))
         else g.symmetricEdges.select(col(SRC), col(DST)).distinct()
-      val outDeg = edges.groupBy(col(SRC)).agg(count(lit(1)).as("_od"))
-      edges.join(outDeg, Seq(SRC))
-        .select(col(SRC), col(DST), (lit(1.0) / col("_od")).as("_share"))
+      // the out-degree as a window over src: one exchange, whose output
+      // is already the src-keyed layout the routes are pinned in
+      edges.select(col(SRC), col(DST),
+        (lit(1.0) / count(lit(1)).over(Window.partitionBy(col(SRC)))).as("_share"))
     case Some(c) =>
       val guarded = when(col(c).isNull || col(c) < 0,
         raise_error(concat(lit(s"PageRank: weight column '$c' must be " +
@@ -111,11 +115,11 @@ final case class PageRank(
   }
 
   def run(g: Graph): DataFrame = {
-    val routes = static.pin(this.routes(g))
+    val routes = static.pin(this.routes(g), Some(SRC))
     // one pass pins the dangling flags and counts the vertices and the
     // dangling ones: the uniform start's dangling mass is nd / n
     val (flags, counts) = static.pinObserved(
-      danglingFlags(g, routes), "pagerank dangling flags",
+      danglingFlags(g, routes), "pagerank dangling flags", Some(ID))(
       count(lit(1)), count(when(col(DANGLING), lit(1))))
     val n = counts.getLong(0).toDouble
     iterate(routes, n, flags.withColumn(RANK, lit(1.0 / n)), counts.getLong(1) / n,
@@ -134,13 +138,13 @@ final case class PageRank(
     * GraphAppendSpec pins warm ≡ cold). Rows in `initial` for vertices
     * no longer in the graph are ignored. */
   def runFrom(g: Graph, initial: DataFrame): DataFrame = {
-    val routes = static.pin(this.routes(g))
+    val routes = static.pin(this.routes(g), Some(SRC))
     val (flags, counts) = static.pinObserved(
-      danglingFlags(g, routes), "pagerank dangling flags", count(lit(1)))
+      danglingFlags(g, routes), "pagerank dangling flags", Some(ID))(count(lit(1)))
     val n = counts.getLong(0).toDouble
     val seeded = checkpoint.pin(flags
       .join(initial.select(col(ID), col(RANK).cast("double").as("_r0")), Seq(ID), "left")
-      .select(col(ID), col(DANGLING), coalesce(col("_r0"), lit(1.0 / n)).as(RANK)))
+      .select(col(ID), col(DANGLING), coalesce(col("_r0"), lit(1.0 / n)).as(RANK)), Some(ID))
     val mass = seeded.agg(sum(col(RANK)), coalesce(sum(when(col(DANGLING), col(RANK))), lit(0.0)))
       .head()
     val tot = mass.getDouble(0)
@@ -179,10 +183,12 @@ final case class PageRank(
     var i = 0
     var done = false
     while (i < maxIterations && !done) {
-      val contrib = rank
-        .join(routes, rank(ID) === routes(SRC))
+      // shuffled hash joins that build the vertex-sized sides
+      val contrib = rank.hint("shuffle_hash")
+        .join(routes, col(ID) === col(SRC))
         .groupBy(col(DST).as(ID))
         .agg(sum(col(RANK) * col("_share")).as("_in"))
+        .hint("shuffle_hash")
       val next = rank.select(carried :+ col(RANK).as(PREV): _*)
         .join(contrib, Seq(ID), "left")
         .select(carried ++ Seq(
@@ -192,7 +198,7 @@ final case class PageRank(
       // the dangling mass sums ranks in units of the uniform share 1/n,
       // so the exact sum's fixed 1e-18 resolution is relative to a
       // typical rank at any graph size
-      val (pinned, observed) = checkpoint.pinObserved(next, s"pagerank round $i",
+      val (pinned, observed) = checkpoint.pinObserved(next, s"pagerank round $i", Some(ID))(
         CheckpointPolicy.exactSum(when(col(DANGLING), col(RANK) * lit(n))),
         coalesce(max(abs(col(RANK) - col(PREV))), lit(0.0)))
       dMass = observed.getDouble(0) / n
@@ -216,7 +222,7 @@ final case class PageRank(
     * joined once and checkpointed; rounds add no extra shuffle over the
     * uniform variant. Rank mass is conserved (sums to 1). */
   def runPersonalized(g: Graph, reset: DataFrame): DataFrame = {
-    val routes = static.pin(this.routes(g))
+    val routes = static.pin(this.routes(g), Some(SRC))
 
     val totRow = reset.agg(sum(col("weight").cast("double"))).head()
     require(!totRow.isNullAt(0) && totRow.getDouble(0) > 0.0,
@@ -229,7 +235,7 @@ final case class PageRank(
         .join(reset.select(col(ID),
           (col("weight").cast("double") / tot).as("_w")), Seq(ID), "left")
         .select(col(ID), col(DANGLING), coalesce(col("_w"), lit(0.0)).as("_w")),
-      "pagerank seed vector",
+      "pagerank seed vector", Some(ID))(
       count(lit(1)), CheckpointPolicy.exactSum(when(col(DANGLING), col("_w"))))
     // scalar multiplier on the seed vector: teleport + returned dangling
     // mass, one driver double so every engine replays it

@@ -74,7 +74,7 @@ final case class ShortestPaths(
       val (pinned, fp) = checkpoint.pinObserved(dist.unionByName(relaxed)
         .groupBy(col(ID), col(LANDMARK))
         .agg(min(col(DIST)).as(DIST)),
-        s"shortest paths round ${i + 1}", count(lit(1)), sum(col(DIST)))
+        s"shortest paths round ${i + 1}")(count(lit(1)), sum(col(DIST)))
       dist = pinned
       val cur = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
       converged = cur == prev // monotone: same (count, sum) => no change

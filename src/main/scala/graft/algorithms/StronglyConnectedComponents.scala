@@ -38,14 +38,17 @@ final case class StronglyConnectedComponents(
     checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
   import Columns._
 
-  private def minReach(vertices: DataFrame, edges: DataFrame, forward: Boolean): DataFrame = {
+  private def minReach(
+      vertices: DataFrame, edges: DataFrame, edgeCount: Long, forward: Boolean): DataFrame = {
     // batch-bounded driver fast path (the UnionFind cap-and-decline
     // device): on a small residual graph the distributed propagation is
     // pure per-superstep job overhead (g22 measured 526 jobs for a
     // 30-vertex graph). The driver runs the same synchronous rounds, so
     // labels, superstep count and the cap below agree on both paths;
-    // over the cap the Pregel path runs.
-    val res = UnionFind.minReach(vertices, edges, SRC, DST, forward, propagationIterations)
+    // over the cap the Pregel path runs, without the probe job that
+    // would only find out what the pinned edge count already says.
+    val res = (if (edgeCount > UnionFind.DriverCap) None
+      else UnionFind.minReach(vertices, edges, SRC, DST, forward, propagationIterations))
       .getOrElse(Pregel(
         initialState = col(ID),
         aggExpr = min(col(MSG)),
@@ -66,11 +69,14 @@ final case class StronglyConnectedComponents(
 
   def run(g: Graph): DataFrame = {
     require(g.directed, "SCC is defined for directed graphs; use ConnectedComponents for undirected")
-    val (v0, n) = checkpoint.pinObserved(g.vertices.select(col(ID)), "scc vertices", count(lit(1)))
+    val (v0, n) = checkpoint.pinObserved(g.vertices.select(col(ID)), "scc vertices", Some(ID))(
+      count(lit(1)))
     var vertices = v0
     var remaining = n.getLong(0)
     // edge_id column is irrelevant here; keep endpoints only
-    var edges = checkpoint.pin(g.edges.select(col(SRC), col(DST)))
+    val (e0, m) = checkpoint.pinObserved(g.edges.select(col(SRC), col(DST)), "scc edges")(count(lit(1)))
+    var edges = e0
+    var edgeCount = m.getLong(0)
     var result: Option[DataFrame] = None
     var i = 0
     while (i < maxIterations && remaining > 0) {
@@ -84,23 +90,26 @@ final case class StronglyConnectedComponents(
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fwdF = Future(minReach(vertices, edges, forward = true))
-      val bwdF = Future(minReach(vertices, edges, forward = false))
+      val fwdF = Future(minReach(vertices, edges, edgeCount, forward = true))
+      val bwdF = Future(minReach(vertices, edges, edgeCount, forward = false))
       val fwd = Await.result(fwdF, Duration.Inf).withColumnRenamed(STATE, "_fwd")
       val bwd = Await.result(bwdF, Duration.Inf).withColumnRenamed(STATE, "_bwd")
       i += 1
       // one pin holds both the resolved and the residual vertices; it
       // observes how many remain unresolved
       val (labelled, residual) = checkpoint.pinObserved(fwd.join(bwd, Seq(ID)),
-        s"scc round $i", count(when(col("_fwd") =!= col("_bwd"), lit(1))))
+        s"scc round $i", Some(ID))(count(when(col("_fwd") =!= col("_bwd"), lit(1))))
       remaining = residual.getLong(0)
       val resolved = labelled.filter(col("_fwd") === col("_bwd"))
         .select(col(ID), col("_fwd").as(COMPONENT))
       result = Some(result.fold(resolved)(_.unionByName(resolved)))
       vertices = labelled.filter(col("_fwd") =!= col("_bwd")).select(col(ID))
-      edges = checkpoint.pin(edges
+      val (residualEdges, mi) = checkpoint.pinObserved(edges
         .join(vertices.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
-        .join(vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"))
+        .join(vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"),
+        s"scc residual edges $i")(count(lit(1)))
+      edges = residualEdges
+      edgeCount = mi.getLong(0)
     }
     // outer cap reached with unresolved vertices: label each as its own
     // singleton (conservative refinement, like the reference's iteration caps)

@@ -546,7 +546,7 @@ object DedupIndex {
           threshold = threshold, maxBucketSize = maxBucketSize)
           .localCheckpoint()
       }
-    writeBucketed(m.index, name, numBuckets)
+    writeIndexTables(m.index, name, numBuckets)
     advanced.foreach(writeNclTable(spark, name, _, numBuckets))
   }
 
@@ -714,7 +714,7 @@ object DedupIndex {
           threshold = threshold, maxBucketSize = maxBucketSize)
           .localCheckpoint()
       }
-    writeBucketed(r.index, name, numBuckets)
+    writeIndexTables(r.index, name, numBuckets)
     repaired.foreach(writeNclTable(spark, name, _, numBuckets))
   }
 
@@ -848,32 +848,44 @@ object DedupIndex {
 
   /** Persist as catalog tables `<name>_{clusters,shingles,buckets,meta}`
     * with the join-key bucketing that makes every later probe
-    * exchange-free on the stored side. Overwrites.
+    * exchange-free on the stored side. Overwrites. A maintained cluster
+    * table of an earlier index under this name (`<name>_nearclusters`,
+    * `<name>_nclmeta`) is dropped: it describes an index that is gone
+    * (rebuild it with [[buildNearClusters]]).
     */
   def writeBucketed(idx: Index, name: String, numBuckets: Int = 32): Unit = {
     val spark = idx.clusters.sparkSession
-    import graft.sources.CatalogTables.stagedOverwrite
     mutate(spark, name) {
-      // staged overwrites (the GraphIO r12 device): each live table stays
-      // intact and readable until its replacement commits — a merge/delete
-      // rewrite can no longer lose the only copy mid-write, and lazy
-      // frames deriving the new contents FROM the stored tables stay valid
-      stagedOverwrite(spark, s"${name}_clusters") { t =>
-        idx.clusters.write.mode("overwrite").saveAsTable(t)
-      }
-      stagedOverwrite(spark, s"${name}_shingles") { t =>
-        idx.shingles.write.mode("overwrite")
-          .bucketBy(numBuckets, "id").sortBy("id")
-          .saveAsTable(t)
-      }
-      stagedOverwrite(spark, s"${name}_buckets") { t =>
-        idx.buckets.write.mode("overwrite")
-          .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
-          .saveAsTable(t)
-      }
-      stagedOverwrite(spark, s"${name}_meta") { t =>
-        metaFrame(idx).coalesce(1).write.mode("overwrite").saveAsTable(t)
-      }
+      Seq("nearclusters", "nclmeta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${name}_$t`"))
+      writeIndexTables(idx, name, numBuckets)
+    }
+  }
+
+  /** The four index tables of [[writeBucketed]], leaving the maintained
+    * cluster table alone: [[mergeBucketed]] and [[deleteBucketed]]
+    * advance that table themselves. Callers hold [[mutate]]. */
+  private def writeIndexTables(idx: Index, name: String, numBuckets: Int): Unit = {
+    val spark = idx.clusters.sparkSession
+    import graft.sources.CatalogTables.stagedOverwrite
+    // staged overwrites (the GraphIO r12 device): each live table stays
+    // intact and readable until its replacement commits — a merge/delete
+    // rewrite can no longer lose the only copy mid-write, and lazy
+    // frames deriving the new contents FROM the stored tables stay valid
+    stagedOverwrite(spark, s"${name}_clusters") { t =>
+      idx.clusters.write.mode("overwrite").saveAsTable(t)
+    }
+    stagedOverwrite(spark, s"${name}_shingles") { t =>
+      idx.shingles.write.mode("overwrite")
+        .bucketBy(numBuckets, "id").sortBy("id")
+        .saveAsTable(t)
+    }
+    stagedOverwrite(spark, s"${name}_buckets") { t =>
+      idx.buckets.write.mode("overwrite")
+        .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
+        .saveAsTable(t)
+    }
+    stagedOverwrite(spark, s"${name}_meta") { t =>
+      metaFrame(idx).coalesce(1).write.mode("overwrite").saveAsTable(t)
     }
   }
 

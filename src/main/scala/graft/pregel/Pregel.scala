@@ -31,12 +31,20 @@ final case class PregelResult(state: DataFrame, converged: Boolean, iterations: 
   *    union (pregel.py:66-68);
   *  - the new state is pinned with [[CheckpointPolicy.pinObserved]],
   *    which reads the changed-vertex count off the pinning pass itself:
-  *    lineage stays O(1) and convergence costs no extra job. A
-  *    superstep is still several Spark jobs under AQE (each shuffle or
-  *    broadcast stage, then the checkpoint): on a 105k-edge, 5k-vertex
-  *    graph with 4 shuffle partitions, connected components measured
-  *    5.5 jobs per superstep and label propagation, whose two-step mode
-  *    adds a shuffle, 7.
+  *    lineage stays O(1) and convergence costs no extra job;
+  *  - the routing table is pinned keyed on the sender and the state on
+  *    the id (GraphX's co-partitioned routing table and vertex view), so
+  *    the send join and the upsert need no exchange and the message
+  *    `groupBy` is a superstep's one shuffle. The initial state is pinned
+  *    the same way, with every vertex marked changed, so superstep 1
+  *    runs the same plan (and generated code) as every later one. Under
+  *    AQE a superstep is then two Spark jobs, the message shuffle and the
+  *    checkpoint, and each keyed pin before the loop one (its layout
+  *    shuffle; superstep 1 stores its rows). On a 105k-edge, 5k-vertex
+  *    graph with 4 shuffle partitions, connected components ran 11 jobs
+  *    over 4 supersteps, the caller's collect included; label
+  *    propagation, whose two-step mode adds a shuffle, ran 9 jobs over 2
+  *    supersteps.
   *
   * @param initialState  vertex state before superstep 1; may use all vertex columns
   * @param aggExpr       aggregate over [[Columns.MSG]] combining inbound messages
@@ -95,35 +103,42 @@ final case class Pregel(
     // (sender column, recipient column, message) per send direction
     // (pregel.py:77-90): msgToSrc flows dst -> src, msgToDst src -> dst
     val sends = (msgToSrc.map((DST, SRC, _)) ++ msgToDst.map((SRC, DST, _))).toSeq
+    // keyed on the sender, so the send join meets the id-keyed state
+    // without an exchange
     val routes = checkpoint.pin(GraphUtil.multipleUnion(sends.zipWithIndex.map {
       case ((from, to, _), d) => g.edges.select(col(from).as(FROM), col(to).as(ID), lit(d).as(DIR))
-    }))
+    }), Some(FROM))
     val message = sends.indices.tail.foldLeft(col("_m0")) { (m, d) =>
       when(col(DIR) === d, col(s"_m$d")).otherwise(m)
     }
 
-    var state = g.vertices
-      .withColumn(STATE, initialState)
-      .withColumn(OLD_STATE, lit(null))
-    var changed = state
+    val init = g.vertices.withColumn(STATE, initialState)
+    var pinned = checkpoint.pin(init
+      .withColumn(OLD_STATE, lit(null).cast(init.schema(STATE).dataType))
+      .withColumn(CHANGED, lit(true)), Some(ID))
+    var state = pinned.drop(CHANGED)
     var converged = false
     var stepClock = System.nanoTime()
     var i = 0
     while (i < maxIterations && !converged) {
-      val messages = changed
+      // the hints keep both joins shuffled hash joins that build the
+      // vertex-sized side: no broadcast, no sort of the routing table
+      val messages = pinned.filter(col(CHANGED))
         .select(col(ID).as(FROM) +: sends.zipWithIndex.map { case ((_, _, m), d) => m.as(s"_m$d") }: _*)
+        .hint("shuffle_hash")
         .join(routes, Seq(FROM))
         .select(col(ID), message.as(MSG))
 
       val aggMessages =
-        if (messageAggregator.nonEmpty) messageAggregator.get(messages)
-        else messages.groupBy(col(ID)).agg(aggExpr.as(MSG))
+        (if (messageAggregator.nonEmpty) messageAggregator.get(messages)
+        else messages.groupBy(col(ID)).agg(aggExpr.as(MSG)))
+          .withColumn(HIT, lit(true)).hint("shuffle_hash")
 
       // upsert: every vertex that received a message (even one whose
       // aggregate is NULL) takes `update` and remembers its previous
       // state; the others keep both columns as they were
       val hit = col(HIT).isNotNull
-      val next = state.join(aggMessages.withColumn(HIT, lit(true)), Seq(ID), "left")
+      val next = state.join(aggMessages, Seq(ID), "left")
         .select(state.columns.toSeq.map {
           case STATE => when(hit, update).otherwise(col(STATE)).as(STATE)
           case OLD_STATE => when(hit, col(STATE)).otherwise(col(OLD_STATE)).as(OLD_STATE)
@@ -133,10 +148,10 @@ final case class Pregel(
         .drop(HIT)
 
       i += 1
-      val (pinned, observed) = checkpoint.pinObserved(next, s"pregel superstep $i",
+      val (stepped, observed) = checkpoint.pinObserved(next, s"pregel superstep $i", Some(ID))(
         count(when(col(CHANGED), lit(1))))
+      pinned = stepped
       state = pinned.drop(CHANGED)
-      changed = pinned.filter(col(CHANGED)).drop(CHANGED)
       converged = observed.getLong(0) == 0
       superstepListener.foreach { f =>
         val now = System.nanoTime()

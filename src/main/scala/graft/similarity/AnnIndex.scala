@@ -450,21 +450,27 @@ object AnnIndex {
 
   /** Persist as catalog tables `<name>_{centroids,cells}` with `cells`
     * partitioned by cell — later probes prune their scan to the probed
-    * cells via dynamic partition pruning. Overwrites. */
+    * cells via dynamic partition pruning. Overwrites through staged
+    * swaps ([[graft.sources.CatalogTables.stagedOverwrite]]): each live
+    * table stays readable until its replacement commits, so `idx` may
+    * read the very tables it replaces. */
   def writePartitioned(idx: Index, name: String): Unit = {
     val spark = idx.centroids.sparkSession
+    import graft.sources.CatalogTables.stagedOverwrite
     mutate(spark, name) {
-      Seq("centroids", "cells").foreach(t =>
-        graft.sources.CatalogTables.prepareOverwrite(spark, s"${name}_$t"))
-      idx.centroids.write.mode("overwrite").saveAsTable(s"${name}_centroids")
+      stagedOverwrite(spark, s"${name}_centroids") { t =>
+        idx.centroids.write.mode("overwrite").saveAsTable(t)
+      }
       // repartition on the partition key first: without it every shuffle
       // task holds rows of every cell and the write emits
       // tasks × cells files (a small-file storm that also slows every
       // later probe's file listing); hashed on cell, each task owns whole
       // cells and writes one file per cell
-      idx.cells.repartition(col("cell")).write.mode("overwrite")
-        .partitionBy("cell")
-        .saveAsTable(s"${name}_cells")
+      stagedOverwrite(spark, s"${name}_cells") { t =>
+        idx.cells.repartition(col("cell")).write.mode("overwrite")
+          .partitionBy("cell")
+          .saveAsTable(t)
+      }
     }
   }
 

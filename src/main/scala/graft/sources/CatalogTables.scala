@@ -1,10 +1,14 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
-/** Catalog-table write hygiene shared by the bucketed-table writers
-  * (`GraphIO.writeTable`, the one writer of a graph family's tables, and
-  * [[graft.dedup.DedupIndex.writeBucketed]]).
+/** Catalog-table write hygiene shared by the table writers
+  * (`GraphIO.writeTable`, the one writer of a graph family's tables,
+  * [[graft.dedup.DedupIndex.writeBucketed]] and the cell-partitioned
+  * [[graft.similarity.AnnIndex.writePartitioned]]).
   *
   * With the default in-memory catalog, table METADATA dies with the
   * session but the warehouse DIRECTORY does not — a fresh session that
@@ -61,11 +65,31 @@ object CatalogTables {
     write(staged)
     prepareOverwrite(spark, table)
     spark.sql(s"ALTER TABLE `$staged` RENAME TO `$table`")
+    relocatePartitions(spark, table)
     // the rename re-points the SAME final path at NEW files; a session
     // that read the table before the swap may hold a stale file-listing
     // cache for that path (seen as FILE_NOT_EXIST on the next read in
     // long-lived sessions — the streaming faces re-read every batch)
     spark.catalog.refreshTable(table)
+  }
+
+  /** Point every partition of a renamed partitioned table at its
+    * directory under the table's new location. The in-memory catalog
+    * moves a renamed managed table's directory but re-points a partition
+    * only when its URI spells the old path the way the table's does
+    * (`file:///…` partitions under a `file:/…` table stay behind), and a
+    * partition left pointing at the staged path reads as empty. */
+  private def relocatePartitions(spark: SparkSession, table: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    val id = TableIdentifier(table)
+    val meta = catalog.getTableMetadata(id)
+    if (meta.partitionColumnNames.nonEmpty) {
+      val root = new Path(meta.location)
+      catalog.alterPartitions(id, catalog.listPartitions(id).map { p =>
+        val dir = ExternalCatalogUtils.generatePartitionPath(p.spec, meta.partitionColumnNames, root)
+        p.copy(storage = p.storage.copy(locationUri = Some(dir.toUri)))
+      })
+    }
   }
 
   /** Invalidate a session's cached file listings for the named tables

@@ -54,6 +54,33 @@ class AnnIndexSpec extends SparkSpec {
       s"the stored corpus must not shuffle:\n$plan")
   }
 
+  test("writePartitioned rewrites a stored index from its own tables") {
+    val items = corpus(120)
+    val queries = items.filter(col("vec_id") < 5)
+    val idx = AnnIndex.build(items, "vec_id", "embedding", k = 4,
+      maxIterations = 4, fitSampleSize = 60,
+      checkpoint = graft.core.CheckpointPolicy.Passthrough)
+    val name = "annidx_self"
+    def dropAll(): Unit = Seq("centroids", "cells", "centroids__staged", "cells__staged")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
+    dropAll()
+    try {
+      AnnIndex.writePartitioned(idx, name)
+      val first = AnnIndex.readPartitioned(spark, name)
+      val (centroids, cells) = (rowSet(first.centroids), rowSet(first.cells))
+      assert(centroids === rowSet(idx.centroids) && cells === rowSet(idx.cells) && cells.size === 120)
+      val probe = rowSet(first.topK(queries, "vec_id", "embedding", 5, nprobe = 2))
+      // a compaction: the new contents are read from the tables they replace
+      AnnIndex.writePartitioned(AnnIndex.readPartitioned(spark, name), name)
+      val back = AnnIndex.readPartitioned(spark, name)
+      assert(rowSet(back.centroids) === centroids)
+      assert(rowSet(back.cells) === cells)
+      val fromDisk = back.topK(queries, "vec_id", "embedding", 5, nprobe = 2)
+      assert(rowSet(fromDisk) === probe)
+      assert(fromDisk.queryExecution.executedPlan.toString.contains("dynamicpruning"))
+    } finally dropAll()
+  }
+
   test("append: frozen quantizer, probe-rule assignment, appended vectors retrievable") {
     import spark.implicits._
     val items = corpus(120)

@@ -72,9 +72,11 @@ class GraphIOSpec extends SparkSpec {
       // bucket count — the rank side is already co-partitioned with the
       // src-bucketed routes, so a round costs exactly ONE exchange: the
       // inherent message groupBy(dst). NONE on the (100 TB-sized) edge
-      // routing table, none on the rank side. A localCheckpoint of
-      // routes would NOT do this: under AQE the checkpointed frame
-      // reports UnknownPartitioning and the src exchange returns.
+      // routing table, none on the rank side. A keyed pin of the routes
+      // (CheckpointPolicy.pin(routes, Some("src"))) plans the same one
+      // exchange, but first copies the table into executor blocks; an
+      // unkeyed pin reports UnknownPartitioning under AQE and brings the
+      // src exchange back into every round.
       val routes2 = pr.routes(back)
       val rank = back.vertices.select(col("id"), lit(1.0).as("rank"))
       val contrib = rank.join(routes2, rank("id") === routes2("src"))

@@ -4,6 +4,8 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 
 import graft.algorithms.{ConnectedComponents, PageRank, UnionFind}
@@ -29,7 +31,7 @@ class IterationSpec extends SparkSpec {
       spark.sparkContext.setCheckpointDir(
         java.nio.file.Files.createTempDirectory("graft-observe").toString)
     for (policy <- Seq(CheckpointPolicy.Local, CheckpointPolicy.Reliable, CheckpointPolicy.Passthrough)) {
-      val (pinned, got) = policy.pinObserved(df, s"observe $policy",
+      val (pinned, got) = policy.pinObserved(df, s"observe $policy")(
         count(lit(1)), max(col("v")), CheckpointPolicy.exactSum(col("x")))
       assert(got.toSeq === want.toSeq, s"$policy")
       assert(rowSet(pinned) === rowSet(df), s"$policy")
@@ -38,7 +40,7 @@ class IterationSpec extends SparkSpec {
         s"$policy must return a pinned frame")
     }
     // an empty frame observes its zero row instead of blocking
-    val (_, empty) = CheckpointPolicy.Local.pinObserved(df.limit(0), "observe empty",
+    val (_, empty) = CheckpointPolicy.Local.pinObserved(df.limit(0), "observe empty")(
       count(lit(1)), CheckpointPolicy.exactSum(col("x")))
     assert(empty.getLong(0) === 0L && empty.getDouble(1) === 0.0)
   }
@@ -48,7 +50,7 @@ class IterationSpec extends SparkSpec {
     sc.setJobDescription("caller")
     try {
       val labels = jobDescriptions {
-        CheckpointPolicy.Local.pinObserved(spark.range(10).toDF(), "observe label", count(lit(1)))
+        CheckpointPolicy.Local.pinObserved(spark.range(10).toDF(), "observe label")(count(lit(1)))
         assert(sc.getLocalProperty("spark.job.description") === "caller")
       }
       assert(labels.contains("observe label"), labels)
@@ -82,14 +84,41 @@ class IterationSpec extends SparkSpec {
     assert(res.converged && res.iterations === 3)
   }
 
-  test("connected components: at most 6 Spark jobs per Pregel superstep") {
+  test("connected components: at most 3 Spark jobs per Pregel superstep") {
     val g = randomGraph(seed = 7, vertices = 2000, edges = 8000, directed = false)
     val jobs = jobDescriptions(ConnectedComponents(maxIterations = 50).run(g).collect())
     val supersteps = jobs.filter(_.startsWith("pregel superstep ")).toSet.size
     assert(supersteps > 2, s"expected a multi-superstep run, got $supersteps")
     val perStep = jobs.size.toDouble / supersteps
     info(f"${jobs.size} jobs over $supersteps supersteps = $perStep%.2f per superstep")
-    assert(perStep <= 6.0, f"${jobs.size} jobs over $supersteps supersteps = $perStep%.2f per superstep")
+    assert(perStep <= 3.0, f"${jobs.size} jobs over $supersteps supersteps = $perStep%.2f per superstep")
+  }
+
+  test("PageRank: at most 3 Spark jobs per round") {
+    val g = randomGraph(seed = 7, vertices = 2000, edges = 8000, directed = true)
+    val jobs = jobDescriptions(PageRank(maxIterations = 10).run(g).collect())
+    val rounds = jobs.filter(_.startsWith("pagerank round ")).toSet.size
+    assert(rounds === 10)
+    val perRound = jobs.size.toDouble / rounds
+    info(f"${jobs.size} jobs over $rounds rounds = $perRound%.2f per round")
+    assert(perRound <= 3.0, f"${jobs.size} jobs over $rounds rounds = $perRound%.2f per round")
+  }
+
+  test("a Pregel superstep and a PageRank round shuffle once and broadcast nothing") {
+    val undirected = randomGraph(seed = 7, vertices = 2000, edges = 8000, directed = false)
+    val directed = randomGraph(seed = 7, vertices = 2000, edges = 8000, directed = true)
+    // the pinning pass of each iteration carries its private column
+    for ((name, marker, run) <- Seq[(String, String, () => Unit)](
+        ("pregel superstep", "_changed", () => ConnectedComponents(maxIterations = 50).run(undirected)),
+        ("pagerank round", "_prev", () => PageRank(maxIterations = 4).run(directed)))) {
+      val plans = pinPlans(run()).filter(_.contains(marker))
+      assert(plans.size > 2, s"$name: ${plans.size} pinning passes")
+      plans.foreach { p =>
+        assert("Exchange hashpartitioning".r.findAllIn(p).size === 1,
+          s"$name must shuffle exactly once:\n$p")
+        assert(!p.contains("BroadcastExchange"), s"$name must broadcast nothing:\n$p")
+      }
+    }
   }
 
   test("PageRank with tolerance: stops where the observed delta drops below it, ranks match fixed rounds") {
@@ -165,6 +194,31 @@ class IterationSpec extends SparkSpec {
     assert(reach.nonEmpty && reach.forall(_ == "min-reach driver probe"), reach)
     val span = jobDescriptions(UnionFind.spanningPairs(edges, SRC, DST).get)
     assert(span.nonEmpty && span.forall(_ == "spanning-pairs driver probe"), span)
+  }
+
+  /** The executed final plans of the checkpoint passes `body` runs, in
+    * the order they finished. */
+  private def pinPlans(body: => Unit): Seq[String] = {
+    val plans = mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.synchronized {
+          plans += qe.executedPlan.toString.split("== Initial Plan ==").head
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously: wait until they stop coming
+      val deadline = System.currentTimeMillis() + 20000
+      var last = -1
+      while (plans.synchronized(plans.size) != last && System.currentTimeMillis() < deadline) {
+        last = plans.synchronized(plans.size)
+        Thread.sleep(300)
+      }
+      plans.synchronized(plans.toList)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   private def ranks(df: DataFrame): Map[Long, Double] =

@@ -685,6 +685,35 @@ class TextDedupSpec extends SparkSpec {
     } finally dropAll()
   }
 
+  test("writeBucketed under an existing name drops the earlier index's maintained cluster table") {
+    import graft.dedup.DedupIndex
+    val tX = "aa bb cc dd ee ff gg hh ii jj"
+    val name = "ncl_rewrite"
+    def dropAll(): Unit =
+      Seq("clusters", "shingles", "buckets", "meta", "nearclusters", "nclmeta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
+    dropAll()
+    try {
+      DedupIndex.writeBucketed(
+        DedupIndex.build(docs(1L -> tX, 2L -> tX), "doc_id", "text"), name, numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4, numBuckets = 4)
+      DedupIndex.writeBucketed(
+        DedupIndex.build(docs(3L -> "kk ll mm nn oo pp qq rr ss tt",
+          4L -> "completely separate text about something else entirely here"),
+          "doc_id", "text"), name, numBuckets = 4)
+      // the old closure describes an index that is gone
+      assert(!spark.catalog.tableExists(s"${name}_nearclusters"))
+      assert(!spark.catalog.tableExists(s"${name}_nclmeta"))
+      // so a merge advances nothing, and a rebuild closes the stored index
+      DedupIndex.mergeBucketed(spark, name, docs(5L -> "uu vv ww xx yy zz ab cd ef gh"),
+        "doc_id", "text", numBuckets = 4)
+      assert(!spark.catalog.tableExists(s"${name}_nearclusters"))
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4, numBuckets = 4)
+      assert(rowSet(DedupIndex.readNearClusters(spark, name)) ===
+        Set(Seq(3L, 3L), Seq(4L, 4L), Seq(5L, 5L)))
+    } finally dropAll()
+  }
+
   test("mergeBucketed/deleteBucketed refuse a nearclusters table missing its nclmeta") {
     import graft.dedup.DedupIndex
     import spark.implicits._
