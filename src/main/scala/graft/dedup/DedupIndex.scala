@@ -488,40 +488,36 @@ object DedupIndex {
     * the cadence. */
   def mergeStream(
       docs: DataFrame, idCol: String, textCol: String,
-      name: String, numBuckets: Int = 32,
+      name: String,
       bucketCheckEvery: Int = 0,
       bucketListener: Option[org.apache.spark.sql.Row => Unit] = None,
       statsBucketCap: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // foreachBatch runs on a CLONED session; refresh the origin's
-    // cached listings after each rewrite (CatalogTables.refreshTables)
-    val origin = docs.sparkSession
-    docs.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, batchId: Long) => crudLock.synchronized {
-        val spark = batch.sparkSession
-        val idx = readBucketed(spark, name)
-        val known = idx.clusters.select(explode(col("ids")).as(idCol))
-        // collapse intra-batch duplicates DETERMINISTICALLY first (a
-        // producer-retry duplicate would otherwise pass the anti-join
-        // twice and inflate n_copies; min(text) — not dropDuplicates,
-        // whose pick is partition-order-dependent — pins which payload
-        // wins when a retry changed the text, so reruns build identical
-        // indexes); the anti-join then removes cross-batch redelivery
-        val fresh = batch
-          .groupBy(col(idCol))
-          .agg(min(col(textCol)).as(textCol))
-          .join(known, Seq(idCol), "left_anti")
-        if (!fresh.isEmpty) {
-          mergeBucketed(spark, name, fresh, idCol, textCol, numBuckets)
-          refreshFamily(origin, name)
-        }
-        if (bucketCheckEvery > 0 && (batchId + 1) % bucketCheckEvery == 0 &&
-            bucketListener.nonEmpty)
-          bucketListener.foreach(_(
-            bucketStats(spark, name, statsBucketCap).head()))
-      }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    // the family stream holds the lock across the whole batch: the
+    // anti-join below and the merge it feeds are one unit against a
+    // concurrent deleteStream on the same tables
+    family.stream(docs, name) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val idx = readBucketed(spark, name)
+      val known = idx.clusters.select(explode(col("ids")).as(idCol))
+      // collapse intra-batch duplicates DETERMINISTICALLY first (a
+      // producer-retry duplicate would otherwise pass the anti-join
+      // twice and inflate n_copies; min(text) — not dropDuplicates,
+      // whose pick is partition-order-dependent — pins which payload
+      // wins when a retry changed the text, so reruns build identical
+      // indexes); the anti-join then removes cross-batch redelivery
+      val fresh = batch
+        .groupBy(col(idCol))
+        .agg(min(col(textCol)).as(textCol))
+        .join(known, Seq(idCol), "left_anti")
+      val merged = !fresh.isEmpty
+      if (merged) mergeBucketed(spark, name, fresh, idCol, textCol)
+      if (bucketCheckEvery > 0 && (batchId + 1) % bucketCheckEvery == 0 &&
+          bucketListener.nonEmpty)
+        bucketListener.foreach(_(
+          bucketStats(spark, name, statsBucketCap).head()))
+      merged
     }
-  }
 
   /** Fold a batch of NEW documents into the PERSISTED index tables —
     * the batch face [[mergeStream]] wraps: read → [[mergeDetailed]] →
@@ -533,7 +529,7 @@ object DedupIndex {
     * indexed — the [[mergeStream]] anti-join). */
   def mergeBucketed(
       spark: SparkSession, name: String, newDocs: DataFrame,
-      idCol: String, textCol: String, numBuckets: Int = 32): Unit = mutate(spark, name) {
+      idCol: String, textCol: String): Unit = family.mutate(spark, name) {
     val idx = readBucketed(spark, name)
     val m = mergeDetailed(idx, newDocs, idCol, textCol)
     val advanced =
@@ -546,8 +542,8 @@ object DedupIndex {
           threshold = threshold, maxBucketSize = maxBucketSize)
           .localCheckpoint()
       }
-    writeIndexTables(m.index, name, numBuckets)
-    advanced.foreach(writeNclTable(spark, name, _, numBuckets))
+    writeIndexTables(m.index, name)
+    advanced.foreach(family.write(spark, name, "nearclusters", _))
   }
 
   /** [[deleteDetailed]]'s working parts: `touchedShas` the groups the
@@ -704,7 +700,7 @@ object DedupIndex {
     * table exists. A delete that matches nothing rewrites nothing. */
   def deleteBucketed(
       spark: SparkSession, name: String, ids: DataFrame,
-      idCol: String, numBuckets: Int = 32): Unit = mutate(spark, name) {
+      idCol: String): Unit = family.mutate(spark, name) {
     val idx = readBucketed(spark, name)
     val r = deleteDetailed(idx, ids, idCol)
     if (r.touchedShas.isEmpty) return
@@ -714,8 +710,8 @@ object DedupIndex {
           threshold = threshold, maxBucketSize = maxBucketSize)
           .localCheckpoint()
       }
-    writeIndexTables(r.index, name, numBuckets)
-    repaired.foreach(writeNclTable(spark, name, _, numBuckets))
+    writeIndexTables(r.index, name)
+    repaired.foreach(family.write(spark, name, "nearclusters", _))
   }
 
   /** Streaming face of [[deleteBucketed]] — the delete side of a CDC
@@ -727,39 +723,33 @@ object DedupIndex {
     * inserts to that sink, deletes to this one. Returns the configured
     * writer; callers add `.option("checkpointLocation", ...)` and
     * `.start()`. */
-  def deleteStream(
-      ids: DataFrame, idCol: String, name: String, numBuckets: Int = 32)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val origin = ids.sparkSession
-    ids.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) => crudLock.synchronized {
-        if (!batch.isEmpty) {
-          deleteBucketed(batch.sparkSession, name, batch, idCol, numBuckets)
-          refreshFamily(origin, name)
-        }
-      }
+  def deleteStream(ids: DataFrame, idCol: String, name: String)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    family.stream(ids, name) { (batch, _) =>
+      !batch.isEmpty && { deleteBucketed(batch.sparkSession, name, batch, idCol); true }
     }
+
+  /** The persisted index's table family: `_shingles` and `_buckets`
+    * bucketed on their join keys, `_nearclusters` on `id`, all at the
+    * `_shingles` bucket count; `_clusters` plain, the parameter rows one
+    * file each. A new index makes the maintained cluster pair stale.
+    * Every mutation runs under `family.mutate` — the lock (the lifecycle
+    * doc pairs [[mergeStream]] and [[deleteStream]] on a routed CDC
+    * stream, whose callbacks run on CONCURRENT threads against the same
+    * `<name>_*` tables) plus the cross-process epoch guard. */
+  private[graft] val family = {
+    import graft.sources.StoreFamily.{Bucketed, Plain}
+    new graft.sources.StoreFamily(
+      Map(
+        "clusters" -> Plain(),
+        "shingles" -> Bucketed(Seq("id")),
+        "buckets" -> Bucketed(Seq("band", "bucket")),
+        "meta" -> Plain(singleFile = true),
+        "nearclusters" -> Bucketed(Seq("id")),
+        "nclmeta" -> Plain(singleFile = true)),
+      base = Some("shingles"),
+      derived = Seq("nearclusters", "nclmeta"))
   }
-
-  /** Serializes the persisted-index read-modify-rewrite cycles within
-    * this JVM — the [[graft.sources.GraphIO]] convention. The lifecycle
-    * doc recommends pairing [[mergeStream]] and [[deleteStream]] on a
-    * routed CDC stream, where the two queries' foreachBatch callbacks
-    * run on CONCURRENT threads against the same `<name>_*` tables: an
-    * unserialized interleave computes one side's rewrite from a stale
-    * base and silently discards the other's update. Cross-process
-    * coordination stays a catalog/lakehouse concern (see GraphIO). */
-  private val crudLock = new Object
-
-  /** Both guards for every persisted-index mutation: [[crudLock]]
-    * serializes writers in this JVM; the family epoch
-    * ([[graft.sources.CatalogTables.withFamilyEpochGuard]]) aborts
-    * loudly when a SECOND PROCESS committed to the same `<name>_*`
-    * tables while this mutation ran. */
-  private def mutate[T](spark: SparkSession, name: String)(body: => T): T =
-    crudLock.synchronized {
-      graft.sources.CatalogTables.withFamilyEpochGuard(spark, name)(body)
-    }
 
   /** Maintained-cluster parameters, gated on BOTH tables: None when no
     * maintained table exists; throws when `<name>_nearclusters` is
@@ -781,12 +771,6 @@ object DedupIndex {
     }
   }
 
-  /** All catalog tables a persisted index family can own. */
-  private def refreshFamily(spark: SparkSession, name: String): Unit =
-    graft.sources.CatalogTables.refreshTables(spark,
-      Seq("clusters", "shingles", "buckets", "meta", "nearclusters", "nclmeta")
-        .map(t => s"${name}_$t"))
-
   /** Build the OPT-IN maintained near-dup cluster table of a persisted
     * index: one full [[Index.nearClusters]] closure (the expensive CC
     * over the whole pair graph — the 133 s d35-standalone cost at 100x,
@@ -798,11 +782,11 @@ object DedupIndex {
     * [[Index.clusterAssignFrom]]. */
   def buildNearClusters(
       spark: SparkSession, name: String, threshold: Double,
-      maxBucketSize: Int = 0, numBuckets: Int = 32): Unit = mutate(spark, name) {
+      maxBucketSize: Int = 0): Unit = family.mutate(spark, name) {
     val ncl = readBucketed(spark, name)
       .nearClusters(threshold, maxBucketSize)
       .localCheckpoint()
-    writeNearClusters(spark, name, ncl, threshold, maxBucketSize, numBuckets)
+    writeNearClusters(spark, name, ncl, threshold, maxBucketSize)
   }
 
   /** The WRITE half of [[buildNearClusters]]: persist an
@@ -811,26 +795,17 @@ object DedupIndex {
     * memo — the d10/d12/d19 precedent) can restore the persisted state
     * without re-paying the closure CC; `ncl` must be the closure of the
     * stored index at exactly these parameters (the advance/repair faces
-    * trust `_nclmeta` to describe `_nearclusters`). */
+    * trust `_nclmeta` to describe `_nearclusters`). The table is
+    * id-bucketed at the index's own bucket count, so it co-buckets with
+    * `<name>_shingles`. */
   def writeNearClusters(
       spark: SparkSession, name: String, ncl: DataFrame, threshold: Double,
-      maxBucketSize: Int = 0, numBuckets: Int = 32): Unit = mutate(spark, name) {
+      maxBucketSize: Int = 0): Unit = family.mutate(spark, name) {
     import spark.implicits._
-    writeNclTable(spark, name, ncl, numBuckets)
-    graft.sources.CatalogTables.stagedOverwrite(spark, s"${name}_nclmeta") { t =>
-      Seq((threshold, maxBucketSize)).toDF("threshold", "max_bucket_size")
-        .coalesce(1).write.mode("overwrite").saveAsTable(t)
-    }
+    family.write(spark, name, "nearclusters", ncl)
+    family.write(spark, name, "nclmeta",
+      Seq((threshold, maxBucketSize)).toDF("threshold", "max_bucket_size"))
   }
-
-  /** The one `<name>_nearclusters` writer: a staged overwrite,
-    * id-bucketed. */
-  private def writeNclTable(
-      spark: SparkSession, name: String, ncl: DataFrame, numBuckets: Int): Unit =
-    graft.sources.CatalogTables.stagedOverwrite(spark, s"${name}_nearclusters") { t =>
-      ncl.write.mode("overwrite")
-        .bucketBy(numBuckets, "id").sortBy("id").saveAsTable(t)
-    }
 
   /** The maintained representative-level cluster table — always ≡
     * `readBucketed(name).nearClusters(threshold)` rebuilt, across any
@@ -855,38 +830,27 @@ object DedupIndex {
     */
   def writeBucketed(idx: Index, name: String, numBuckets: Int = 32): Unit = {
     val spark = idx.clusters.sparkSession
-    mutate(spark, name) {
-      Seq("nearclusters", "nclmeta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${name}_$t`"))
-      writeIndexTables(idx, name, numBuckets)
+    family.mutate(spark, name) {
+      family.invalidate(spark, name)
+      writeIndexTables(idx, name, Some(numBuckets))
     }
   }
 
   /** The four index tables of [[writeBucketed]], leaving the maintained
     * cluster table alone: [[mergeBucketed]] and [[deleteBucketed]]
-    * advance that table themselves. Callers hold [[mutate]]. */
-  private def writeIndexTables(idx: Index, name: String, numBuckets: Int): Unit = {
+    * advance that table themselves. `numBuckets` defaults to the stored
+    * index's. Staged overwrites (the family writer): each live table
+    * stays intact and readable until its replacement commits, so lazy
+    * frames deriving the new contents FROM the stored tables stay valid.
+    * Callers hold `family.mutate`. */
+  private def writeIndexTables(
+      idx: Index, name: String, numBuckets: Option[Int] = None): Unit = {
     val spark = idx.clusters.sparkSession
-    import graft.sources.CatalogTables.stagedOverwrite
-    // staged overwrites (the GraphIO r12 device): each live table stays
-    // intact and readable until its replacement commits — a merge/delete
-    // rewrite can no longer lose the only copy mid-write, and lazy
-    // frames deriving the new contents FROM the stored tables stay valid
-    stagedOverwrite(spark, s"${name}_clusters") { t =>
-      idx.clusters.write.mode("overwrite").saveAsTable(t)
-    }
-    stagedOverwrite(spark, s"${name}_shingles") { t =>
-      idx.shingles.write.mode("overwrite")
-        .bucketBy(numBuckets, "id").sortBy("id")
-        .saveAsTable(t)
-    }
-    stagedOverwrite(spark, s"${name}_buckets") { t =>
-      idx.buckets.write.mode("overwrite")
-        .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
-        .saveAsTable(t)
-    }
-    stagedOverwrite(spark, s"${name}_meta") { t =>
-      metaFrame(idx).coalesce(1).write.mode("overwrite").saveAsTable(t)
-    }
+    val n = Some(numBuckets.getOrElse(family.bucketCount(spark, name)))
+    family.write(spark, name, "clusters", idx.clusters)
+    family.write(spark, name, "shingles", idx.shingles, buckets = n)
+    family.write(spark, name, "buckets", idx.buckets, buckets = n)
+    family.write(spark, name, "meta", metaFrame(idx))
   }
 
   def readBucketed(spark: SparkSession, name: String): Index = {

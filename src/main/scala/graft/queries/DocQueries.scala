@@ -573,9 +573,8 @@ object DocQueries {
       // 8 buckets (the g58 sizing): the gate corpus is 5k docs — 32
       // buckets paid file-count overhead in every rewrite, not scan time
       DedupIndex.writeBucketed(SharedDedupIndex.corpus90(s, d), name, numBuckets = 8)
-      DedupIndex.writeNearClusters(s, name, SharedDedupIndex.ncl90(s, d),
-        threshold = 0.4, numBuckets = 8)
-      DedupIndex.mergeBucketed(s, name, batch, "doc_id", "text", numBuckets = 8)
+      DedupIndex.writeNearClusters(s, name, SharedDedupIndex.ncl90(s, d), threshold = 0.4)
+      DedupIndex.mergeBucketed(s, name, batch, "doc_id", "text")
       DedupIndex.readBucketed(s, name)
         .clusterAssignFrom(DedupIndex.readNearClusters(s, name), "doc_id")
     }),
@@ -596,12 +595,11 @@ object DocQueries {
       val docs0 = documents(s, d)
       val name = s"d37del_${d.hashCode & 0x7fffffff}"
       DedupIndex.writeBucketed(SharedDedupIndex.index(s, d), name, numBuckets = 8)
-      DedupIndex.writeNearClusters(s, name, SharedDedupIndex.nclFull(s, d),
-        threshold = 0.4, numBuckets = 8)
+      DedupIndex.writeNearClusters(s, name, SharedDedupIndex.nclFull(s, d), threshold = 0.4)
       val del = docs0.filter(pmod(col("doc_id"), lit(10L)) === 0L)
         .select(col("doc_id"))
         .unionByName(s.range(1, 4).select((-col("id")).as("doc_id")))
-      DedupIndex.deleteBucketed(s, name, del, "doc_id", numBuckets = 8)
+      DedupIndex.deleteBucketed(s, name, del, "doc_id")
       DedupIndex.readBucketed(s, name)
         .clusterAssignFrom(DedupIndex.readNearClusters(s, name), "doc_id")
     }),

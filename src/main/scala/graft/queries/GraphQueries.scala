@@ -53,10 +53,7 @@ object GraphQueries {
     s"${prefix}_${d.hashCode & 0x7fffffff}_${storeSeq.incrementAndGet()}"
   private def dropStore(s: SparkSession, name: String, result: DataFrame): DataFrame = {
     val pinned = result.localCheckpoint() // eager: materialize before the drop
-    Seq("vertices", "edges", "degrees", "components", "forest", "ranks",
-      "refresh_pending")
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
-    s.sql(s"DROP TABLE IF EXISTS ${name}__epoch")
+    graft.sources.GraphIO.family.drop(s, name)
     pinned
   }
 

@@ -194,50 +194,38 @@ object AnnIndex {
       driftListener: Option[org.apache.spark.sql.Row => Unit] = None,
       rebuildOnDrift: Boolean = false,
       maxGrowthSkew: Double = 4.0, imbalanceFactor: Double = 2.0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // foreachBatch runs on a CLONED session: an insert adds files the
-    // origin session's cached listing would silently MISS — refresh it
-    // after each batch (CatalogTables.refreshTables)
-    val origin = vecs.sparkSession
-    vecs.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val idx = readPartitioned(spark, name)
-        val known = idx.cells.select(col("id").as(idCol))
-        // min(vec) — not dropDuplicates — so a retry that changed the
-        // payload resolves deterministically across reruns (arrays are
-        // orderable in both engines)
-        val fresh = batch
-          .groupBy(col(idCol))
-          .agg(min(col(vecCol)).as(vecCol))
-          .join(known, Seq(idCol), "left_anti")
-        if (!fresh.isEmpty) mutate(spark, name) {
-          val assigned = append(
-            Index(idx.centroids, idx.cells.limit(0)), fresh, idCol, vecCol)
-            .cells
-          // partitioned-table schema puts the partition column LAST;
-          // insertInto matches by position
-          assigned.select(col("id"), col("v"), col("cell"))
-            .write.mode("append").insertInto(s"${name}_cells")
-          graft.sources.CatalogTables.refreshTables(
-            origin, Seq(s"${name}_cells"))
-        }
-        if (driftCheckEvery > 0 && (batchId + 1) % driftCheckEvery == 0 &&
-            (driftListener.nonEmpty || rebuildOnDrift)) {
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    family.stream(vecs, name) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val idx = readPartitioned(spark, name)
+      val known = idx.cells.select(col("id").as(idCol))
+      // min(vec) — not dropDuplicates — so a retry that changed the
+      // payload resolves deterministically across reruns (arrays are
+      // orderable in both engines)
+      val fresh = batch
+        .groupBy(col(idCol))
+        .agg(min(col(vecCol)).as(vecCol))
+        .join(known, Seq(idCol), "left_anti")
+      val appended = !fresh.isEmpty
+      if (appended) family.mutate(spark, name) {
+        family.write(spark, name, "cells", append(
+          Index(idx.centroids, idx.cells.limit(0)), fresh, idCol, vecCol).cells,
+          append = true)
+      }
+      val rebuilt = driftCheckEvery > 0 && (batchId + 1) % driftCheckEvery == 0 &&
+        (driftListener.nonEmpty || rebuildOnDrift) && {
           // ONE stats pass serves the listener, the rebuild decision
           // AND (passed through below) the rebuild's own threshold
           // check — the pass is never paid twice (ADVICE r14)
           val s = driftStats(readPartitioned(spark, name)).head()
           driftListener.foreach(_(s))
-          if (rebuildOnDrift && isDrifted(s, maxGrowthSkew, imbalanceFactor) &&
-              rebuildPartitionedIfDrifted(spark, name,
-                maxGrowthSkew, imbalanceFactor,
-                precomputedStats = Some(s)))
-            graft.sources.CatalogTables.refreshTables(
-              origin, Seq(s"${name}_cells", s"${name}_centroids"))
+          rebuildOnDrift && isDrifted(s, maxGrowthSkew, imbalanceFactor) &&
+            rebuildPartitionedIfDrifted(spark, name,
+              maxGrowthSkew, imbalanceFactor,
+              precomputedStats = Some(s))
         }
+      appended || rebuilt
     }
-  }
 
   /** Physically remove vectors from the index — the GDPR face
     * completing the family's CRUD
@@ -272,7 +260,7 @@ object AnnIndex {
     * corpus. */
   def deletePartitioned(
       spark: SparkSession, name: String, ids: DataFrame, idCol: String): Unit =
-    mutate(spark, name) {
+    family.mutate(spark, name) {
       val del = ids.select(col(idCol).as("id")).distinct().localCheckpoint()
       val cells = spark.table(s"${name}_cells")
       // touched partitions — batch-bounded (≤ one per deleted vector)
@@ -311,32 +299,21 @@ object AnnIndex {
     * writer; callers add `.option("checkpointLocation", ...)` and
     * `.start()`. */
   def deleteStream(ids: DataFrame, idCol: String, name: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val origin = ids.sparkSession
-    ids.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          deletePartitioned(batch.sparkSession, name, batch, idCol)
-          graft.sources.CatalogTables.refreshTables(
-            origin, Seq(s"${name}_cells"))
-        }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    family.stream(ids, name) { (batch, _) =>
+      !batch.isEmpty && { deletePartitioned(batch.sparkSession, name, batch, idCol); true }
     }
+
+  /** The persisted index's table family: `_centroids` plain, `_cells`
+    * partitioned by `cell`. Every mutation runs under `family.mutate` —
+    * the lock (a concurrent append and delete would race the partition
+    * listing and the conf save/restore) plus the cross-process epoch
+    * guard. */
+  private[graft] val family = {
+    import graft.sources.StoreFamily.{Partitioned, Plain}
+    new graft.sources.StoreFamily(
+      Map("centroids" -> Plain(), "cells" -> Partitioned("cell")))
   }
-
-  /** Mutation faces serialize per JVM (the [[graft.sources.GraphIO]]
-    * convention): a concurrent append and delete would race the
-    * partition listing and the conf save/restore. */
-  private val crudLock = new Object
-
-  /** Both guards for every persisted-index mutation: [[crudLock]] in
-    * this JVM, plus the family epoch
-    * ([[graft.sources.CatalogTables.withFamilyEpochGuard]]) so a SECOND
-    * PROCESS committing to the same `<name>_*` tables mid-mutation
-    * aborts this one loudly instead of silently interleaving. */
-  private def mutate[T](spark: SparkSession, name: String)(body: => T): T =
-    crudLock.synchronized {
-      graft.sources.CatalogTables.withFamilyEpochGuard(spark, name)(body)
-    }
 
   /** Drift diagnostics of the FROZEN quantizer against the CURRENT
     * corpus — the observability half of the documented periodic-rebuild
@@ -439,7 +416,7 @@ object AnnIndex {
       maxGrowthSkew: Double = 4.0, imbalanceFactor: Double = 2.0,
       k: Int = 0, maxIterations: Int = 5, fitSampleSize: Int = 0,
       precomputedStats: Option[org.apache.spark.sql.Row] = None): Boolean =
-    mutate(spark, name) {
+    family.mutate(spark, name) {
       val (next, rebuilt) = rebuildIfDrifted(
         readPartitioned(spark, name), maxGrowthSkew, imbalanceFactor,
         k, maxIterations, fitSampleSize, CheckpointPolicy.Local,
@@ -451,26 +428,14 @@ object AnnIndex {
   /** Persist as catalog tables `<name>_{centroids,cells}` with `cells`
     * partitioned by cell — later probes prune their scan to the probed
     * cells via dynamic partition pruning. Overwrites through staged
-    * swaps ([[graft.sources.CatalogTables.stagedOverwrite]]): each live
-    * table stays readable until its replacement commits, so `idx` may
-    * read the very tables it replaces. */
+    * swaps (the family writer): each live table stays readable until its
+    * replacement commits, so `idx` may read the very tables it
+    * replaces. */
   def writePartitioned(idx: Index, name: String): Unit = {
     val spark = idx.centroids.sparkSession
-    import graft.sources.CatalogTables.stagedOverwrite
-    mutate(spark, name) {
-      stagedOverwrite(spark, s"${name}_centroids") { t =>
-        idx.centroids.write.mode("overwrite").saveAsTable(t)
-      }
-      // repartition on the partition key first: without it every shuffle
-      // task holds rows of every cell and the write emits
-      // tasks × cells files (a small-file storm that also slows every
-      // later probe's file listing); hashed on cell, each task owns whole
-      // cells and writes one file per cell
-      stagedOverwrite(spark, s"${name}_cells") { t =>
-        idx.cells.repartition(col("cell")).write.mode("overwrite")
-          .partitionBy("cell")
-          .saveAsTable(t)
-      }
+    family.mutate(spark, name) {
+      family.write(spark, name, "centroids", idx.centroids)
+      family.write(spark, name, "cells", idx.cells)
     }
   }
 

@@ -5,10 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
-/** Catalog-table write hygiene shared by the table writers
-  * (`GraphIO.writeTable`, the one writer of a graph family's tables,
-  * [[graft.dedup.DedupIndex.writeBucketed]] and the cell-partitioned
-  * [[graft.similarity.AnnIndex.writePartitioned]]).
+/** Catalog-table write hygiene under the one family writer,
+  * [[StoreFamily.write]], through which the graph, dedup and vector
+  * stores write every table.
   *
   * With the default in-memory catalog, table METADATA dies with the
   * session but the warehouse DIRECTORY does not — a fresh session that
@@ -97,18 +96,18 @@ object CatalogTables {
     * batches on Structured Streaming's CLONED session, so the rename in
     * [[stagedOverwrite]] refreshes the clone only — the ORIGIN session
     * that built the stream (and that the caller keeps reading from)
-    * would otherwise serve FILE_NOT_EXIST from its stale listing. Each
-    * face captures its origin session at writer construction and calls
-    * this after every mutating batch; sessions this library never saw
-    * follow the standard Spark contract (REFRESH TABLE after external
-    * changes). */
+    * would otherwise serve FILE_NOT_EXIST from its stale listing.
+    * [[StoreFamily.stream]] captures the origin session at writer
+    * construction and calls this after every mutating batch; sessions
+    * this library never saw follow the standard Spark contract (REFRESH
+    * TABLE after external changes). */
   def refreshTables(spark: SparkSession, tables: Seq[String]): Unit =
     tables.foreach { t =>
       if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
     }
 
   /** CROSS-PROCESS write coordination for a persisted table family —
-    * the optimistic complement of the JVM-local `crudLock`s. Each
+    * the optimistic complement of the JVM-local [[StoreFamily]] locks. Each
     * family (`<name>_vertices`/`_edges`/…, `<name>_clusters`/…,
     * `<name>_cells`/…) carries a generation counter in
     * `<family>__epoch`; every mutation captures the generation when it
@@ -151,18 +150,23 @@ object CatalogTables {
         // is exactly the deployment where cross-process detection is
         // meaningful in the first place).
         val t = s"${family}__epoch"
-        if (!spark.catalog.tableExists(t)) {
-          // a dead session's marker leaves an orphaned directory that
-          // CREATE TABLE refuses — the standard hygiene this object is for
-          prepareOverwrite(spark, t)
-          spark.sql(s"CREATE TABLE `$t` (epoch BIGINT) USING parquet")
-        }
+        createMarker(spark, t, "epoch BIGINT")
         spark.sql(
           s"ALTER TABLE `$t` SET TBLPROPERTIES('graft.epoch' = '${base + 1}')")
         out
       } finally epochCtx.set(outer)
     }
   }
+
+  /** Create the zero-row marker table `table` with the one column
+    * `column` (a DDL fragment) unless it exists. A dead session's marker
+    * leaves an orphaned directory that CREATE TABLE refuses, so the
+    * location is cleared first ([[prepareOverwrite]]). */
+  def createMarker(spark: SparkSession, table: String, column: String): Unit =
+    if (!spark.catalog.tableExists(table)) {
+      prepareOverwrite(spark, table)
+      spark.sql(s"CREATE TABLE `$table` ($column) USING parquet")
+    }
 
   /** The current generation of a table family (0 when never written) —
     * a pure catalog-metadata read. */

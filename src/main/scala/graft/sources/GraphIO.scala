@@ -19,37 +19,13 @@ import graft.core.Graph
   */
 object GraphIO {
 
-  /** All lifecycle mutations in this JVM serialize through this lock.
-    * Two concurrent append/delete/upsert calls would otherwise (a) race
-    * the session-conf save/restore in [[withSubsetKeyCoPartition]] and
-    * (b) — the deeper problem — race the degree/component
-    * read-modify-write cycles themselves: both would fold their delta
-    * into the SAME base table and one update would be lost. Serializing
-    * maintenance writes per driver is the correct granularity;
-    * cross-driver coordination is a catalog/lakehouse concern, not this
-    * library's. */
-  private val crudLock = new Object
-
   /** Observability hook for the fast-erase decision in
     * [[deleteVertices]] (the [[graft.algorithms.PageRank]]
     * `lastIterations` convention): true when the last vertex delete
     * took the row-drop path, false when it ran the bounded repair.
     * Test-facing; reads race benignly under concurrent mutations (which
-    * crudLock serializes anyway). */
+    * the family lock serializes anyway). */
   @volatile private[graft] var lastVertexDeleteFastPath: Boolean = false
-
-  /** Every graph-store mutation runs under BOTH guards: [[crudLock]]
-    * serializes writers within this JVM, and the family epoch
-    * ([[CatalogTables.withFamilyEpochGuard]]) detects a SECOND PROCESS
-    * committing to the same `<name>_*` tables — the staged swaps
-    * re-verify the generation and the whole mutation aborts loudly on a
-    * stale base instead of silently discarding the other writer's
-    * update. */
-  private def mutate[T](spark: org.apache.spark.sql.SparkSession, name: String)(
-      body: => T): T =
-    crudLock.synchronized {
-      CatalogTables.withFamilyEpochGuard(spark, name)(body)
-    }
 
   /** Run `body` with subset-key co-partitioning enabled (Spark 4 gates
     * it off by default): the lifecycle's (src, edge_id) joins key on a
@@ -59,7 +35,7 @@ object GraphIO {
     * correctness (it only widens the planner's exchange-elision
     * choices; results are unaffected, at worst a concurrent query plans
     * one fewer shuffle) — and the save/restore race between lifecycle
-    * calls is closed by [[crudLock]], which every caller holds. */
+    * calls is closed by the family lock, which every caller holds. */
   private def withSubsetKeyCoPartition[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.requireAllClusterKeysForCoPartition"
     val prev = spark.conf.get(key, "true")
@@ -67,47 +43,22 @@ object GraphIO {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** The store's table layout: every `<name>_<table>` of a graph
-    * family is bucketed and sorted on its key here. */
+  /** Each `<name>_<table>` of a graph family and the key it is
+    * bucketed and sorted on. */
   private[graft] val layout = Map(
     "vertices" -> "id", "edges" -> "src", "degrees" -> "id",
     "components" -> "id", "forest" -> "src", "ranks" -> "id")
 
-  /** The one writer of a family's tables: `df` lands in `<name>_<table>`
-    * bucketed and sorted on the table's [[layout]] key. The bucket count
-    * is `buckets`, else the `<name>_edges` count — one count holds across
-    * the family, because [[writeBucketed]] drops every derived table when
-    * it rewrites the base, so every table is created after the base
-    * write. An overwrite is a [[CatalogTables.stagedOverwrite]] (the live
-    * table stays readable while its replacement is written, so `df` may
-    * derive from it); an append writes in place.
-    *
-    * The frame is first repartitioned into exactly that many partitions
-    * on the key — HashPartitioning, the same murmur hash `bucketBy`
-    * assigns bucket ids with — so each write task owns ONE whole bucket
-    * and the table lands as one file per bucket. Without it a bucketed
-    * write emits up to (input tasks × buckets) fragments: every lifecycle
-    * rewrite of a small store was producing hundreds of KB-sized files,
-    * and every subsequent probe paid their listing + open cost. */
-  private def writeTable(
-      spark: SparkSession, name: String, table: String, df: DataFrame,
-      append: Boolean = false, buckets: Option[Int] = None): Unit = {
-    val key = layout(table)
-    val n = buckets.getOrElse(familyBuckets(spark, name))
-    def save(target: String, mode: String): Unit =
-      df.repartition(n, org.apache.spark.sql.functions.col(key))
-        .write.mode(mode).bucketBy(n, key).sortBy(key).saveAsTable(target)
-    if (append) save(s"${name}_$table", "append")
-    else CatalogTables.stagedOverwrite(spark, s"${name}_$table")(save(_, "overwrite"))
-  }
-
-  /** The family's bucket count: the `<name>_edges` table's, read from the
-    * catalog metadata (no SQL command, no job). */
-  private def familyBuckets(spark: SparkSession, name: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_edges"))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"${name}_edges is not a bucketed graph table"))
+  /** The graph store's table family: every table bucketed and clustered
+    * on its [[layout]] key at the `<name>_edges` bucket count; a new base
+    * makes the component table, its certificate, the refresh marker and
+    * the ranks stale. Every mutation below runs under `family.mutate`
+    * (the lock plus the cross-process epoch guard) and writes through
+    * `family.write`. */
+  private[graft] val family = new StoreFamily(
+    layout.map { case (t, key) => t -> StoreFamily.Bucketed(Seq(key), cluster = true) },
+    base = Some("edges"),
+    derived = Seq("components", "forest", "refresh_pending", "ranks"))
 
   /** Run independent table writes as CONCURRENT Spark job streams
     * (guide §2.6): actions are only sequential because the driver calls
@@ -176,13 +127,12 @@ object GraphIO {
     import org.apache.spark.sql.functions._
     val spark = g.vertices.sparkSession
     val n = Some(buckets)
-    mutate(spark, name) {
+    family.mutate(spark, name) {
       // a new base makes every derived table stale: drop components,
       // forest, the refresh marker and ranks BEFORE the swaps, so no
       // append maintains labels of the old graph and every table of the
       // family is created after this write, at its bucket count
-      invalidateComponents(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS `${name}_ranks`")
+      family.invalidate(spark, name)
       // staged swaps, so `g` may read the very tables it replaces — a
       // compaction is writeBucketed(readBucketed(spark, name), name, buckets).
       // The vertex and edge writes are INDEPENDENT (each consumes its own
@@ -194,10 +144,10 @@ object GraphIO {
         // vertices bucketed by id: the append lifecycle's
         // endpoint-membership semi-joins (and any vertex-keyed probe)
         // then plan no exchange on the stored side
-        () => writeTable(spark, name, "vertices",
+        () => family.write(spark, name, "vertices",
           g.vertices.withColumn("_directed", lit(g.directed)), buckets = n),
         () => {
-          writeTable(spark, name, "edges", g.edges, buckets = n)
+          family.write(spark, name, "edges", g.edges, buckets = n)
           // maintained degree cache — [[appendEdges]] folds batch deltas
           // into it instead of re-scanning the edge table. Derived from
           // the JUST-WRITTEN table, not from `g.edges` (OPTIMIZATION_r17):
@@ -207,7 +157,7 @@ object GraphIO {
           // holds exactly those rows, its scan is one bucketed read, and
           // the out-degree half aggregates with NO exchange on the
           // bucketed src.
-          writeTable(spark, name, "degrees",
+          family.write(spark, name, "degrees",
             degreesOf(spark.table(s"${name}_edges")), buckets = n)
         })
     }
@@ -280,8 +230,8 @@ object GraphIO {
     * then each batch pays a batch-sized merge (see [[appendEdges]]).
     */
   def buildComponents(spark: SparkSession, name: String): Unit =
-    mutate(spark, name) {
-      writeTable(spark, name, "components", componentsOf(readBucketed(spark, name)))
+    family.mutate(spark, name) {
+      family.write(spark, name, "components", componentsOf(readBucketed(spark, name)))
     }
 
   /** The maintained component table — always equal to
@@ -311,7 +261,7 @@ object GraphIO {
     * Want fresh labels without paying the certificate rebuild? That is
     * [[refreshLabels]]. */
   def refreshComponents(spark: SparkSession, name: String): Unit =
-    mutate(spark, name) {
+    family.mutate(spark, name) {
       val rebuildForest = hasForest(spark, name)
       if (rebuildForest) setRefreshPending(spark, name)
       buildComponents(spark, name)
@@ -338,7 +288,7 @@ object GraphIO {
     * pending window — the epoch guard made that race benign, but the
     * contract should not lean on that reasoning chain. */
   def refreshLabels(spark: SparkSession, name: String): Unit =
-    mutate(spark, name) {
+    family.mutate(spark, name) {
       import org.apache.spark.sql.functions._
       require(!refreshPending(spark, name),
         s"an interrupted refreshComponents left '$name''s certificate untrusted — " +
@@ -354,7 +304,7 @@ object GraphIO {
       // the equivalence against the full rebuild. No certificate → the
       // full [[buildComponents]] pass, unchanged.
       if (hasForest(spark, name))
-        writeTable(spark, name, "components",
+        family.write(spark, name, "components",
           labelsFor(spark.table(s"${name}_vertices"), readForest(spark, name)))
       else buildComponents(spark, name)
     }
@@ -366,18 +316,11 @@ object GraphIO {
   def refreshPending(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(s"${name}_refresh_pending")
 
-  private[graft] def setRefreshPending(spark: SparkSession, name: String): Unit = {
-    val t = s"${name}_refresh_pending"
-    if (!spark.catalog.tableExists(t)) {
-      // a dead session's marker leaves an orphaned directory that
-      // CREATE TABLE refuses — the standard CatalogTables hygiene
-      CatalogTables.prepareOverwrite(spark, t)
-      spark.sql(s"CREATE TABLE `$t` (pending BOOLEAN) USING parquet")
-    }
-  }
+  private[graft] def setRefreshPending(spark: SparkSession, name: String): Unit =
+    CatalogTables.createMarker(spark, s"${name}_refresh_pending", "pending BOOLEAN")
 
   private def clearRefreshPending(spark: SparkSession, name: String): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS `${name}_refresh_pending`")
+    family.invalidate(spark, name, Seq("refresh_pending"))
 
   /** The untrusted-certificate gate: a mutation that would TRUST or
     * MAINTAIN the certificate while a refresh is pending drops it
@@ -389,7 +332,7 @@ object GraphIO {
     * rebuilds the certificate and clears the marker) restores trust. */
   private def dropUntrustedForest(spark: SparkSession, name: String): Unit =
     if (refreshPending(spark, name) && hasForest(spark, name))
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_forest")
+      family.invalidate(spark, name, Seq("forest"))
 
   private def hasComponents(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(s"${name}_components")
@@ -418,7 +361,7 @@ object GraphIO {
     * tree-bounded work, never a re-span. Requires the component table
     * (the guard exists to protect its repair); the burst opt-out
     * (`repairComponents = false`) drops BOTH tables loudly. */
-  def buildForest(spark: SparkSession, name: String): Unit = mutate(spark, name) {
+  def buildForest(spark: SparkSession, name: String): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     require(hasComponents(spark, name),
       s"buildForest requires the maintained component table — run buildComponents('$name') first")
@@ -441,7 +384,7 @@ object GraphIO {
       .parentForest(roots, edges.select(col("src"), col("dst")),
         totalVertices = Some(comps.count()))
       .getOrElse(forestOf(edges))
-    writeTable(spark, name, "forest", forest)
+    family.write(spark, name, "forest", forest)
   }
 
   /** Certificate health: ONE aggregated diagnostics row (the
@@ -492,7 +435,7 @@ object GraphIO {
     * completed [[refreshComponents]] restores a meterable state. */
   def retightenForestIfBloated(
       spark: SparkSession, name: String, maxRatio: Double = 1.5): Boolean =
-    mutate(spark, name) {
+    family.mutate(spark, name) {
       if (refreshPending(spark, name) || !hasForest(spark, name)) false
       else {
         val s = forestStats(spark, name).head()
@@ -535,7 +478,7 @@ object GraphIO {
     * membership anti-join probes the id-bucketed vertex table with no
     * exchange on the stored side.
     */
-  def appendVertices(spark: SparkSession, name: String, rawVertices: DataFrame): Unit = mutate(spark, name) {
+  def appendVertices(spark: SparkSession, name: String, rawVertices: DataFrame): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     val stored = spark.table(s"${name}_vertices")
     val directed = stored.select("_directed").limit(1).collect()
@@ -546,11 +489,11 @@ object GraphIO {
       .select(stored.columns.map(col).toIndexedSeq: _*)
       // pinned: the append below writes into a table this plan reads
       .localCheckpoint()
-    writeTable(spark, name, "vertices", fresh, append = true)
+    family.write(spark, name, "vertices", fresh, append = true)
     // a genuinely-new vertex is its own weak component until an edge
     // arrives — O(batch) inserted rows, exactly what a rebuild would say
     if (hasComponents(spark, name))
-      writeTable(spark, name, "components",
+      family.write(spark, name, "components",
         fresh.select(col("id"), col("id").as("component")), append = true)
   }
 
@@ -593,7 +536,7 @@ object GraphIO {
     * stale — [[refreshDegrees]] / [[refreshComponents]] rebuild from
     * the edge table.
     */
-  def appendEdges(spark: SparkSession, name: String, rawEdges: DataFrame): Unit = mutate(spark, name) {
+  def appendEdges(spark: SparkSession, name: String, rawEdges: DataFrame): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     dropUntrustedForest(spark, name)
     val stored = spark.table(s"${name}_edges")
@@ -631,8 +574,8 @@ object GraphIO {
     // concurrent job streams; the crash contract is the documented one
     // either way (a stale cache is rebuilt by refreshDegrees)
     inParallel(
-      () => writeTable(spark, name, "edges", fresh, append = true),
-      () => writeTable(spark, name, "degrees", merged))
+      () => family.write(spark, name, "edges", fresh, append = true),
+      () => family.write(spark, name, "degrees", merged))
 
     // component maintenance (opt-in, see [[buildComponents]]): appends
     // only MERGE components, so the whole update is (1) map the batch's
@@ -681,7 +624,7 @@ object GraphIO {
         // already-present canonical pairs (a fresh parallel edge over a
         // stored one) are anti-joined away
         crossing.foreach { c =>
-          writeTable(spark, name, "forest", c.join(
+          family.write(spark, name, "forest", c.join(
             readForest(spark, name).select(col("src"), col("dst")),
             Seq("src", "dst"), "left_anti"), append = true)
         }
@@ -707,7 +650,7 @@ object GraphIO {
         // the fast path.
         if (mapping.count() <= 500000L) {
           // LAZY: the staged write reads the live component table
-          writeTable(spark, name, "components", comp
+          family.write(spark, name, "components", comp
             .join(broadcast(mapping), comp("component") === mapping("_old"), "left")
             .select(col("id"),
               coalesce(col("_new"), col("component")).as("component")))
@@ -727,7 +670,7 @@ object GraphIO {
     * structure). Idempotent: re-delivering the batch rewrites the same
     * values.
     */
-  def upsertVertexAttrs(spark: SparkSession, name: String, rawVertices: DataFrame): Unit = mutate(spark, name) {
+  def upsertVertexAttrs(spark: SparkSession, name: String, rawVertices: DataFrame): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     val stored = spark.table(s"${name}_vertices")
     val batch = Graph.keyVertices(rawVertices)
@@ -750,7 +693,7 @@ object GraphIO {
       "upsertVertexAttrs batch contains conflicting rows for the same vertex id")
     // LAZY: the staged write reads the LIVE vertex table while writing
     // its replacement — no O(V) defensive copy, no loss window
-    writeTable(spark, name, "vertices",
+    family.write(spark, name, "vertices",
       stored.join(broadcastIfSmall(renamed), Seq("id"), "left")
         .select(stored.columns.map { c =>
           if (attrs.contains(c))
@@ -794,7 +737,7 @@ object GraphIO {
     */
   def deleteEdges(
       spark: SparkSession, name: String, rawEdges: DataFrame,
-      repairComponents: Boolean = true): Unit = mutate(spark, name) {
+      repairComponents: Boolean = true): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     dropUntrustedForest(spark, name)
     val stored = spark.table(s"${name}_edges")
@@ -819,7 +762,7 @@ object GraphIO {
       // an orphaned certificate (forest kept past its component table)
       // would silently go stale on the next cut — drop it loudly
       if (hasForest(spark, name) && !hasComponents(spark, name))
-        spark.sql(s"DROP TABLE IF EXISTS ${name}_forest")
+        family.invalidate(spark, name, Seq("forest"))
       // SPANNING-FOREST GUARD ([[buildForest]]): when the certificate is
       // maintained and NONE of the removed edges are in it, components
       // provably cannot change — every surviving vertex pair stays
@@ -867,7 +810,7 @@ object GraphIO {
     */
   def deleteVertices(
       spark: SparkSession, name: String, rawVertices: DataFrame,
-      repairComponents: Boolean = true): Unit = mutate(spark, name) {
+      repairComponents: Boolean = true): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     dropUntrustedForest(spark, name)
     val ids = Graph.keyVertices(rawVertices).select(col("id")).localCheckpoint()
@@ -877,7 +820,7 @@ object GraphIO {
     if (storedV.join(ids, Seq("id"), "left_semi").isEmpty) return
     // an orphaned certificate is invalid state here too (see deleteEdges)
     if (hasForest(spark, name) && !hasComponents(spark, name))
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_forest")
+      family.invalidate(spark, name, Seq("forest"))
     // FAST-ERASE GUARD (certificate maintained): when NO deleted id is
     // a component label (no row's `component` names it — labels are
     // component minima, so survivors' labels cannot move) and EVERY
@@ -942,15 +885,15 @@ object GraphIO {
     // The degree table's defining aggregate ranges over the kept edges
     // only; removed endpoints whose counts reach zero drop their row.
     applyEdgeRemoval(spark, name, removed, kept)
-    writeTable(spark, name, "vertices", keptV)
+    family.write(spark, name, "vertices", keptV)
     if (repairComponents) {
       if (fastErase) {
         // the erased rows just LEAVE both narrow tables: labels and
         // connectivity of every survivor are provably unchanged (see
         // the guard above), so no CC runs at all
-        writeTable(spark, name, "components",
+        family.write(spark, name, "components",
           readComponents(spark, name).join(ids, Seq("id"), "left_anti"))
-        writeTable(spark, name, "forest", readForest(spark, name)
+        family.write(spark, name, "forest", readForest(spark, name)
           .join(ids.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(ids.select(col("id").as("dst")), Seq("dst"), "left_anti")
           // USING joins FRONT their keys — restore the stored column
@@ -965,7 +908,7 @@ object GraphIO {
     // VALUES go stale until refreshRanks — documented — but the
     // subject's row must physically go)
     if (spark.catalog.tableExists(s"${name}_ranks"))
-      writeTable(spark, name, "ranks",
+      family.write(spark, name, "ranks",
         spark.table(s"${name}_ranks").join(ids, Seq("id"), "left_anti"))
   }
 
@@ -986,7 +929,7 @@ object GraphIO {
     if (removed.isEmpty) return
     // resolved before the concurrent pair: the degree write must not
     // read the edge table's bucket count while the edge swap replaces it
-    val buckets = Some(familyBuckets(spark, name))
+    val buckets = Some(family.bucketCount(spark, name))
     // LAZY: reads the live degree table inside its own staged write
     val merged = readDegrees(spark, name).as("o")
       .join(degreesOf(removed).as("d"), Seq("id"), "left")
@@ -1008,26 +951,20 @@ object GraphIO {
     // session-wide, so the worker thread sees it)
     withSubsetKeyCoPartition(spark) {
       inParallel(
-        () => writeTable(spark, name, "edges", kept, buckets = buckets),
-        () => writeTable(spark, name, "degrees", merged, buckets = buckets))
+        () => family.write(spark, name, "edges", kept, buckets = buckets),
+        () => family.write(spark, name, "degrees", merged, buckets = buckets))
     }
   }
 
   /** The burst opt-out's loud invalidation: a silently-stale label
     * table is worse than a missing one — run [[buildComponents]] after
-    * the burst. */
-  private def invalidateComponents(spark: SparkSession, name: String): Unit = {
-    if (hasComponents(spark, name))
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_components")
-    // the certificate is coupled to the component table it guards — kept
-    // past the opt-out it would go stale on the next cut; rebuild both
-    // with buildComponents + buildForest after the burst
-    if (hasForest(spark, name))
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_forest")
-    // with BOTH tables gone there is no pair left to distrust — a
-    // pending-refresh marker would only poison the post-burst rebuild
-    clearRefreshPending(spark, name)
-  }
+    * the burst. The certificate is coupled to the component table it
+    * guards (kept past the opt-out it would go stale on the next cut;
+    * rebuild both with buildComponents + buildForest after the burst),
+    * and with BOTH tables gone there is no pair left to distrust — a
+    * pending-refresh marker would only poison the post-burst rebuild. */
+  private def invalidateComponents(spark: SparkSession, name: String): Unit =
+    family.invalidate(spark, name, Seq("components", "forest", "refresh_pending"))
 
   /** The component labels a delete batch touches, or None when no
     * component table is maintained. `endpointIds` is batch-sized (one
@@ -1087,7 +1024,7 @@ object GraphIO {
         labelsFor(survivors, subEdges)
       }
     // LAZY: the staged write reads the live component table
-    writeTable(spark, name, "components",
+    family.write(spark, name, "components",
       comp.join(lbl, comp("component") === lbl("_lbl"), "left_anti")
         .unionByName(repaired))
   }
@@ -1199,7 +1136,7 @@ object GraphIO {
         .select(col("src").as("_pa"), col("dst").as("_pb")))
     val splice = spanPieces.join(rep, Seq("_pa", "_pb"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-    writeTable(spark, name, "forest", keptForest.unionByName(splice))
+    family.write(spark, name, "forest", keptForest.unionByName(splice))
     val grp = broadcastIfSmall(pieceMerge
       .select(col("id").as("_piece"), col("component").as("_grp"))
       .localCheckpoint())
@@ -1221,8 +1158,8 @@ object GraphIO {
     * exchange-free pass (the aggregates key on the bucketed `src`/`dst`
     * — only the full-outer merge shuffles, and only vertex-sized
     * frames). */
-  def refreshDegrees(spark: SparkSession, name: String): Unit = mutate(spark, name) {
-    writeTable(spark, name, "degrees", degreesOf(spark.table(s"${name}_edges")))
+  def refreshDegrees(spark: SparkSession, name: String): Unit = family.mutate(spark, name) {
+    family.write(spark, name, "degrees", degreesOf(spark.table(s"${name}_edges")))
   }
 
   /** Build the opt-in maintained PAGERANK table `<name>_ranks` — the
@@ -1243,10 +1180,12 @@ object GraphIO {
   def buildRanks(
       spark: SparkSession, name: String,
       damping: Double = 0.85, maxIterations: Int = 10,
-      tolerance: Option[Double] = None): Int = mutate(spark, name) {
+      tolerance: Option[Double] = None): Int = family.mutate(spark, name) {
     val g = readBucketed(spark, name)
     val pr = rankEngine(damping, maxIterations, tolerance)
-    writeRanks(spark, name, pr.run(g))
+    // PageRank's result is already pinned by its per-round checkpoint
+    // policy; the staged write never reads the live rank table anyway
+    family.write(spark, name, "ranks", pr.run(g))
     pr.lastIterations
   }
 
@@ -1265,10 +1204,10 @@ object GraphIO {
   def refreshRanks(
       spark: SparkSession, name: String,
       damping: Double = 0.85, maxIterations: Int = 10,
-      tolerance: Option[Double] = Some(1e-9)): Int = mutate(spark, name) {
+      tolerance: Option[Double] = Some(1e-9)): Int = family.mutate(spark, name) {
     val g = readBucketed(spark, name)
     val pr = rankEngine(damping, maxIterations, tolerance)
-    writeRanks(spark, name, pr.runFrom(g, readRanks(spark, name)))
+    family.write(spark, name, "ranks", pr.runFrom(g, readRanks(spark, name)))
     pr.lastIterations
   }
 
@@ -1278,11 +1217,6 @@ object GraphIO {
       // the routing table re-reads the bucketed edge layout with zero
       // exchange each round instead of re-shuffling a checkpointed copy
       staticCheckpoint = Some(graft.core.CheckpointPolicy.Passthrough))
-
-  // PageRank's result is already pinned by its per-round checkpoint
-  // policy; the staged write never reads the live rank table anyway
-  private def writeRanks(spark: SparkSession, name: String, ranks: DataFrame): Unit =
-    writeTable(spark, name, "ranks", ranks)
 
   /** Streaming face of [[appendEdges]] — continuous edge ingest into the
     * bucketed graph: each micro-batch folds through the same append path,
@@ -1313,39 +1247,32 @@ object GraphIO {
       bloatListener: Option[org.apache.spark.sql.Row => Unit] = None,
       retightenOnBloat: Boolean = false,
       maxRatio: Double = 1.5)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // foreachBatch runs on a CLONED session; the origin session that
-    // built the stream keeps reading these tables — refresh its cached
-    // listings after each mutating batch (CatalogTables.refreshTables)
-    val origin = rawEdges.sparkSession
-    rawEdges.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          appendEdges(spark, name, batch)
-          refreshFamily(origin, name)
-        }
-        // refreshPending gate (ADVICE r15): while an interrupted refresh
-        // holds the marker, the certificate is untrusted — a stats row
-        // over it would hand the listener phantom-witness "health" data,
-        // and a tripped rebuild would be dropped by the next trusting
-        // mutation anyway. Skip the cadence tick; resume once a completed
-        // refreshComponents clears the marker.
-        if (bloatCheckEvery > 0 && (batchId + 1) % bloatCheckEvery == 0 &&
-            (bloatListener.nonEmpty || retightenOnBloat) &&
-            spark.catalog.tableExists(s"${name}_forest") &&
-            !refreshPending(spark, name)) {
-          // ONE stats pass serves both the listener and the compaction
-          // decision; only an actual rebuild (rare by design) pays the
-          // guarded re-read inside retightenForestIfBloated
-          val s = forestStats(spark, name).head()
-          bloatListener.foreach(_(s))
-          if (retightenOnBloat && s.getAs[Double]("bloat_ratio") > maxRatio &&
-              retightenForestIfBloated(spark, name, maxRatio))
-            refreshFamily(origin, name)
-        }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    family.stream(rawEdges, name) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val appended = !batch.isEmpty
+      if (appended) appendEdges(spark, name, batch)
+      // refreshPending gate (ADVICE r15): while an interrupted refresh
+      // holds the marker, the certificate is untrusted — a stats row
+      // over it would hand the listener phantom-witness "health" data,
+      // and a tripped rebuild would be dropped by the next trusting
+      // mutation anyway. Skip the cadence tick; resume once a completed
+      // refreshComponents clears the marker.
+      val retightened =
+        bloatCheckEvery > 0 && (batchId + 1) % bloatCheckEvery == 0 &&
+          (bloatListener.nonEmpty || retightenOnBloat) &&
+          spark.catalog.tableExists(s"${name}_forest") &&
+          !refreshPending(spark, name) && {
+            // ONE stats pass serves both the listener and the compaction
+            // decision; only an actual rebuild (rare by design) pays the
+            // guarded re-read inside retightenForestIfBloated
+            val s = forestStats(spark, name).head()
+            bloatListener.foreach(_(s))
+            retightenOnBloat && s.getAs[Double]("bloat_ratio") > maxRatio &&
+              retightenForestIfBloated(spark, name, maxRatio)
+          }
+      appended || retightened
     }
-  }
 
   /** Streaming face of [[deleteEdges]] — the deletion side of a CDC
     * feed: each micro-batch removes the rows it names through the same
@@ -1354,20 +1281,10 @@ object GraphIO {
     * probe, no rewrite). Pair with [[appendEdgesStream]] on a routed
     * CDC stream: inserts to one sink, deletes to this one. */
   def deleteEdgesStream(rawEdges: DataFrame, name: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val origin = rawEdges.sparkSession
-    rawEdges.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          deleteEdges(batch.sparkSession, name, batch)
-          refreshFamily(origin, name)
-        }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    family.stream(rawEdges, name) { (batch, _) =>
+      !batch.isEmpty && { deleteEdges(batch.sparkSession, name, batch); true }
     }
-  }
-
-  /** Refresh every catalog table a persisted graph family can own. */
-  private def refreshFamily(spark: SparkSession, name: String): Unit =
-    CatalogTables.refreshTables(spark, layout.keys.map(t => s"${name}_$t").toSeq)
 
   /** Ingest a delimited edge-list text file (the SNAP/webgraph exchange
     * format): one `src<delim>dst` pair per line, `#` comment lines

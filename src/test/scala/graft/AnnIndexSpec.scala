@@ -258,4 +258,49 @@ class AnnIndexSpec extends SparkSpec {
     } finally Seq("centroids", "cells").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
   }
+
+  test("the cells table stays partitioned by cell through the whole lifecycle") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val items = corpus(120)
+    val name = "annidx_layout"
+    def dropAll(): Unit = Seq("centroids", "cells", "_epoch")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${name}_$t`"))
+    def checkLayout(step: String): Unit = {
+      val catalog = spark.sessionState.catalog
+      val cells = catalog.getTableMetadata(TableIdentifier(s"${name}_cells"))
+      assert(cells.partitionColumnNames === Seq("cell") && cells.bucketSpec.isEmpty,
+        s"after $step: ${name}_cells must stay partitioned by cell")
+      val centroids = catalog.getTableMetadata(TableIdentifier(s"${name}_centroids"))
+      assert(centroids.partitionColumnNames.isEmpty && centroids.bucketSpec.isEmpty,
+        s"after $step: ${name}_centroids stays plain")
+    }
+    def ids: Set[Long] =
+      AnnIndex.readPartitioned(spark, name).cells.select("id").as[Long].collect().toSet
+    dropAll()
+    try {
+      AnnIndex.writePartitioned(AnnIndex.build(items, "vec_id", "embedding", k = 4,
+        maxIterations = 4, fitSampleSize = 60,
+        checkpoint = graft.core.CheckpointPolicy.Passthrough), name)
+      checkLayout("writePartitioned")
+      val v = items.filter(col("vec_id") === 3L).select("embedding").head().getSeq[Float](0)
+      val stream = MemoryStream[(Long, Seq[Float])]
+      val ckpt = java.nio.file.Files.createTempDirectory("annidx_layout_ckpt").toString
+      val q = AnnIndex.appendStream(
+          stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", name)
+        .option("checkpointLocation", ckpt).start()
+      try { stream.addData((1003L, v)); q.processAllAvailable() } finally q.stop()
+      checkLayout("an appendStream batch")
+      assert(ids === (0L until 120L).toSet + 1003L)
+      AnnIndex.deletePartitioned(spark, name, Seq(5L, 1003L).toDF("vec_id"), "vec_id")
+      checkLayout("deletePartitioned")
+      assert(ids === (0L until 120L).toSet - 5L)
+      // any positive skew counts as drift: the rebuild always runs
+      assert(AnnIndex.rebuildPartitionedIfDrifted(spark, name, maxGrowthSkew = 0.0))
+      checkLayout("rebuildPartitionedIfDrifted")
+      assert(ids === (0L until 120L).toSet - 5L)
+    } finally dropAll()
+  }
 }

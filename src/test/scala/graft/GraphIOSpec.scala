@@ -1,7 +1,9 @@
 package graft
 
 import graft.algorithms.PageRank
-import graft.sources.GraphIO
+import graft.dedup.DedupIndex
+import graft.similarity.AnnIndex
+import graft.sources.{GraphIO, StoreFamily}
 
 class GraphIOSpec extends SparkSpec {
 
@@ -124,54 +126,88 @@ class GraphIOSpec extends SparkSpec {
       Seq(s"$t", s"${t}__staged").foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
   }
 
-  test("family epoch guard: mutations bump the generation; a concurrent commit aborts, tables intact") {
+  /** A persisted store under the family epoch-guard check: its table
+    * family, a `create` that commits the first generation, a `commit`
+    * that runs one real mutation (one generation per call), and the
+    * table an in-flight mutation tries to replace. */
+  private case class GuardedStore(
+      name: String, family: StoreFamily, table: String,
+      create: () => Unit, commit: () => Unit)
+
+  private def checkEpochGuard(store: GuardedStore): Unit = {
     import graft.sources.CatalogTables
-    val name = "epoch_g1"
-    def dropAll(): Unit =
-      Seq("_vertices", "_edges", "_degrees", "_components", "_ranks", "__epoch")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$name$t`"))
-    dropAll()
+    val name = store.name
+    val table = s"${name}_${store.table}"
+    store.family.drop(spark, name)
     try {
-      val g = Fixtures.sample1(spark, directed = true)
-      GraphIO.writeBucketed(g, name, buckets = 4)
+      store.create()
       assert(CatalogTables.familyEpoch(spark, name) === 1L,
         "initial build must advance the family from generation 0")
-      GraphIO.refreshDegrees(spark, name)
+      store.commit()
       assert(CatalogTables.familyEpoch(spark, name) === 2L,
         "every committed mutation bumps exactly once")
       // SECOND WRITER: while a guarded mutation is in flight, another
       // process commits (emulated by advancing the generation directly,
       // exactly what its final bump would do). The in-flight mutation's
       // next staged swap must abort BEFORE clobbering that commit.
-      val before = rowSet(spark.table(s"${name}_degrees"))
+      val before = rowSet(spark.table(table))
       val ex = intercept[java.util.ConcurrentModificationException] {
-        CatalogTables.withFamilyEpochGuard(spark, name) {
+        store.family.mutate(spark, name) {
           spark.sql(
             s"ALTER TABLE `${name}__epoch` SET TBLPROPERTIES('graft.epoch' = '3')")
-          CatalogTables.stagedOverwrite(spark, s"${name}_degrees") { t =>
-            spark.sql("SELECT CAST(1 AS BIGINT) AS id, CAST(99 AS BIGINT) AS out_degree, CAST(99 AS BIGINT) AS in_degree")
-              .write.saveAsTable(t)
-          }
+          store.family.write(spark, name, store.table, spark.table(table).limit(0))
         }
       }
       assert(ex.getMessage.contains("another writer"))
-      assert(rowSet(spark.table(s"${name}_degrees")) === before,
+      assert(rowSet(spark.table(table)) === before,
         "the aborted mutation must not have touched the data tables")
       assert(CatalogTables.familyEpoch(spark, name) === 3L,
         "the surviving writer's generation stands; the aborted one never bumped")
       // an INSERT-only mutation (no staged swap to check at) is caught
       // by the final check-and-bump instead
       val ex2 = intercept[java.util.ConcurrentModificationException] {
-        CatalogTables.withFamilyEpochGuard(spark, name) {
+        store.family.mutate(spark, name) {
           spark.sql(
             s"ALTER TABLE `${name}__epoch` SET TBLPROPERTIES('graft.epoch' = '9')")
         }
       }
       assert(ex2.getMessage.contains("another writer"))
       // and a clean guarded mutation still commits + bumps afterwards
-      GraphIO.refreshDegrees(spark, name)
+      store.commit()
       assert(CatalogTables.familyEpoch(spark, name) === 10L)
-    } finally dropAll()
+    } finally store.family.drop(spark, name)
+  }
+
+  test("family epoch guard: mutations bump the generation; a concurrent commit aborts, tables intact") {
+    val name = "epoch_g1"
+    checkEpochGuard(GuardedStore(name, GraphIO.family, "degrees",
+      create = () => GraphIO.writeBucketed(Fixtures.sample1(spark, directed = true), name, buckets = 4),
+      commit = () => GraphIO.refreshDegrees(spark, name)))
+  }
+
+  test("family epoch guard, dedup store: mergeBucketed bumps once; a concurrent commit aborts, tables intact") {
+    import spark.implicits._
+    val name = "epoch_d1"
+    val next = new java.util.concurrent.atomic.AtomicLong(100L)
+    def doc(id: Long) = Seq((id, s"document number $id about a topic of its own")).toDF("doc_id", "text")
+    checkEpochGuard(GuardedStore(name, DedupIndex.family, "shingles",
+      create = () => DedupIndex.writeBucketed(
+        DedupIndex.build(doc(1L).unionByName(doc(2L)), "doc_id", "text"), name, numBuckets = 4),
+      commit = () => DedupIndex.mergeBucketed(spark, name, doc(next.incrementAndGet()), "doc_id", "text")))
+  }
+
+  test("family epoch guard, ANN store: deletePartitioned bumps once; a concurrent commit aborts, tables intact") {
+    import spark.implicits._
+    val name = "epoch_a1"
+    val rnd = new scala.util.Random(7)
+    val vecs = (0L until 40L).map(i => (i, Seq.fill(4)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val next = new java.util.concurrent.atomic.AtomicLong(-1L)
+    checkEpochGuard(GuardedStore(name, AnnIndex.family, "cells",
+      create = () => AnnIndex.writePartitioned(AnnIndex.build(vecs, "vec_id", "embedding",
+        k = 2, maxIterations = 2, checkpoint = graft.core.CheckpointPolicy.Passthrough), name),
+      commit = () => AnnIndex.deletePartitioned(spark, name,
+        Seq(next.incrementAndGet()).toDF("vec_id"), "vec_id")))
   }
 
   test("epoch-conflict retry: the aborted mutation re-invokes cleanly; end state ≡ sequential A-then-B") {

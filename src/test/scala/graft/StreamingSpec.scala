@@ -361,7 +361,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("msidx_ckpt").toString
     val q = DedupIndex.mergeStream(
         stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        "msidx", numBuckets = 4)
+        "msidx")
       .option("checkpointLocation", ckpt)
       .start()
     try {
@@ -402,7 +402,7 @@ class StreamingSpec extends SparkSpec {
       val ckpt = java.nio.file.Files.createTempDirectory("bhidx_ckpt").toString
       val q = DedupIndex.mergeStream(
           stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          "bhidx", numBuckets = 4,
+          "bhidx",
           bucketCheckEvery = 1,
           bucketListener = Some(r => seen.synchronized { seen += r }),
           statsBucketCap = 4)
@@ -446,10 +446,10 @@ class StreamingSpec extends SparkSpec {
     try {
       DedupIndex.writeBucketed(
         DedupIndex.build(corpus, "doc_id", "text"), "dsidx", numBuckets = 4)
-      DedupIndex.buildNearClusters(spark, "dsidx", threshold = 0.4, numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, "dsidx", threshold = 0.4)
       val stream = MemoryStream[Long]
       val q = DedupIndex.deleteStream(
-          stream.toDF().toDF("doc_id"), "doc_id", "dsidx", numBuckets = 4)
+          stream.toDF().toDF("doc_id"), "doc_id", "dsidx")
         .option("checkpointLocation", ckpt)
         .start()
       try {

@@ -670,8 +670,8 @@ class TextDedupSpec extends SparkSpec {
     try {
       DedupIndex.writeBucketed(
         DedupIndex.build(base, "doc_id", "text"), name, numBuckets = 4)
-      DedupIndex.buildNearClusters(spark, name, threshold = 0.4, numBuckets = 4)
-      DedupIndex.mergeBucketed(spark, name, batch, "doc_id", "text", numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4)
+      DedupIndex.mergeBucketed(spark, name, batch, "doc_id", "text")
       val got = DedupIndex.readNearClusters(spark, name)
       val rebuilt = DedupIndex.readBucketed(spark, name).nearClusters(0.4)
       assert(rowSet(got) === rowSet(rebuilt),
@@ -696,7 +696,7 @@ class TextDedupSpec extends SparkSpec {
     try {
       DedupIndex.writeBucketed(
         DedupIndex.build(docs(1L -> tX, 2L -> tX), "doc_id", "text"), name, numBuckets = 4)
-      DedupIndex.buildNearClusters(spark, name, threshold = 0.4, numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4)
       DedupIndex.writeBucketed(
         DedupIndex.build(docs(3L -> "kk ll mm nn oo pp qq rr ss tt",
           4L -> "completely separate text about something else entirely here"),
@@ -706,9 +706,9 @@ class TextDedupSpec extends SparkSpec {
       assert(!spark.catalog.tableExists(s"${name}_nclmeta"))
       // so a merge advances nothing, and a rebuild closes the stored index
       DedupIndex.mergeBucketed(spark, name, docs(5L -> "uu vv ww xx yy zz ab cd ef gh"),
-        "doc_id", "text", numBuckets = 4)
+        "doc_id", "text")
       assert(!spark.catalog.tableExists(s"${name}_nearclusters"))
-      DedupIndex.buildNearClusters(spark, name, threshold = 0.4, numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4)
       assert(rowSet(DedupIndex.readNearClusters(spark, name)) ===
         Set(Seq(3L, 3L), Seq(4L, 4L), Seq(5L, 5L)))
     } finally dropAll()
@@ -726,18 +726,17 @@ class TextDedupSpec extends SparkSpec {
       DedupIndex.writeBucketed(
         DedupIndex.build(docs(1L -> "aa bb cc dd ee ff gg hh ii jj"),
           "doc_id", "text"), name, numBuckets = 4)
-      DedupIndex.buildNearClusters(spark, name, threshold = 0.4, numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4)
       // the signature of a buildNearClusters interrupted between its two
       // staged writes: clusters committed, parameters missing. Advancing
       // silently would leave readNearClusters serving a stale table.
       spark.sql(s"DROP TABLE ${name}_nclmeta")
       val batch = docs(2L -> "kk ll mm nn oo pp qq rr ss tt")
       val ex = intercept[IllegalStateException](
-        DedupIndex.mergeBucketed(spark, name, batch, "doc_id", "text", numBuckets = 4))
+        DedupIndex.mergeBucketed(spark, name, batch, "doc_id", "text"))
       assert(ex.getMessage.contains("buildNearClusters"))
       val ex2 = intercept[IllegalStateException](
-        DedupIndex.deleteBucketed(spark, name, Seq(1L).toDF("doc_id"), "doc_id",
-          numBuckets = 4))
+        DedupIndex.deleteBucketed(spark, name, Seq(1L).toDF("doc_id"), "doc_id"))
       assert(ex2.getMessage.contains("buildNearClusters"))
     } finally dropAll()
   }
@@ -828,9 +827,9 @@ class TextDedupSpec extends SparkSpec {
     try {
       DedupIndex.writeBucketed(
         DedupIndex.build(corpus, "doc_id", "text", bands = 64), name, numBuckets = 4)
-      DedupIndex.buildNearClusters(spark, name, threshold = 0.25, numBuckets = 4)
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.25)
       DedupIndex.deleteBucketed(spark, name,
-        Seq(20L, 1L).toDF("doc_id"), "doc_id", numBuckets = 4)
+        Seq(20L, 1L).toDF("doc_id"), "doc_id")
       val idx = DedupIndex.readBucketed(spark, name)
       val rebuilt = DedupIndex.build(
         docs(2L -> tX, 5L -> tY,
@@ -843,9 +842,74 @@ class TextDedupSpec extends SparkSpec {
         rowSet(idx.nearClusters(0.25)))
       // a no-op delete touches nothing (the redelivery guard)
       DedupIndex.deleteBucketed(spark, name,
-        Seq(20L, 1L).toDF("doc_id"), "doc_id", numBuckets = 4)
+        Seq(20L, 1L).toDF("doc_id"), "doc_id")
       assert(rowSet(DedupIndex.readBucketed(spark, name).clusters) ===
         rowSet(rebuilt.clusters))
+    } finally dropAll()
+  }
+
+  test("every table of a dedup index keeps its declared bucket spec through the lifecycle") {
+    import graft.dedup.DedupIndex
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    val tX = "aa bb cc dd ee ff gg hh ii jj"
+    val name = "ncl_layout"
+    val declared = Map(
+      "clusters" -> None,
+      "shingles" -> Some(BucketSpec(4, Seq("id"), Seq("id"))),
+      "buckets" -> Some(BucketSpec(4, Seq("band", "bucket"), Seq("band", "bucket"))),
+      "meta" -> None,
+      "nearclusters" -> Some(BucketSpec(4, Seq("id"), Seq("id"))),
+      "nclmeta" -> None)
+    def dropAll(): Unit = (declared.keys.toSeq :+ "_epoch")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${name}_$t`"))
+    dropAll()
+    try {
+      DedupIndex.writeBucketed(DedupIndex.build(
+        docs(1L -> tX, 2L -> "kk ll mm nn oo pp qq rr ss tt"), "doc_id", "text"),
+        name, numBuckets = 4)
+      // every maintenance face runs at the index's own bucket count
+      DedupIndex.buildNearClusters(spark, name, threshold = 0.4)
+      DedupIndex.mergeBucketed(spark, name,
+        docs(3L -> tX, 4L -> "aa bb cc dd ee ff gg hh ii zz"), "doc_id", "text")
+      DedupIndex.deleteBucketed(spark, name, Seq(2L).toDF("doc_id"), "doc_id")
+      val family = spark.catalog.listTables().collect().map(_.name)
+        .filter(t => t.startsWith(s"${name}_") && !t.endsWith("__epoch")).toSet
+      assert(family === declared.keySet.map(t => s"${name}_$t"))
+      declared.foreach { case (t, spec) =>
+        assert(spark.sessionState.catalog
+          .getTableMetadata(TableIdentifier(s"${name}_$t")).bucketSpec === spec, s"${name}_$t")
+      }
+      assert(rowSet(DedupIndex.readNearClusters(spark, name)) ===
+        rowSet(DedupIndex.readBucketed(spark, name).nearClusters(0.4)))
+    } finally dropAll()
+  }
+
+  test("writeBucketed(readBucketed(name), name) rewrites a stored dedup index in place") {
+    import graft.dedup.DedupIndex
+    val name = "didx_self"
+    def dropAll(): Unit = Seq("clusters", "shingles", "buckets", "meta", "_epoch")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${name}_$t`"))
+    dropAll()
+    try {
+      val idx = DedupIndex.build(docs(
+        1L -> "aa bb cc dd ee ff gg hh ii jj", 2L -> "aa bb cc dd ee ff gg hh ii jj",
+        3L -> "aa bb cc dd ee ff gg hh ii zz", 4L -> "kk ll mm nn oo pp qq rr ss tt"),
+        "doc_id", "text")
+      DedupIndex.writeBucketed(idx, name, numBuckets = 4)
+      val first = DedupIndex.readBucketed(spark, name)
+      val (clusters, shingles, buckets) =
+        (rowSet(first.clusters), rowSet(first.shingles), rowSet(first.buckets))
+      assert(clusters === rowSet(idx.clusters) && shingles === rowSet(idx.shingles))
+      // the new contents are read from the very tables they replace
+      DedupIndex.writeBucketed(DedupIndex.readBucketed(spark, name), name, numBuckets = 4)
+      val back = DedupIndex.readBucketed(spark, name)
+      assert((back.shingleSize, back.numHashes, back.bands) ===
+        ((idx.shingleSize, idx.numHashes, idx.bands)))
+      assert(rowSet(back.clusters) === clusters)
+      assert(rowSet(back.shingles) === shingles)
+      assert(rowSet(back.buckets) === buckets)
     } finally dropAll()
   }
 
