@@ -48,11 +48,10 @@ object Als {
       ratings: DataFrame,
       iterations: Int = 2,
       lambda: Long = 1L,
-      scale: Long = 10000L,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      scale: Long = 10000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(scale >= 1L && lambda >= 0L, "scale >= 1 and lambda >= 0")
-    val r = checkpoint.pin(ratings.select(
+    val r = CheckpointPolicy.pin(ratings.select(
       col("user"), col("item"), col("rating").cast("long").as("r")))
     val S = scale
     val lamS = lambda * S
@@ -70,13 +69,13 @@ object Als {
         .select(col("id"),
           expr(s"($S * _num) div ($lamS + _den)").as("f"))
 
-    var items = checkpoint.pin(
+    var items = CheckpointPolicy.pin(
       r.select(col("item").as("id")).distinct().withColumn("f", lit(S)))
     var users: DataFrame = null
     var i = 0
     while (i < iterations) {
-      users = checkpoint.pin(halfStep(items, "item", "user"))
-      items = checkpoint.pin(halfStep(users, "user", "item"))
+      users = CheckpointPolicy.pin(halfStep(items, "item", "user"))
+      items = CheckpointPolicy.pin(halfStep(users, "user", "item"))
       i += 1
     }
     users.select(col("id"), lit("user").as("side"), col("f").as("factor"))
@@ -103,11 +102,10 @@ object Als {
       ratings: DataFrame,
       rounds: Int = 2,
       lambda: Long = 5L,
-      scale: Long = 10000L,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      scale: Long = 10000L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(scale >= 1L && lambda >= 0L, "scale >= 1 and lambda >= 0")
-    val r = checkpoint.pin(ratings.select(
+    val r = CheckpointPolicy.pin(ratings.select(
       col("user"), col("item"), col("rating").cast("long").as("r")))
     val gRow = r.agg(sum(col("r")), count(lit(1))).head()
     require(gRow.getLong(1) > 0L, "bias baseline needs at least one rating")
@@ -121,13 +119,13 @@ object Als {
           count(lit(1)).as("_n"))
         .select(col("id"), expr(s"_s div ($lambda + _n)").as("b"))
 
-    var bi = checkpoint.pin(
+    var bi = CheckpointPolicy.pin(
       r.select(col("item").as("id")).distinct().withColumn("b", lit(0L)))
     var bu: DataFrame = null
     var i = 0
     while (i < rounds) {
-      bu = checkpoint.pin(halfStep(bi, "item", "user"))
-      bi = checkpoint.pin(halfStep(bu, "user", "item"))
+      bu = CheckpointPolicy.pin(halfStep(bi, "item", "user"))
+      bi = CheckpointPolicy.pin(halfStep(bu, "user", "item"))
       i += 1
     }
     val spark = ratings.sparkSession
@@ -186,22 +184,21 @@ object Als {
       lambdaBias: Long = 5L,
       lambdaFactor: Long = 1L,
       scale: Long = 10000L,
-      residUnit: Long = 100L,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      residUnit: Long = 100L): DataFrame = {
     require(residUnit >= 1L && scale % residUnit == 0L,
       "residUnit must divide scale")
-    val r = checkpoint.pin(ratings.select(
+    val r = CheckpointPolicy.pin(ratings.select(
       col("user"), col("item"), col("rating").cast("long").as("r")))
-    val biases = biasBaselineExact(ratings, biasRounds, lambdaBias, scale, checkpoint)
+    val biases = biasBaselineExact(ratings, biasRounds, lambdaBias, scale)
     val mu = biases.filter(col("side") === "global").head().getAs[Long]("bias")
     val bu = biases.filter(col("side") === "user")
       .select(col("id").as("user"), col("bias").as("_bu"))
     val bi = biases.filter(col("side") === "item")
       .select(col("id").as("item"), col("bias").as("_bi"))
-    val withBias = checkpoint.pin(r.join(bu, Seq("user")).join(bi, Seq("item")))
+    val withBias = CheckpointPolicy.pin(r.join(bu, Seq("user")).join(bi, Seq("item")))
     val resid = withBias.select(col("user"), col("item"),
       expr(s"($scale * r - $mu - _bu - _bi) div $residUnit").as("rating"))
-    val factors = fitRank1Exact(resid, iterations, lambdaFactor, scale, checkpoint)
+    val factors = fitRank1Exact(resid, iterations, lambdaFactor, scale)
     val pu = factors.filter(col("side") === "user")
       .select(col("id").as("user"), col("factor").as("_pu"))
     val qi = factors.filter(col("side") === "item")
@@ -241,14 +238,13 @@ object Als {
       ratings: DataFrame,
       k: Int,
       iterations: Int = 5,
-      lambda: Double = 0.1,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local)
+      lambda: Double = 0.1)
       : (Dataset[Factor], Dataset[Factor]) = {
     require(k >= 1 && k <= 32, s"k must be in [1, 32], got $k")
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val spark = ratings.sparkSession
     import spark.implicits._
-    val r = checkpoint.pin(ratings.select(
+    val r = CheckpointPolicy.pin(ratings.select(
       col("user").cast("long"), col("item").cast("long"),
       col("rating").cast("double").as("r")))
 
@@ -293,12 +289,12 @@ object Als {
         }
     }
 
-    var items = checkpoint.pin(init("item").toDF()).as[Factor]
+    var items = CheckpointPolicy.pin(init("item").toDF()).as[Factor]
     var users: Dataset[Factor] = null
     var i = 0
     while (i < iterations) {
-      users = checkpoint.pin(solveSide(items, "item", "user").toDF()).as[Factor]
-      items = checkpoint.pin(solveSide(users, "user", "item").toDF()).as[Factor]
+      users = CheckpointPolicy.pin(solveSide(items, "item", "user").toDF()).as[Factor]
+      items = CheckpointPolicy.pin(solveSide(users, "user", "item").toDF()).as[Factor]
       i += 1
     }
     (users, items)

@@ -41,18 +41,17 @@ object Betweenness {
     * OTHER landmarks' sweeps only — δ_l(l) is excluded, as in Brandes).
     * Vertices reached by no landmark are omitted. */
   def landmark(
-      g: Graph, landmarks: Seq[Long], maxDepth: Int = 8,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      g: Graph, landmarks: Seq[Long], maxDepth: Int = 8): DataFrame = {
     require(landmarks.nonEmpty, "need at least one landmark")
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val spark = g.vertices.sparkSession
     import spark.implicits._
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .select(col(SRC), col(DST)).distinct())
 
     // ---- forward: per-level (landmark, id, sigma) ----------------------
-    var frontier = checkpoint.pin(
+    var frontier = CheckpointPolicy.pin(
       landmarks.toDF("landmark")
         .select(col("landmark"), col("landmark").as(ID), lit(1L).as("sigma")))
     var visited = frontier.select(col("landmark"), col(ID))
@@ -61,7 +60,7 @@ object Betweenness {
     var exhausted = false
     while (depth < maxDepth && !exhausted) {
       depth += 1
-      val nxt = checkpoint.pin(
+      val nxt = CheckpointPolicy.pin(
         frontier.join(edges, frontier(ID) === edges(SRC))
           .select(col("landmark"), edges(DST).as(ID), col("sigma"))
           .groupBy(col("landmark"), col(ID))
@@ -70,7 +69,7 @@ object Betweenness {
       if (nxt.isEmpty) exhausted = true
       else {
         levels += nxt
-        visited = checkpoint.pin(
+        visited = CheckpointPolicy.pin(
           visited.unionByName(nxt.select(col("landmark"), col(ID))))
         frontier = nxt
       }
@@ -78,7 +77,7 @@ object Betweenness {
 
     // ---- backward: δ per level, deepest first --------------------------
     // lower = (landmark, id, sigma, delta) of level k+1
-    var lower = checkpoint.pin(levels.last.withColumn("delta", lit(0.0)))
+    var lower = CheckpointPolicy.pin(levels.last.withColumn("delta", lit(0.0)))
     val deps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     if (levels.size - 1 >= 1) deps += lower.select(col("landmark"), col(ID), col("delta"))
     var k = levels.size - 2
@@ -93,7 +92,7 @@ object Betweenness {
         .groupBy(col("landmark"), col("_u"))
         .agg(sum(col("_su").cast("double") / col("_sw") * (lit(1.0) + col("_dw")))
           .as("_dep"))
-      val cur = checkpoint.pin(
+      val cur = CheckpointPolicy.pin(
         levels(k)
           .join(dep.select(col("landmark"), col("_u").as(ID), col("_dep")),
             Seq("landmark", ID), "left")

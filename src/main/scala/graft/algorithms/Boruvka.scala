@@ -30,8 +30,7 @@ import graft.core.{CheckpointPolicy, Columns}
   * checkpoint-pinned, so lineage stays flat over the ≤ log₂(V) rounds.
   */
 case class Boruvka(
-    maxRounds: Int = 8,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    maxRounds: Int = 8) {
   import Columns._
 
   /** @param edges undirected weighted rows (`src`, `dst`, `weightCol`);
@@ -46,7 +45,7 @@ case class Boruvka(
     val guarded = when(col(weightCol).isNull,
       raise_error(lit(s"Boruvka: weight column '$weightCol' must be non-null")))
       .otherwise(col(weightCol))
-    val canon = checkpoint.pin(edges
+    val canon = CheckpointPolicy.pin(edges
       .select(
         least(col(SRC), col(DST)).as(SRC),
         greatest(col(SRC), col(DST)).as(DST),
@@ -54,7 +53,7 @@ case class Boruvka(
       .filter(col(SRC) =!= col(DST))
       .groupBy(col(SRC), col(DST)).agg(min(col(weightCol)).as(weightCol)))
 
-    var comp = checkpoint.pin(
+    var comp = CheckpointPolicy.pin(
       canon.select(col(SRC).as(ID)).union(canon.select(col(DST).as(ID)))
         .distinct()
         .select(col(ID), col(ID).as(COMPONENT)))
@@ -65,7 +64,7 @@ case class Boruvka(
     var done = false
     while (round < maxRounds && !done) {
       round += 1
-      val (live, liveCount) = checkpoint.pinObserved(
+      val (live, liveCount) = CheckpointPolicy.pinObserved(
         canon
           .join(comp.select(col(ID).as(SRC), col(COMPONENT).as("_ca")), SRC)
           .join(comp.select(col(ID).as(DST), col(COMPONENT).as("_cb")), DST)
@@ -77,7 +76,7 @@ case class Boruvka(
           col(weightCol), col(SRC), col(DST), col("_ca"), col("_cb")).as("_cand")
         val both = live.select(col("_ca").as("_c"), cand)
           .unionAll(live.select(col("_cb").as("_c"), cand))
-        val sel = checkpoint.pin(both
+        val sel = CheckpointPolicy.pin(both
           .groupBy(col("_c")).agg(min(col("_cand")).as("_m"))
           .select(
             col(s"_m.$SRC").as(SRC), col(s"_m.$DST").as(DST),
@@ -91,7 +90,7 @@ case class Boruvka(
         // unconverged labels would silently corrupt the forest
         val cc = AlternatingConnectedComponents.minLabels(sel, "_ca", "_cb")
           .select(col(ID).as("_oc"), col(COMPONENT).as("_nc"))
-        comp = checkpoint.pin(
+        comp = CheckpointPolicy.pin(
           comp.join(cc, col(COMPONENT) === col("_oc"), "left")
             .select(col(ID),
               coalesce(col("_nc"), col(COMPONENT)).as(COMPONENT)))
@@ -99,6 +98,6 @@ case class Boruvka(
     }
     require(done, s"Boruvka: components still merging after $maxRounds " +
       "rounds; raise maxRounds (the bound is log2(|V|))")
-    checkpoint.pin(forest)
+    CheckpointPolicy.pin(forest)
   }
 }

@@ -14,15 +14,14 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   * edge reuse (paths are walks without repeated edges), matching the
   * reference. Undirected graphs traverse the symmetric edge closure.
   *
-  * Hardening vs the reference: the frontier is `localCheckpoint`ed per hop
+  * Hardening vs the reference: the frontier is pinned per hop
   * (the reference's plan grows by one join per hop with no persistence).
   */
 final case class BreadthFirstSearch(
     startExpr: Column,
     endExpr: Column,
     edgeExpr: Column = lit(true),
-    maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    maxIterations: Int = 10) {
   import Columns._
 
   val resultSchema: StructType = StructType(Seq(
@@ -68,7 +67,7 @@ final case class BreadthFirstSearch(
           col(DST).as(HORIZON),
           array_append(col(EDGES), col(EDGE_ID)).as(EDGES),
           array_append(col(VERTICES), col(DST)).as(VERTICES))
-      paths = checkpoint.pin(paths)
+      paths = CheckpointPolicy.pin(paths)
       i += 1
     }
     empty // max_iterations exhausted (bfs.py:63-65)
@@ -104,14 +103,12 @@ object BreadthFirstSearch {
     * the same two sweeps. */
   def pseudoDiameter(
       g: Graph,
-      maxIterations: Int = 30,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      maxIterations: Int = 30): DataFrame = {
     val startRow = g.vertices.agg(min(col(ID))).head()
     require(!startRow.isNullAt(0), "pseudoDiameter needs a non-empty graph")
     val start = startRow.getLong(0)
     def farthest(from: Long): Row =
-      distances(g, col(ID) === from, maxIterations = maxIterations,
-        checkpoint = checkpoint)
+      distances(g, col(ID) === from, maxIterations = maxIterations)
         .orderBy(col("dist").desc, col(ID))
         .head()
     val sweep1 = farthest(start)
@@ -169,7 +166,6 @@ object BreadthFirstSearch {
       roots: DataFrame,
       edges: DataFrame,
       maxIterations: Int = 64,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       totalVertices: Option[Long] = None): Option[DataFrame] = {
     val sym = edges.select(col(SRC), col(DST))
       .union(edges.select(col(DST).as(SRC), col(SRC).as(DST)))
@@ -177,7 +173,7 @@ object BreadthFirstSearch {
       .repartition(col(SRC))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      var visited = checkpoint.pin(roots.select(col(ID)).distinct())
+      var visited = CheckpointPolicy.pin(roots.select(col(ID)).distinct())
       var visitedN = visited.count()
       var frontier = visited
       var frontierN = visitedN
@@ -187,7 +183,7 @@ object BreadthFirstSearch {
       var declined = false
       while (!declined && depth < maxIterations && frontierN > 0L) {
         depth += 1
-        val reached = checkpoint.pin(
+        val reached = CheckpointPolicy.pin(
           sym.join(frontier.select(col(ID).as(SRC)), SRC)
             .groupBy(col(DST).as(ID)).agg(min(col(SRC)).as("_parent"))
             .join(visited, Seq(ID), "left_anti"))
@@ -227,7 +223,7 @@ object BreadthFirstSearch {
           .isEmpty
       }
       if (incomplete) None
-      else Some(checkpoint.pin(forest))
+      else Some(CheckpointPolicy.pin(forest))
     } finally sym.unpersist(blocking = false)
   }
 
@@ -235,10 +231,9 @@ object BreadthFirstSearch {
       g: Graph,
       startExpr: Column,
       edgeExpr: Column = lit(true),
-      maxIterations: Int = 30,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      maxIterations: Int = 30): DataFrame = {
     val DIST = "dist"
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .filter(edgeExpr).select(col(SRC), col(DST)))
     // `visited` is a LAZY UNION of the pinned per-depth frontiers
@@ -248,13 +243,13 @@ object BreadthFirstSearch {
     // (each frame is already materialized), the plan depth grows only
     // linearly in maxIterations, and the returned frame is the same
     // row set.
-    var visited = checkpoint.pin(
+    var visited = CheckpointPolicy.pin(
       g.vertices.filter(startExpr).select(col(ID), lit(0).as(DIST)))
     var frontier = visited
     var depth = 0
     while (depth < maxIterations && !frontier.isEmpty) {
       depth += 1
-      frontier = checkpoint.pin(
+      frontier = CheckpointPolicy.pin(
         frontier.join(edges, frontier(ID) === edges(SRC))
           .select(edges(DST).as(ID)).distinct()
           .join(visited, Seq(ID), "left_anti")

@@ -32,10 +32,9 @@ object Closeness {
     */
   def harmonic(
       g: Graph, landmarks: Seq[Long], maxIterations: Int = 15,
-      scale: Long = HarmonicScale,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      scale: Long = HarmonicScale): DataFrame = {
     import Columns._
-    ShortestPaths(landmarks, maxIterations, checkpoint).run(g)
+    ShortestPaths(landmarks, maxIterations).run(g)
       .select(col(ID), explode(col("distances")).as(Seq("landmark", "dist")))
       .filter(col("dist") > 0)
       .groupBy(col(ID))

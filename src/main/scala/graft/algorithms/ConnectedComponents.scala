@@ -15,8 +15,7 @@ import graft.pregel.Pregel
   * which forward min-propagation is not); we keep the reference behavior.
   */
 final case class ConnectedComponents(
-    maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    maxIterations: Int = 10) {
   import Columns._
 
   def run(g: Graph): DataFrame =
@@ -26,8 +25,7 @@ final case class ConnectedComponents(
       msgToSrc = if (g.directed) None else Some(col(STATE)),
       msgToDst = Some(col(STATE)),
       updateExpr = Some(least(col(MSG), col(STATE))),
-      maxIterations = maxIterations,
-      checkpoint = checkpoint)
+      maxIterations = maxIterations)
       .run(g)
       .select(col(ID), col(STATE).as(COMPONENT))
 }
@@ -41,7 +39,7 @@ final case class ConnectedComponents(
   * scale path for huge graphs.
   *
   * Two hardening changes vs the reference:
-  *  - per-round `localCheckpoint` (the reference's edge plan grows per round);
+  *  - per-round pin (the reference's edge plan grows per round);
   *  - convergence is detected with a (count, xor-of-hashes) fingerprint of
   *    the edge set instead of `sum(dst)` alone (collision-prone, and a long
   *    sum overflows under ANSI mode; xor over a distinct set is exact,
@@ -54,7 +52,6 @@ final case class ConnectedComponents(
   */
 final case class AlternatingConnectedComponents(
     maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
     requireConvergence: Boolean = true) {
   import Columns._
 
@@ -100,7 +97,7 @@ final case class AlternatingConnectedComponents(
     while (i < maxIterations && !converged) {
       i += 1
       // the fingerprint is observed on the pinning pass itself
-      val (pinned, fp) = checkpoint.pinObserved(smallStar(largeStar(edges)).distinct(),
+      val (pinned, fp) = CheckpointPolicy.pinObserved(smallStar(largeStar(edges)).distinct(),
         s"star cc round $i")(count(lit(1)), bit_xor(xxhash64(col(SRC), col(DST))))
       edges = pinned
       val cur = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))

@@ -25,8 +25,7 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   * in-edges hold score 0 and cost nothing per round.
   */
 final case class EigenvectorCentrality(
-    maxIterations: Int = 5,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    maxIterations: Int = 5) {
   import Columns._
 
   /** Output: (id, score), L2-normalized. */
@@ -34,17 +33,17 @@ final case class EigenvectorCentrality(
     // distinct endpoint pairs: symmetricEdges dedups (src, dst, edge_id),
     // so a reciprocal directed pair would survive as two rows and double
     // its contribution to the sums
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .select(col(SRC), col(DST)).distinct())
     val verts = g.vertices.select(col(ID))
 
-    var x = checkpoint.pin(verts.select(col(ID), lit(1.0).as("score")))
+    var x = CheckpointPolicy.pin(verts.select(col(ID), lit(1.0).as("score")))
     var i = 0
     while (i < maxIterations) {
       // the pin observes the squared L2 norm in the same pass; the
       // normalized vector stays a lazy narrow join over the pinned gather
-      val (raw, sq) = checkpoint.pinObserved(x.join(edges, x(ID) === edges(SRC))
+      val (raw, sq) = CheckpointPolicy.pinObserved(x.join(edges, x(ID) === edges(SRC))
         .groupBy(col(DST).as(ID))
         .agg(sum(col("score")).as("_s")),
         s"eigenvector round ${i + 1}")(CheckpointPolicy.exactSum(col("_s") * col("_s")))

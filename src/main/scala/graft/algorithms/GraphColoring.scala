@@ -32,7 +32,6 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   *        (the [[graft.pregel.Pregel.superstepListener]] pattern). */
 case class GraphColoring(
     maxRounds: Int = 30,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
     roundListener: Option[(Int, Long) => Unit] = None) {
   import Columns._
 
@@ -56,13 +55,13 @@ case class GraphColoring(
   /** @return (id, color) with colors 0..; adjacent vertices always
     *         differ (spec-pinned); isolated vertices take color 0. */
   def run(g: Graph): DataFrame = {
-    val sym = checkpoint.pin(
+    val sym = CheckpointPolicy.pin(
       (if (g.directed) g.edges.select(col(SRC), col(DST))
         .unionAll(g.edges.select(col(DST).as(SRC), col(SRC).as(DST)))
       else g.symmetricEdges.select(col(SRC), col(DST)))
         .filter(col(SRC) =!= col(DST)).distinct())
     val prio = graft.sketch.Kmv.portableHash(col(ID))
-    var state = checkpoint.pin(g.vertices
+    var state = CheckpointPolicy.pin(g.vertices
       .select(col(ID), prio.as("_p"), lit(null).cast("int").as("_color")))
 
     var round = 0
@@ -91,7 +90,7 @@ case class GraphColoring(
               sequence(lit(0), coalesce(size(col("_used")), lit(0))),
               k => !array_contains(coalesce(col("_used"),
                 array().cast("array<int>")), k))).as("_new"))
-        state = checkpoint.pin(
+        state = CheckpointPolicy.pin(
           state.join(colored, Seq(ID), "left")
             .select(col(ID), col("_p"),
               coalesce(col("_color"), col("_new")).as("_color")))
@@ -118,13 +117,13 @@ case class GraphColoring(
     * than strict JP (speculation is not sequential-greedy-equivalent).
     */
   def runSpeculative(g: Graph): DataFrame = {
-    val sym = checkpoint.pin(
+    val sym = CheckpointPolicy.pin(
       (if (g.directed) g.edges.select(col(SRC), col(DST))
         .unionAll(g.edges.select(col(DST).as(SRC), col(SRC).as(DST)))
       else g.symmetricEdges.select(col(SRC), col(DST)))
         .filter(col(SRC) =!= col(DST)).distinct())
     val prio = graft.sketch.Kmv.portableHash(col(ID))
-    var state = checkpoint.pin(g.vertices
+    var state = CheckpointPolicy.pin(g.vertices
       .select(col(ID), prio.as("_p"), lit(null).cast("int").as("_color")))
 
     var round = 0
@@ -143,7 +142,7 @@ case class GraphColoring(
         // pinned: the mex plan (collect_set join + lambda) feeds BOTH
         // sides of the conflict self-join and the winner set — without
         // the pin it would execute three times per round
-        val proposals = checkpoint.pin(unc.select(col(ID), col("_p"))
+        val proposals = CheckpointPolicy.pin(unc.select(col(ID), col("_p"))
           .join(nbrColors, Seq(ID), "left")
           .select(col(ID), col("_p"),
             array_min(filter(
@@ -160,7 +159,7 @@ case class GraphColoring(
           .select(col(SRC).as(ID)).distinct()
         val colored = proposals.join(losers, Seq(ID), "left_anti")
           .select(col(ID), col("_cand"))
-        state = checkpoint.pin(
+        state = CheckpointPolicy.pin(
           state.join(colored, Seq(ID), "left")
             .select(col(ID), col("_p"),
               coalesce(col("_color"), col("_cand")).as("_color")))

@@ -22,8 +22,7 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   * and no out-edges hold hub 0 — they cost nothing per round.
   */
 final case class Hits(
-    maxIterations: Int = 5,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    maxIterations: Int = 5) {
   import Columns._
 
   /** Output: (id, hub, authority), both scores L2-normalized. */
@@ -31,19 +30,19 @@ final case class Hits(
     // distinct endpoint pairs: symmetricEdges dedups (src, dst, edge_id),
     // so a reciprocal directed pair would survive as two rows and double
     // its contribution to the sums
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .select(col(SRC), col(DST)).distinct())
     val verts = g.vertices.select(col(ID))
 
-    var hub = checkpoint.pin(verts.select(col(ID), lit(1.0).as("hub")))
+    var hub = CheckpointPolicy.pin(verts.select(col(ID), lit(1.0).as("hub")))
     var auth: DataFrame = verts.select(col(ID), lit(0.0).as("authority"))
     var i = 0
     while (i < maxIterations) {
       // authority step: gather hub scores along in-edges; the pin
       // observes the squared L2 norm in the same pass. The normalized
       // frame stays a lazy narrow join over the pinned gather.
-      val (aRaw, aSq) = checkpoint.pinObserved(hub.join(edges, hub(ID) === edges(SRC))
+      val (aRaw, aSq) = CheckpointPolicy.pinObserved(hub.join(edges, hub(ID) === edges(SRC))
         .groupBy(col(DST).as(ID))
         .agg(sum(col("hub")).as("_a")),
         s"hits round ${i + 1} authority")(CheckpointPolicy.exactSum(col("_a") * col("_a")))
@@ -54,7 +53,7 @@ final case class Hits(
           (coalesce(col("_a"), lit(0.0)) / lit(aNorm)).as("authority"))
 
       // hub step: gather authority scores along out-edges (same shape)
-      val (hRaw, hSq) = checkpoint.pinObserved(auth.join(edges, auth(ID) === edges(DST))
+      val (hRaw, hSq) = CheckpointPolicy.pinObserved(auth.join(edges, auth(ID) === edges(DST))
         .groupBy(col(SRC).as(ID))
         .agg(sum(col("authority")).as("_h")),
         s"hits round ${i + 1} hub")(CheckpointPolicy.exactSum(col("_h") * col("_h")))

@@ -3,7 +3,7 @@ package graft.algorithms
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Columns, Graph}
+import graft.core.{CheckpointPolicy, Columns, Graph}
 import graft.sketch.Hll
 
 /** HyperBall / ANF: the neighbourhood function N(r) = Σ_v |B(v, r)| and
@@ -41,7 +41,7 @@ object HyperBall {
   /** Ball registers after every round 0..`rounds`: element k of the
     * result sketches B(v, k) for every vertex. Directed graphs grow
     * balls along OUT-edges; undirected graphs along both directions.
-    * Each round is localCheckpointed — the iteration reuses it and so
+    * Each round is pinned — the iteration reuses it and so
     * do all 0..k estimate consumers.
     */
   def ballRegisters(g: Graph, p: Int, rounds: Int): Seq[DataFrame] = {
@@ -52,13 +52,11 @@ object HyperBall {
     // contrib join — rounds × the whole edge-derivation cost (g63: 20
     // re-runs of an orders-scan + distinct). The Pregel/PageRank loops
     // already pin their loop-invariant edges; HyperBall now does too.
-    val prop = (
+    val prop = CheckpointPolicy.pin((
       if (g.directed) fwd
-      else fwd.union(g.edges.select(col(DST).as(SRC), col(SRC).as(DST))))
-      .localCheckpoint()
-    val init = Hll.registers(
-      g.vertices.select(col(ID)), Seq(ID), col(ID).cast("string"), p)
-      .localCheckpoint()
+      else fwd.union(g.edges.select(col(DST).as(SRC), col(SRC).as(DST)))))
+    val init = CheckpointPolicy.pin(Hll.registers(
+      g.vertices.select(col(ID)), Seq(ID), col(ID).cast("string"), p))
     var regs = init
     val out = Seq.newBuilder[DataFrame]
     out += init
@@ -66,9 +64,8 @@ object HyperBall {
       val contrib = prop
         .join(regs.select(col(ID).as(DST), col("bucket"), col("r")), Seq(DST))
         .select(col(SRC).as(ID), col("bucket"), col("r"))
-      regs = Hll.merge(regs.select(col(ID), col("bucket"), col("r"))
-        .union(contrib), Seq(ID))
-        .localCheckpoint()
+      regs = CheckpointPolicy.pin(Hll.merge(regs.select(col(ID), col("bucket"), col("r"))
+        .union(contrib), Seq(ID)))
       out += regs
     }
     out.result()

@@ -27,17 +27,16 @@ object KCore {
     * Works on the canonicalized undirected simple graph (self-loops
     * dropped, edges deduped). Returns empty when the k-core is empty. */
   def run(g: Graph, k: Int,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       maxIterations: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var edges = checkpoint.pin(GraphUtil.orderEdges(g.edges))
+    var edges = CheckpointPolicy.pin(GraphUtil.orderEdges(g.edges))
     var nEdges = edges.count()
     var i = 0
     var done = nEdges == 0L
     while (!done && i < maxIterations) {
       val deg = degreesOf(edges)
       val keep = deg.filter(col(DEGREE) >= k).select(col(ID))
-      val pruned = checkpoint.pin(edges
+      val pruned = CheckpointPolicy.pin(edges
         .join(keep.withColumnRenamed(ID, SRC), Seq(SRC), "left_semi")
         .join(keep.withColumnRenamed(ID, DST), Seq(DST), "left_semi"))
       val n = pruned.count()

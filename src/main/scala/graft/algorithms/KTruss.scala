@@ -49,24 +49,23 @@ object KTruss {
     * Convergence returns the round's ALREADY-COMPUTED support frame;
     * nothing is recomputed after the fixpoint. */
   def run(g: Graph, k: Int,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       maxIterations: Int = 100): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
-    var edges = checkpoint.pin(GraphUtil.orderEdges(g.edges).select(col(SRC), col(DST)))
+    var edges = CheckpointPolicy.pin(GraphUtil.orderEdges(g.edges).select(col(SRC), col(DST)))
     var nEdges = edges.count()
     if (nEdges == 0L) return supports(edges)
-    var sup = checkpoint.pin(supports(edges))
+    var sup = CheckpointPolicy.pin(supports(edges))
     var result: DataFrame = null
     var i = 0
     while (result == null && i < maxIterations) {
       // the filtered support frame IS next round's edge set AND the
       // final answer on convergence — pin it once, reuse for both
-      val keep = checkpoint.pin(sup.filter(col("support") >= k - 2))
+      val keep = CheckpointPolicy.pin(sup.filter(col("support") >= k - 2))
       val nKeep = keep.count()
       if (nKeep == nEdges || nKeep == 0L) result = keep
       else {
         val keepEdges = keep.select(col(SRC), col(DST))
-        sup = checkpoint.pin(
+        sup = CheckpointPolicy.pin(
           if ((nEdges - nKeep) * 4L > nKeep) supports(keepEdges)
           else decrementedSupports(
             keep, edges.join(keepEdges, Seq(SRC, DST), "left_anti"), edges))

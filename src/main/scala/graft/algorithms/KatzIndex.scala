@@ -22,24 +22,23 @@ import graft.matrix.CooMatrix
 final case class KatzIndex(
     beta: Double = 0.1,
     tolerance: Option[Double] = None,
-    maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    maxIterations: Int = 10) {
   import Columns._
 
   val INDEX = "katz_index"
 
   def run(g: Graph): DataFrame = {
-    val a = CooMatrix.adjacency(g).pinned(checkpoint)
+    val a = CooMatrix.adjacency(g).pinned()
     var power = a // A^k
     var sum = a.scale(beta) // Σ β^k A^k so far
     var betaK = beta
     var i = 1
     var done = false
     while (i < maxIterations && !done) {
-      power = power.multiply(a).pinned(checkpoint)
+      power = power.multiply(a).pinned()
       betaK *= beta
       val term = power.scale(betaK)
-      sum = sum.plus(term).pinned(checkpoint)
+      sum = sum.plus(term).pinned()
       done = tolerance.exists(t => term.maxAbs() < t)
       i += 1
     }

@@ -53,10 +53,9 @@ object Louvain {
     * self-loops through [[refineWeighted]]). `init` must be
     * (id, community). */
   def refine(
-      g: Graph, rounds: Int, init: Option[DataFrame] = None,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
-    refineCore(g.vertices, checkpoint.pin(canonSimple(g.edges)),
-      rounds, init, checkpoint)
+      g: Graph, rounds: Int, init: Option[DataFrame] = None): DataFrame =
+    refineCore(g.vertices, CheckpointPolicy.pin(canonSimple(g.edges)),
+      rounds, init)
 
   /** Canonical simple form of an edge list: self-loops dropped,
     * endpoints ordered, multi-edges collapsed, unit weight — the shared
@@ -77,14 +76,13 @@ object Louvain {
     * levels; a vertex never "moves to" a self-loop — it only anchors
     * the stay-home mass). */
   def refineWeighted(
-      g: Graph, weightCol: String, rounds: Int, init: Option[DataFrame] = None,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      g: Graph, weightCol: String, rounds: Int, init: Option[DataFrame] = None): DataFrame = {
     val canon = g.edges
       .select(least(col(SRC), col(DST)).as(SRC),
         greatest(col(SRC), col(DST)).as(DST),
         col(weightCol).cast("long").as("_w"))
       .groupBy(col(SRC), col(DST)).agg(sum(col("_w")).as("_w"))
-    refineCore(g.vertices, checkpoint.pin(canon), rounds, init, checkpoint)
+    refineCore(g.vertices, CheckpointPolicy.pin(canon), rounds, init)
   }
 
   /** Contract a labelling into its community graph: one supervertex per
@@ -170,8 +168,7 @@ object Louvain {
       g: Graph,
       maxLevels: Int = 4,
       roundsPerLevel: Int = 4,
-      minGain: Double = 0.0,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      minGain: Double = 0.0): DataFrame = {
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     // a finite NEGATIVE minGain would accept strictly-worse levels while
     // curQ ratchets downward — the returned labelling could then be
@@ -193,16 +190,16 @@ object Louvain {
     // the canonical simple edge frame is computed (and its distinct
     // shuffle paid) ONCE, then shared by the level-0 refine AND the
     // level-0 contraction — previously each re-derived it from g.edges
-    val canon0 = checkpoint.pin(canonSimple(g.edges))
-    var mapping = checkpoint.pin(
-      refineCore(g.vertices, canon0, roundsPerLevel, None, checkpoint))
+    val canon0 = CheckpointPolicy.pin(canonSimple(g.edges))
+    var mapping = CheckpointPolicy.pin(
+      refineCore(g.vertices, canon0, roundsPerLevel, None))
     var curQ = if (unconditional) 0.0 else q(mapping)
     var levelGraph = contractCanon(canon0, mapping)
     var level = 1
     var stop = false
     while (level < maxLevels && !stop) {
-      val commL = refineWeighted(levelGraph, "weight", roundsPerLevel, None, checkpoint)
-      val candidate = checkpoint.pin(
+      val commL = refineWeighted(levelGraph, "weight", roundsPerLevel, None)
+      val candidate = CheckpointPolicy.pin(
         mapping
           .join(commL.select(col(ID).as(COMMUNITY), col(COMMUNITY).as("_nc")),
             Seq(COMMUNITY))
@@ -246,16 +243,16 @@ object Louvain {
     * `_w`) and PINNED — every round's links join re-reads it. */
   private def refineCore(
       vertices: DataFrame, canon: DataFrame, rounds: Int,
-      init: Option[DataFrame], checkpoint: CheckpointPolicy): DataFrame = {
+      init: Option[DataFrame]): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val noself = canon.filter(col(SRC) =!= col(DST))
-    val sym = checkpoint.pin(
+    val sym = CheckpointPolicy.pin(
       noself.unionByName(
         noself.select(col(DST).as(SRC), col(SRC).as(DST), col("_w"))))
     val selfw = canon.filter(col(SRC) === col(DST))
       .select(col(SRC).as(ID), col("_w").as("_ws"))
     // weighted degree; self-loops count twice (2m = sum of all k)
-    val deg = checkpoint.pin(
+    val deg = CheckpointPolicy.pin(
       sym.groupBy(col(SRC).as(ID)).agg(sum(col("_w")).as("_kd"))
         .join(selfw, Seq(ID), "full")
         .select(col(ID),
@@ -264,7 +261,7 @@ object Louvain {
     val mRow = canon.agg(coalesce(sum(col("_w")), lit(0L))).head()
     val m = mRow.getLong(0)
 
-    var comm = checkpoint.pin(init.getOrElse(
+    var comm = CheckpointPolicy.pin(init.getOrElse(
       vertices.select(col(ID), col(ID).as(COMMUNITY))))
     var r = 1
     while (r <= rounds) {
@@ -315,7 +312,7 @@ object Louvain {
       // unpinned would re-execute its whole plan per consumer — measured
       // 1.6x at the 100x stress corpus, far more than the one saved
       // materialization job buys back on small graphs
-      comm = checkpoint.pin(next)
+      comm = CheckpointPolicy.pin(next)
       r += 1
     }
     comm

@@ -33,13 +33,12 @@ object MaximalIndependentSet {
     * the canonicalized undirected simple graph. Isolated vertices (and
     * vertices only touching self-loops) all join in round 1. */
   def run(g: Graph,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       maxIterations: Int = 30): DataFrame = {
     val spark = g.vertices.sparkSession
     val canon = GraphUtil.orderEdges(g.edges).select(col(SRC), col(DST))
-    val sym = checkpoint.pin(
+    val sym = CheckpointPolicy.pin(
       canon.unionAll(canon.select(col(DST).as(SRC), col(SRC).as(DST))))
-    var und = checkpoint.pin(g.vertices.select(col(ID)))
+    var und = CheckpointPolicy.pin(g.vertices.select(col(ID)))
     var undCount = und.count()
     var mis = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -58,15 +57,15 @@ object MaximalIndependentSet {
         .groupBy(col(SRC))
         .agg(min(struct(col("_np").as("p"), col(DST).as("i"))).as("_mn"))
         .withColumnRenamed(SRC, ID)
-      val win = checkpoint.pin(pri.join(nbrMin, Seq(ID), "left")
+      val win = CheckpointPolicy.pin(pri.join(nbrMin, Seq(ID), "left")
         .filter(col("_mn").isNull ||
           struct(col("_p").as("p"), col(ID).as("i")) < col("_mn"))
         .select(col(ID)))
       val out = sym.join(win.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
         .select(col(DST).as(ID)).distinct()
-      mis = checkpoint.pin(mis.unionByName(
+      mis = CheckpointPolicy.pin(mis.unionByName(
         win.select(col(ID), lit(r).as("round"))))
-      und = checkpoint.pin(und
+      und = CheckpointPolicy.pin(und
         .join(win, Seq(ID), "left_anti")
         .join(out, Seq(ID), "left_anti"))
       undCount = und.count()

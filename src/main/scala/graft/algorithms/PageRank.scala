@@ -28,15 +28,6 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
   * a 105k-edge, 5k-vertex graph ran 24 jobs, the caller's collect
   * included.
   */
-/** @param staticCheckpoint policy for the LOOP-INVARIANT frames (the
-  *        routing table; the seed vector in the personalized variant),
-  *        defaulting to `checkpoint`. Set to
-  *        [[CheckpointPolicy.Passthrough]] when the edges come from a
-  *        bucketed table ([[graft.sources.GraphIO.writeBucketed]]): the
-  *        per-round join then re-reads the bucketed layout with zero
-  *        exchange instead of copying the table once into a keyed pin.
-  *        The evolving rank frame keeps the main policy — it must be
-  *        pinned or lineage compounds. */
 /** @param weightCol edge-weight column for weighted PageRank: a vertex
   *        distributes rank proportionally to edge weight (share =
   *        w / Σw over its out-edges) instead of uniformly — the standard
@@ -51,8 +42,6 @@ final case class PageRank(
     damping: Double = 0.85,
     maxIterations: Int = 10,
     tolerance: Option[Double] = None,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
-    staticCheckpoint: Option[CheckpointPolicy] = None,
     weightCol: Option[String] = None) {
   import Columns._
 
@@ -66,8 +55,6 @@ final case class PageRank(
     * BASELINE.md records it). Diagnostic only, set after each run. */
   @volatile private[graft] var lastIterations: Int = 0
 
-  private def static: CheckpointPolicy = staticCheckpoint.getOrElse(checkpoint)
-
   /** (src, dst, 1/out-degree(src)) routing table — fixed for the whole
     * iteration. Over a BUCKETED edge table
     * ([[graft.sources.GraphIO.writeBucketed]], directed graphs — an
@@ -77,7 +64,10 @@ final case class PageRank(
     * per [[run]] round is the inherent message groupBy(dst)
     * (GraphIOSpec asserts both properties). That is the
     * write-once-shuffle-then-iterate story: on a 100 TB edge set the
-    * bucketing shuffle is paid once at write time, not once per job. */
+    * bucketing shuffle is paid once at write time, not once per job.
+    * Such routes are a stored read, so their keyed pin returns them
+    * unpinned ([[CheckpointPolicy]]): each round re-reads the bucketed
+    * layout instead of a copy of the table in executor blocks. */
   def routes(g: Graph): DataFrame = weightCol match {
     case None =>
       // undirected: symmetricEdges dedups (src, dst, edge_id), so a
@@ -115,10 +105,10 @@ final case class PageRank(
   }
 
   def run(g: Graph): DataFrame = {
-    val routes = static.pin(this.routes(g), Some(SRC))
+    val routes = CheckpointPolicy.pin(this.routes(g), Some(SRC))
     // one pass pins the dangling flags and counts the vertices and the
     // dangling ones: the uniform start's dangling mass is nd / n
-    val (flags, counts) = static.pinObserved(
+    val (flags, counts) = CheckpointPolicy.pinObserved(
       danglingFlags(g, routes), "pagerank dangling flags", Some(ID))(
       count(lit(1)), count(when(col(DANGLING), lit(1))))
     val n = counts.getLong(0).toDouble
@@ -138,11 +128,11 @@ final case class PageRank(
     * GraphAppendSpec pins warm ≡ cold). Rows in `initial` for vertices
     * no longer in the graph are ignored. */
   def runFrom(g: Graph, initial: DataFrame): DataFrame = {
-    val routes = static.pin(this.routes(g), Some(SRC))
-    val (flags, counts) = static.pinObserved(
+    val routes = CheckpointPolicy.pin(this.routes(g), Some(SRC))
+    val (flags, counts) = CheckpointPolicy.pinObserved(
       danglingFlags(g, routes), "pagerank dangling flags", Some(ID))(count(lit(1)))
     val n = counts.getLong(0).toDouble
-    val seeded = checkpoint.pin(flags
+    val seeded = CheckpointPolicy.pin(flags
       .join(initial.select(col(ID), col(RANK).cast("double").as("_r0")), Seq(ID), "left")
       .select(col(ID), col(DANGLING), coalesce(col("_r0"), lit(1.0 / n)).as(RANK)), Some(ID))
     val mass = seeded.agg(sum(col(RANK)), coalesce(sum(when(col(DANGLING), col(RANK))), lit(0.0)))
@@ -198,7 +188,7 @@ final case class PageRank(
       // the dangling mass sums ranks in units of the uniform share 1/n,
       // so the exact sum's fixed 1e-18 resolution is relative to a
       // typical rank at any graph size
-      val (pinned, observed) = checkpoint.pinObserved(next, s"pagerank round $i", Some(ID))(
+      val (pinned, observed) = CheckpointPolicy.pinObserved(next, s"pagerank round $i", Some(ID))(
         CheckpointPolicy.exactSum(when(col(DANGLING), col(RANK) * lit(n))),
         coalesce(max(abs(col(RANK) - col(PREV))), lit(0.0)))
       dMass = observed.getDouble(0) / n
@@ -222,7 +212,7 @@ final case class PageRank(
     * joined once and checkpointed; rounds add no extra shuffle over the
     * uniform variant. Rank mass is conserved (sums to 1). */
   def runPersonalized(g: Graph, reset: DataFrame): DataFrame = {
-    val routes = static.pin(this.routes(g), Some(SRC))
+    val routes = CheckpointPolicy.pin(this.routes(g), Some(SRC))
 
     val totRow = reset.agg(sum(col("weight").cast("double"))).head()
     require(!totRow.isNullAt(0) && totRow.getDouble(0) > 0.0,
@@ -230,7 +220,7 @@ final case class PageRank(
     val tot = totRow.getDouble(0)
     // the seed vector, normalized, beside the dangling flags; the pin
     // also counts the vertices for the dangling mass's scaling
-    val (w, counts) = static.pinObserved(
+    val (w, counts) = CheckpointPolicy.pinObserved(
       danglingFlags(g, routes)
         .join(reset.select(col(ID),
           (col("weight").cast("double") / tot).as("_w")), Seq(ID), "left")

@@ -59,13 +59,12 @@ object RandomWalks {
   /** One `steps`-step walk from every vertex of `starts` (a one-column
     * frame of ids). Output (walker, step, vertex): step 0 is the start
     * vertex; a walk that hits a sink before `steps` ends early. */
-  def uniformWalks(g: Graph, starts: DataFrame, steps: Int,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+  def uniformWalks(g: Graph, starts: DataFrame, steps: Int): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .select(col(SRC), col(DST)))
-    var frontier = checkpoint.pin(
+    var frontier = CheckpointPolicy.pin(
       starts.select(col(starts.columns.head).as("walker"))
         .withColumn("vertex", col("walker")))
     val out = Seq.newBuilder[DataFrame]
@@ -77,7 +76,7 @@ object RandomWalks {
         .groupBy(col("walker"))
         .agg(min(struct(h.as("_h"), col(DST).as("_d"))).as("_m"))
         .select(col("walker"), col("_m").getField("_d").as("vertex"))
-      frontier = checkpoint.pin(next)
+      frontier = CheckpointPolicy.pin(next)
       out += frontier.withColumn("step", lit(k))
       k += 1
     }
@@ -113,18 +112,17 @@ object RandomWalks {
     * [[uniformWalks]].
     */
   def biasedWalks(g: Graph, starts: DataFrame, steps: Int,
-      wReturn: Int = 1, wCommon: Int = 1, wOutward: Int = 1,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      wReturn: Int = 1, wCommon: Int = 1, wOutward: Int = 1): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     require(wReturn >= 1 && wCommon >= 1 && wOutward >= 1,
       "bias weights are positive integers (scale 1/p : 1 : 1/q up)")
     // distinct endpoint pairs: symmetricEdges dedups (src, dst, edge_id),
     // so a reciprocal directed pair would survive as two rows and double
     // that candidate's weight in the replica expansion
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .select(col(SRC), col(DST)).distinct())
-    val frontier = checkpoint.pin(
+    val frontier = CheckpointPolicy.pin(
       starts.select(col(starts.columns.head).as("walker"))
         .withColumn("vertex", col("walker")))
     val out = Seq.newBuilder[DataFrame]
@@ -132,7 +130,7 @@ object RandomWalks {
 
     // step 1: uniform (no previous vertex) — exactly uniformWalks' step 1
     val h1 = stepHash(col("walker"), 1, col(DST))
-    var cur = checkpoint.pin(
+    var cur = CheckpointPolicy.pin(
       frontier.join(edges, frontier("vertex") === edges(SRC))
         .groupBy(col("walker"), col("vertex"))
         .agg(min(struct(h1.as("_h"), col(DST).as("_d"))).as("_m"))
@@ -158,7 +156,7 @@ object RandomWalks {
           col(DST).as("_d"), col("_j").as("_r"))).as("_m"))
         .select(col("walker"), col("vertex").as("prev"),
           col("_m").getField("_d").as("vertex"))
-      cur = checkpoint.pin(next)
+      cur = CheckpointPolicy.pin(next)
       out += cur.select(col("walker"), lit(k).as("step"), col("vertex"))
       k += 1
     }

@@ -32,7 +32,6 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
 final case class ShortestPaths(
     landmarks: Seq[Long],
     maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
     weightCol: Option[String] = None) {
   import Columns._
 
@@ -46,7 +45,7 @@ final case class ShortestPaths(
     import spark.implicits._
 
     val lm = landmarks.toDF(LANDMARK)
-    val edges = checkpoint.pin(
+    val edges = CheckpointPolicy.pin(
       (if (g.directed) g.edges else g.symmetricEdges)
         .select(Seq(col(SRC), col(DST)) ++ weightCol.map { c =>
           when(col(c).isNull || col(c) < 0,
@@ -58,7 +57,7 @@ final case class ShortestPaths(
     val step = weightCol.map(c => col(c).cast("long")).getOrElse(lit(1))
 
     // seed: each landmark is at distance 0 from itself
-    var dist = checkpoint.pin(g.vertices
+    var dist = CheckpointPolicy.pin(g.vertices
       .join(broadcast(lm), col(ID) === col(LANDMARK), "left_semi")
       .select(col(ID), col(ID).as(LANDMARK),
         (if (weightCol.isDefined) lit(0L) else lit(0)).as(DIST)))
@@ -71,7 +70,7 @@ final case class ShortestPaths(
       val relaxed = edges
         .join(dist, edges(DST) === dist(ID))
         .select(edges(SRC).as(ID), col(LANDMARK), (col(DIST) + step).as(DIST))
-      val (pinned, fp) = checkpoint.pinObserved(dist.unionByName(relaxed)
+      val (pinned, fp) = CheckpointPolicy.pinObserved(dist.unionByName(relaxed)
         .groupBy(col(ID), col(LANDMARK))
         .agg(min(col(DIST)).as(DIST)),
         s"shortest paths round ${i + 1}")(count(lit(1)), sum(col(DIST)))

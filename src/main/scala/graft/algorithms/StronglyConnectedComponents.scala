@@ -34,8 +34,7 @@ import graft.pregel.Pregel
   */
 final case class StronglyConnectedComponents(
     maxIterations: Int = 10,
-    propagationIterations: Int = 1000,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local) {
+    propagationIterations: Int = 1000) {
   import Columns._
 
   private def minReach(
@@ -55,8 +54,7 @@ final case class StronglyConnectedComponents(
         msgToSrc = if (forward) None else Some(col(STATE)),
         msgToDst = if (forward) Some(col(STATE)) else None,
         updateExpr = Some(least(col(MSG), col(STATE))),
-        maxIterations = propagationIterations,
-        checkpoint = checkpoint)
+        maxIterations = propagationIterations)
         .runWithStatus(Graph(vertices, edges, directed = true)))
     if (!res.converged)
       throw new IllegalStateException(
@@ -69,12 +67,14 @@ final case class StronglyConnectedComponents(
 
   def run(g: Graph): DataFrame = {
     require(g.directed, "SCC is defined for directed graphs; use ConnectedComponents for undirected")
-    val (v0, n) = checkpoint.pinObserved(g.vertices.select(col(ID)), "scc vertices", Some(ID))(
+    val (v0, n) = CheckpointPolicy.pinObserved(
+      g.vertices.select(col(ID)), "scc vertices", Some(ID))(
       count(lit(1)))
     var vertices = v0
     var remaining = n.getLong(0)
     // edge_id column is irrelevant here; keep endpoints only
-    val (e0, m) = checkpoint.pinObserved(g.edges.select(col(SRC), col(DST)), "scc edges")(count(lit(1)))
+    val (e0, m) = CheckpointPolicy.pinObserved(
+      g.edges.select(col(SRC), col(DST)), "scc edges")(count(lit(1)))
     var edges = e0
     var edgeCount = m.getLong(0)
     var result: Option[DataFrame] = None
@@ -97,14 +97,14 @@ final case class StronglyConnectedComponents(
       i += 1
       // one pin holds both the resolved and the residual vertices; it
       // observes how many remain unresolved
-      val (labelled, residual) = checkpoint.pinObserved(fwd.join(bwd, Seq(ID)),
+      val (labelled, residual) = CheckpointPolicy.pinObserved(fwd.join(bwd, Seq(ID)),
         s"scc round $i", Some(ID))(count(when(col("_fwd") =!= col("_bwd"), lit(1))))
       remaining = residual.getLong(0)
       val resolved = labelled.filter(col("_fwd") === col("_bwd"))
         .select(col(ID), col("_fwd").as(COMPONENT))
       result = Some(result.fold(resolved)(_.unionByName(resolved)))
       vertices = labelled.filter(col("_fwd") =!= col("_bwd")).select(col(ID))
-      val (residualEdges, mi) = checkpoint.pinObserved(edges
+      val (residualEdges, mi) = CheckpointPolicy.pinObserved(edges
         .join(vertices.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
         .join(vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"),
         s"scc residual edges $i")(count(lit(1)))

@@ -6,28 +6,32 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, classic}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
 import org.apache.spark.sql.graft.PlanFrames
 import org.apache.spark.sql.types.DecimalType
 
-/** How iterative loops pin per-round state (truncate lineage + materialize).
+/** The one way the engine pins a frame (truncates its lineage and
+  * materializes it).
   *
   * The reference never persists anything — its plans double in depth per
   * superstep (pregel.py:45-75, SURVEY.md §3.2). Every graft loop pins
-  * per-round, and the policy decides where the pinned blocks live:
+  * per-round, and every store mutation pins the frames it reads more than
+  * once. Where the pinned blocks live follows the session:
   *
-  *  - [[CheckpointPolicy.Local]] (default): `localCheckpoint` — blocks on
-  *    executor block managers. Fastest, but NOT fault-tolerant: losing one
-  *    executor mid-iteration loses blocks and, with lineage truncated,
-  *    kills the job. Right for local mode and short interactive runs.
-  *  - [[CheckpointPolicy.Reliable]]: `checkpoint` to the session's
-  *    checkpoint directory (HDFS/S3 on a cluster). One write+read of the
-  *    pinned state per round buys survival of executor loss — the correct
+  *  - no checkpoint directory (the default): `localCheckpoint` — blocks
+  *    on executor block managers. Fastest, but NOT fault-tolerant: losing
+  *    one executor mid-iteration loses blocks and, with lineage
+  *    truncated, kills the job. Right for local mode and short
+  *    interactive runs.
+  *  - `spark.sparkContext.setCheckpointDir(...)` set: `checkpoint` to
+  *    that directory (HDFS/S3 on a cluster). One write+read of the pinned
+  *    state per round buys survival of executor loss — the correct
   *    setting for 100 TB jobs where some executor failure per hour is the
-  *    expected case, not the exception. Requires
-  *    `spark.sparkContext.setCheckpointDir(...)` up front.
+  *    expected case, not the exception.
   *
   * A loop that needs a scalar from each round (changed count, dangling
   * mass, delta, fingerprint) takes it from [[pinObserved]], which reads
@@ -45,24 +49,36 @@ import org.apache.spark.sql.types.DecimalType
   * plain, undeclared one. The declared frame carries no size estimate of
   * its source plan, so the planner never broadcasts a pinned side.
   *
-  * A keyed [[CheckpointPolicy.Local]] pin runs its layout shuffle before
-  * it returns but stores each partition when a job first reads it (a
-  * lazy `localCheckpoint`), so the loop's first pass over it does the
+  * A keyed pin of a stored read is no pin at all: when every leaf of the
+  * frame's plan is a file relation, the plan runs no exchange and it is
+  * already hash-partitioned on the key (a bucketed table,
+  * [[graft.sources.GraphIO.writeBucketed]]), re-reading it costs a scan
+  * and no shuffle, where a pin would copy the table into executor blocks
+  * once. [[pin]] then returns the frame itself and [[pinObserved]]
+  * computes its metrics with one plain aggregate.
+  *
+  * A keyed pin without a checkpoint directory runs its layout shuffle
+  * before it returns but stores each partition when a job first reads it
+  * (a lazy `localCheckpoint`), so the loop's first pass over it does the
   * storing instead of a job of its own. Its rows must not change before
   * that first read: do not overwrite the tables it derives from in
   * between.
   */
-sealed trait CheckpointPolicy {
+object CheckpointPolicy {
+
   /** Pin `df`: truncate lineage and materialize it now; with a `key`,
-    * hash-partitioned on that column, and under Local stored on first
-    * read (see the trait's doc). */
-  def pin(df: DataFrame, key: Option[String] = None): DataFrame
+    * hash-partitioned on that column, stored on first read when no
+    * checkpoint directory is set, and returned as is when it is a stored
+    * read (see the object's doc). */
+  def pin(df: DataFrame, key: Option[String] = None): DataFrame =
+    if (key.exists(storedRead(df, _))) df
+    else keyed(df, key)(store(df, eager = key.isEmpty))
 
   /** Pin `df` (on `key`, as [[pin]]) and return, from the same pass over
     * its rows, the one-row aggregate `metric +: metrics` (via
     * `Dataset.observe`). `label` becomes the Spark job description of
     * the pass (e.g. `pregel superstep 7`); the caller's description is
-    * restored afterwards.
+    * restored afterwards. Every row is stored before it returns.
     *
     * Observed aggregates merge their per-task partials in task
     * COMPLETION order, so a floating-point `sum` would not replay bit
@@ -70,56 +86,34 @@ sealed trait CheckpointPolicy {
     * `bit_xor`, integral sums, [[CheckpointPolicy.exactSum]]). */
   def pinObserved(df: DataFrame, label: String, key: Option[String] = None)(
       metric: Column, metrics: Column*): (DataFrame, Row) =
-    CheckpointPolicy.described(df, label) {
-      val obs = Observation()
-      val pinned = pinNow(df.observe(obs, metric, metrics: _*), key)
-      (pinned, Await.result(obs.future, Duration.Inf))
+    described(df, label) {
+      if (key.exists(storedRead(df, _))) (df, df.agg(metric, metrics: _*).head())
+      else {
+        val obs = Observation()
+        val pinned = keyed(df.observe(obs, metric, metrics: _*), key)(store(df, eager = true))
+        (pinned, Await.result(obs.future, Duration.Inf))
+      }
     }
 
-  /** [[pin]], with every row stored before it returns: the observed pass
-    * must run now. */
-  protected def pinNow(df: DataFrame, key: Option[String]): DataFrame = pin(df, key)
-}
+  /** The session's store: `checkpoint` into the checkpoint directory when
+    * one is set, else `localCheckpoint`. */
+  private def store(df: DataFrame, eager: Boolean): DataFrame => DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) _.checkpoint(eager = true)
+    else _.localCheckpoint(eager = eager)
 
-object CheckpointPolicy {
-
-  case object Local extends CheckpointPolicy {
-    def pin(df: DataFrame, key: Option[String]): DataFrame =
-      keyed(df, key)(_.localCheckpoint(eager = key.isEmpty))
-
-    override protected def pinNow(df: DataFrame, key: Option[String]): DataFrame =
-      keyed(df, key)(_.localCheckpoint(eager = true))
-  }
-
-  /** No pinning at all: `pin` returns the frame unchanged, key or not,
-    * so every round re-evaluates its input plan. WRONG for long loops
-    * (lineage doubles per round — the reference's failure this trait
-    * exists to fix) but RIGHT when the loop-invariant inputs are already
-    * materialized in a layout the per-round plan exploits: re-reading a
-    * BUCKETED edge table ([[graft.sources.GraphIO.writeBucketed]]) costs
-    * a scan and NO shuffle (GraphIOSpec asserts it), where a keyed pin
-    * would copy the table once into executor blocks. Use for the static
-    * side of an iteration over bucketed storage; keep Local/Reliable for
-    * the evolving per-round state.
-    *
-    * `pinObserved` runs no pass of its own to observe, so it computes
-    * the metrics with one plain aggregate and returns `df` unpinned. */
-  case object Passthrough extends CheckpointPolicy {
-    def pin(df: DataFrame, key: Option[String]): DataFrame = df
-
-    override def pinObserved(df: DataFrame, label: String, key: Option[String])(
-        metric: Column, metrics: Column*): (DataFrame, Row) =
-      described(df, label)((df, df.agg(metric, metrics: _*).head()))
-  }
-
-  case object Reliable extends CheckpointPolicy {
-    def pin(df: DataFrame, key: Option[String]): DataFrame = {
-      require(
-        df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "CheckpointPolicy.Reliable needs spark.sparkContext.setCheckpointDir(...)")
-      keyed(df, key)(_.checkpoint(eager = true))
+  /** Every leaf of the analyzed plan is a file relation (checked first:
+    * the analyzed plan is already built, so a loop's pinned state pays
+    * no planning here), and the physical plan runs no exchange and comes
+    * out hash-partitioned on `key`. */
+  private def storedRead(df: DataFrame, key: String): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    } && {
+      val plan = executed(df)
+      plan.find(_.isInstanceOf[Exchange]).isEmpty &&
+        hashCount(plan.outputPartitioning, keyOf(plan.output, key)).isDefined
     }
-  }
 
   /** `checkpoint(df)`, or with a key the keyed pin: checkpoint `df`
     * repartitioned into `spark.sql.shuffle.partitions` partitions on the
@@ -144,13 +138,11 @@ object CheckpointPolicy {
     * its source — if the plan that produced its rows (AQE's final plan
     * of `source`) has that partitioning. Otherwise `pinned` unchanged. */
   private[graft] def declare(pinned: DataFrame, source: DataFrame, key: String): DataFrame = {
-    val executed = source.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    val plan = executed(source)
     val n = partitions(pinned)
     pinned.queryExecution.analyzed match {
-      case rdd: LogicalRDD if hashedOn(executed.outputPartitioning, keyOf(executed.output, key), n) =>
+      case rdd: LogicalRDD
+          if hashCount(plan.outputPartitioning, keyOf(plan.output, key)).contains(n) =>
         val session = pinned.sparkSession.asInstanceOf[classic.SparkSession]
         val declared = HashPartitioning(Seq(keyOf(rdd.output, key)), n)
         PlanFrames.ofRows(session,
@@ -163,14 +155,21 @@ object CheckpointPolicy {
     output.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"pin key '$k' is not a column of ${output.map(_.name)}"))
 
-  private def hashedOn(p: Partitioning, key: Attribute, n: Int): Boolean = p match {
-    case h: HashPartitioning =>
-      h.numPartitions == n && h.expressions.size == 1 && h.expressions.head.semanticEquals(key)
-    case c: PartitioningCollection => c.partitionings.exists(hashedOn(_, key, n))
-    case _ => false
+  /** AQE's current plan of `df` (its final plan once `df` has run). */
+  private def executed(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
   }
 
-  /** Order-independent sum of a fractional column for [[CheckpointPolicy.pinObserved]]:
+  /** The partition count of `p` if it hash-partitions on `key` alone. */
+  private def hashCount(p: Partitioning, key: Attribute): Option[Int] = p match {
+    case h: HashPartitioning if h.expressions.size == 1 && h.expressions.head.semanticEquals(key) =>
+      Some(h.numPartitions)
+    case c: PartitioningCollection => c.partitionings.view.flatMap(hashCount(_, key)).headOption
+    case _ => None
+  }
+
+  /** Order-independent sum of a fractional column for [[pinObserved]]:
     * each value rounds once to 18 decimal places, then sums exactly, so
     * the result does not depend on the order partials merge in. Values
     * and the sum must stay below 1e20 in magnitude; no rows (or only

@@ -33,8 +33,8 @@ final case class Graph(vertices: DataFrame, edges: DataFrame, directed: Boolean 
     */
   def adjacency: DataFrame = pinnedAdjacency.getOrElse(adjacencyPlan)
 
-  /** Opt-in data persistence for [[adjacency]]: materialize it once via
-    * `localCheckpoint` so every consumer (degrees, similarity banding +
+  /** Opt-in data persistence for [[adjacency]]: pin it once
+    * ([[CheckpointPolicy.pin]]) so every consumer (degrees, similarity banding +
     * verify joins, label propagation) reads the same blocks instead of
     * re-running the edge-union + collect_set aggregate per use. Same
     * contract as [[localCheckpointed]]; idempotent. Returns `this` so it
@@ -42,7 +42,7 @@ final case class Graph(vertices: DataFrame, edges: DataFrame, directed: Boolean 
     */
   def persistAdjacency(): Graph = {
     if (pinnedAdjacency.isEmpty)
-      pinnedAdjacency = Some(adjacencyPlan.localCheckpoint())
+      pinnedAdjacency = Some(CheckpointPolicy.pin(adjacencyPlan))
     this
   }
 
@@ -101,12 +101,13 @@ final case class Graph(vertices: DataFrame, edges: DataFrame, directed: Boolean 
       .union(edges.withColumns(Map(SRC -> col(DST), DST -> col(SRC))))
       .distinct()
 
-  /** Truncate lineage and materialize both frames — call before iterative
-    * algorithms so the (nondeterministic-plan) inputs are pinned and every
-    * superstep re-reads materialized blocks instead of re-running the scan.
+  /** Truncate lineage and materialize both frames ([[CheckpointPolicy.pin]])
+    * — call before iterative algorithms so the (nondeterministic-plan)
+    * inputs are pinned and every superstep re-reads materialized blocks
+    * instead of re-running the scan.
     */
   def localCheckpointed(): Graph =
-    copy(vertices = vertices.localCheckpoint(), edges = edges.localCheckpoint())
+    copy(vertices = CheckpointPolicy.pin(vertices), edges = CheckpointPolicy.pin(edges))
 
   /** Exact out-degree distribution summary — one row:
     * (n_vertices, n_edges, n_sources, max/avg/median out-degree). Feeds

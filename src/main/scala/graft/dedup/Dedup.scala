@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
 import graft.text.TextFunctions
 
 /** Deduplication operators for training-data pipelines, from exact to
@@ -117,14 +118,13 @@ object Dedup {
       maxBucketSize: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val sh = spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
+    // shingle sets are reused by banding and the verify join
+    val sh = CheckpointPolicy.pin(spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
       .select(
         col("id"),
         array_distinct(TextFunctions.shingles(TextFunctions.tokens(col("_t")), shingleSize))
           .as("sh"))
-      .filter(size(col("sh")) > 0)
-      // shingle sets are reused by banding and the verify join
-      .localCheckpoint()
+      .filter(size(col("sh")) > 0))
 
     // Signatures are materialized BEFORE band-slicing: inlining the
     // signature expression into lshBuckets would re-evaluate the full
@@ -240,9 +240,9 @@ object Dedup {
     import graft.core.{Columns, Graph}
     val dd = dedupedNearDuplicates(docs, idCol, textCol,
       shingleSize, numHashes, bands, threshold, maxBucketSize)
-    val reps = dd.copyClusters
-      .select(col("keep_id").as(Columns.ID), col("ids"))
-      .localCheckpoint() // CC iterates; don't recompute the dedup per round
+    // CC iterates; don't recompute the dedup per round
+    val reps = CheckpointPolicy.pin(dd.copyClusters
+      .select(col("keep_id").as(Columns.ID), col("ids")))
     val edges = dd.pairs
       .select(col("id_a").as(Columns.SRC), col("id_b").as(Columns.DST))
     val cc = graft.algorithms.AlternatingConnectedComponents(maxIterations)
@@ -373,12 +373,11 @@ object Dedup {
     val sig: Column => Column =
       if (portableHash) graft.functions.SimHashSha64(_)
       else graft.functions.SimHash64(_)
-    val hashed = docs.select(
+    val hashed = CheckpointPolicy.pin(docs.select(
       col(idCol).as("id"),
       TextFunctions.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
-      .select(col("id"), sig(col("toks")).as("sh"))
-      .localCheckpoint()
+      .select(col("id"), sig(col("toks")).as("sh")))
 
     val allChunks = hashed.select(
       col("id"), col("sh"),
@@ -429,7 +428,7 @@ object Dedup {
     // OpenHashSet path) instead of strings, and |A U B| = na + nb - inter
     // saves the second set operation. 64-bit collisions are negligible at
     // any realistic corpus size (~1e-11 at 1e9 distinct shingles... per pair).
-    val sh = spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
+    val sh = CheckpointPolicy.pin(spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
       .select(
         col("id"),
         array_distinct(TextFunctions.shingles(TextFunctions.tokens(col("_t")), shingleSize))
@@ -438,9 +437,7 @@ object Dedup {
       .select(
         col("id"),
         array_sort(transform(col("sh"), x => xxhash64(x))).as("h"),
-        size(col("sh")).as("n"))
-      // reused by candidate generation AND the exact-verify join
-      .localCheckpoint()
+        size(col("sh")).as("n"))) // reused by candidate generation AND the exact-verify join
     val inv = sh.select(col("id"), col("n"), explode(col("h")).as("g"))
     val df = inv.groupBy(col("g")).agg(count(lit(1)).as("df"))
     // Bounds are computed as ceil(x - EPS): double rounding can land n*t a
@@ -604,9 +601,9 @@ object Dedup {
     // would put the whole cluster on a single aggregation task (the
     // hot-key hazard [[containmentPairsDeduped]] also avoids by
     // carrying only counts).
-    val keyed = docs
-      .select(col(idCol).as("id"), sha2(col(textCol), 256).as("_th"))
-      .localCheckpoint() // reused: cluster minima AND the expansion join
+    // reused: cluster minima AND the expansion join
+    val keyed = CheckpointPolicy.pin(docs
+      .select(col(idCol).as("id"), sha2(col(textCol), 256).as("_th")))
     val clusters = keyed
       .groupBy(col("_th"))
       .agg(min(col("id")).as("keep_id"))
@@ -661,13 +658,12 @@ object Dedup {
       maxShingleDocs: Int = 0): DataFrame = {
     require(minContainmentPct >= 1 && minContainmentPct <= 100,
       s"minContainmentPct must be in [1,100], got $minContainmentPct")
-    val sh = spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
+    val sh = CheckpointPolicy.pin(spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
       .select(
         col("id"),
         explode(array_distinct(
           TextFunctions.shingles(TextFunctions.tokens(col("_t")), n))).as("g"))
-      .select(col("id"), xxhash64(col("g")).as("h"))
-      .localCheckpoint() // reused: sizes, hot count, both join sides
+      .select(col("id"), xxhash64(col("g")).as("h"))) // reused: sizes, hot count, both join sides
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n_a"))
     val cold =
       if (maxShingleDocs <= 0) sh
@@ -710,12 +706,12 @@ object Dedup {
       n: Int = 8,
       minContainmentPct: Int = 80,
       maxShingleDocs: Int = 0): DataFrame = {
-    val clusters = spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
+    val clusters = CheckpointPolicy.pin(
+      spread(docs.select(col(idCol).as("id"), col(textCol).as("_t")))
       .select(col("id"), sha2(col("_t"), 256).as("_th"))
       .groupBy(col("_th"))
       .agg(min(col("id")).as("keep_id"), count(lit(1)).as("copies"))
-      .select(col("keep_id"), col("copies"))
-      .localCheckpoint() // reused: the rep semi-join AND both copy joins
+      .select(col("keep_id"), col("copies"))) // reused: the rep semi-join AND both copy joins
     val reps = docs.select(col(idCol).as("id"), col(textCol))
       .join(clusters.select(col("keep_id").as("id")), Seq("id"), "left_semi")
       .withColumnRenamed("id", idCol)

@@ -196,12 +196,10 @@ object DedupIndex {
       buckets.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
     }
 
-  /** Build the index frames from a corpus. `checkpoint` pins all three
-    * (the default `Local` is right when the index is consumed in the
-    * same session; pass [[CheckpointPolicy.Passthrough]] when the
-    * caller writes the frames straight to storage and re-reads them —
-    * pinning would force an extra materialization of data about to be
-    * written anyway).
+  /** Build the index frames from a corpus. All three are pinned
+    * ([[CheckpointPolicy.pin]]), so every later use — a merge, a query,
+    * each table [[writeBucketed]] writes — reads the pinned rows instead
+    * of re-running the shingling and MinHash passes.
     */
   def build(
       docs: DataFrame,
@@ -209,8 +207,7 @@ object DedupIndex {
       textCol: String,
       shingleSize: Int = 3,
       numHashes: Int = 128,
-      bands: Int = 32,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Index = {
+      bands: Int = 32): Index = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // `sha` rides along so a later [[merge]] can match incoming texts
     // against existing groups without the corpus — 32 bytes per distinct
@@ -221,7 +218,7 @@ object DedupIndex {
     // for a single-file corpus, whatever the cluster size
     val keyed = Dedup.spread(
       docs.select(col(idCol).as("id"), col(textCol).as("_text")))
-    val clusters = checkpoint.pin(
+    val clusters = CheckpointPolicy.pin(
       keyed.select(col("id"), sha2(col("_text"), 256).as("_th"))
         .groupBy(col("_th"))
         .agg(
@@ -234,14 +231,14 @@ object DedupIndex {
     // shuffle
     val reps = keyed
       .join(clusters.select(col("keep_id").as("id")), Seq("id"), "left_semi")
-    val sh = checkpoint.pin(
+    val sh = CheckpointPolicy.pin(
       reps.select(
         col("id"),
         array_distinct(
           TextFunctions.shingles(TextFunctions.tokens(col("_text")), shingleSize))
           .as("sh"))
         .filter(size(col("sh")) > 0))
-    val buckets = checkpoint.pin(
+    val buckets = CheckpointPolicy.pin(
       Dedup.minhashSignatures(sh, numHashes)
         .select(col("id"),
           explode(Dedup.lshBuckets(col("sig"), bands, numHashes / bands)).as("bk"))
@@ -263,9 +260,8 @@ object DedupIndex {
     * merge ≡ whole-rebuild bit for bit.
     */
   def merge(
-      old: Index, newDocs: DataFrame, idCol: String, textCol: String,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Index =
-    mergeDetailed(old, newDocs, idCol, textCol, checkpoint).index
+      old: Index, newDocs: DataFrame, idCol: String, textCol: String): Index =
+    mergeDetailed(old, newDocs, idCol, textCol).index
 
   /** [[merge]]'s working parts, exposed for the incremental consumers:
     * `rekey` is the (old rep id -> new rep id) rewrite map (batch-
@@ -276,8 +272,7 @@ object DedupIndex {
       index: Index, rekey: DataFrame, newRepIds: DataFrame)
 
   def mergeDetailed(
-      old: Index, newDocs: DataFrame, idCol: String, textCol: String,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): MergeResult = {
+      old: Index, newDocs: DataFrame, idCol: String, textCol: String): MergeResult = {
     val newGroups = newDocs
       .select(col(idCol).as("id"), sha2(col(textCol), 256).as("sha"))
       .groupBy(col("sha"))
@@ -285,10 +280,10 @@ object DedupIndex {
         min(col("id")).as("_nk"),
         count(lit(1)).as("_nn"),
         sort_array(collect_list(col("id"))).as("_nids"))
-    val joined = old.clusters
-      .join(newGroups, Seq("sha"), "full")
-      .localCheckpoint() // consumed by clusters, the rekey map AND the new-rep set
-    val clusters = checkpoint.pin(joined.select(
+    // consumed by clusters, the rekey map AND the new-rep set
+    val joined = CheckpointPolicy.pin(old.clusters
+      .join(newGroups, Seq("sha"), "full"))
+    val clusters = CheckpointPolicy.pin(joined.select(
       least(coalesce(col("keep_id"), col("_nk")),
         coalesce(col("_nk"), col("keep_id"))).as("keep_id"),
       (coalesce(col("n_copies"), lit(0L)) + coalesce(col("_nn"), lit(0L)))
@@ -328,11 +323,11 @@ object DedupIndex {
     MergeResult(
       Index(
         clusters,
-        checkpoint.pin(rekeyed(old.shingles).unionByName(newShs)),
-        checkpoint.pin(rekeyed(old.buckets).unionByName(newBks)),
+        CheckpointPolicy.pin(rekeyed(old.shingles).unionByName(newShs)),
+        CheckpointPolicy.pin(rekeyed(old.buckets).unionByName(newBks)),
         old.shingleSize, old.numHashes, old.bands),
-      rekey.localCheckpoint(),
-      newReps.select(col(idCol).as("id")).localCheckpoint())
+      CheckpointPolicy.pin(rekey),
+      CheckpointPolicy.pin(newReps.select(col(idCol).as("id"))))
   }
 
   /** Advance a representative-level near-dup cluster table across a
@@ -395,16 +390,14 @@ object DedupIndex {
     // label 1). Recompute min(id) for just the clusters holding a
     // rekeyed rep — member scan bounded by their mass, map bounded by
     // the batch's rekey count.
-    val rekeyTouched = rekeyedC
+    val rekeyTouched = CheckpointPolicy.pin(rekeyedC
       .join(broadcast(rk.select(col("_newid").as("id"))), Seq("id"), "left_semi")
-      .select(col("cluster_id")).distinct()
-      .localCheckpoint()
-    val newMin = cur0
+      .select(col("cluster_id")).distinct())
+    val newMin = CheckpointPolicy.pin(cur0
       .join(broadcast(rekeyTouched), Seq("cluster_id"), "left_semi")
       .groupBy(col("cluster_id")).agg(min(col("id")).as("_m"))
       .filter(col("cluster_id") =!= col("_m"))
-      .select(col("cluster_id").as("_oldl"), col("_m").as("_newl"))
-      .localCheckpoint()
+      .select(col("cluster_id").as("_oldl"), col("_m").as("_newl")))
     val cur = cur0
       .join(broadcast(newMin), cur0("cluster_id") === col("_oldl"), "left")
       .select(col("id"), coalesce(col("_newl"), cur0("cluster_id")).as("cluster_id"))
@@ -431,21 +424,19 @@ object DedupIndex {
           size(array_union(col("sh_a"), col("sh_b")))) >= threshold)
       .select(col("id_a"), col("id_b"))
     // 3. label-merge graph over CURRENT labels — batch-sized
-    val touched = newPairs
+    val touched = CheckpointPolicy.pin(newPairs
       .join(cur.select(col("id").as("id_a"), col("cluster_id").as("_la")), Seq("id_a"))
       .join(cur.select(col("id").as("id_b"), col("cluster_id").as("_lb")), Seq("id_b"))
       .select(col("_la"), col("_lb"))
       .filter(col("_la") =!= col("_lb"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     if (touched.isEmpty) cur
     else {
       val labels = graft.algorithms.AlternatingConnectedComponents
         .minLabels(touched, "_la", "_lb")
-      val mapping = labels
+      val mapping = CheckpointPolicy.pin(labels
         .filter(col(Columns.ID) =!= col(Columns.COMPONENT))
-        .select(col(Columns.ID).as("_old"), col(Columns.COMPONENT).as("_new"))
-        .localCheckpoint()
+        .select(col(Columns.ID).as("_old"), col(Columns.COMPONENT).as("_new")))
       cur.join(broadcast(mapping), cur("cluster_id") === col("_old"), "left")
         .select(col("id"),
           coalesce(col("_new"), col("cluster_id")).as("cluster_id"))
@@ -459,7 +450,7 @@ object DedupIndex {
     * probe side reads is always the merge of everything delivered.
     *
     * Semantics & hygiene:
-    *  - every `merge` output frame is localCheckpoint-pinned BEFORE the
+    *  - every `merge` output frame is pinned BEFORE the
     *    overwrite, so rewriting the tables a lazy plan was reading from
     *    cannot self-invalidate;
     *  - `foreachBatch` is at-least-once on recovery, and [[merge]] is
@@ -538,9 +529,8 @@ object DedupIndex {
         // tables; the merge frames the advance probes are themselves
         // pinned, but the advance output must not replan against the
         // rewritten tables either
-        advanceClusters(m, readNearClusters(spark, name),
-          threshold = threshold, maxBucketSize = maxBucketSize)
-          .localCheckpoint()
+        CheckpointPolicy.pin(advanceClusters(m, readNearClusters(spark, name),
+          threshold = threshold, maxBucketSize = maxBucketSize))
       }
     writeIndexTables(m.index, name)
     advanced.foreach(family.write(spark, name, "nearclusters", _))
@@ -558,9 +548,8 @@ object DedupIndex {
       rekey: DataFrame, emptiedRepIds: DataFrame)
 
   def deleteDocs(
-      old: Index, ids: DataFrame, idCol: String,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Index =
-    deleteDetailed(old, ids, idCol, checkpoint).index
+      old: Index, ids: DataFrame, idCol: String): Index =
+    deleteDetailed(old, ids, idCol).index
 
   /** Physically remove documents from the index — the GDPR /
     * right-to-be-forgotten face ([[graft.sources.GraphIO.deleteVertices]]'s
@@ -587,26 +576,23 @@ object DedupIndex {
     *    lifecycle face.
     */
   def deleteDetailed(
-      old: Index, ids: DataFrame, idCol: String,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DeleteResult = {
-    val del = ids.select(col(idCol).as("_del")).distinct().localCheckpoint()
-    val touched = old.clusters
+      old: Index, ids: DataFrame, idCol: String): DeleteResult = {
+    val del = CheckpointPolicy.pin(ids.select(col(idCol).as("_del")).distinct())
+    val touched = CheckpointPolicy.pin(old.clusters
       .join(broadcast(del), array_contains(col("ids"), col("_del")))
       .groupBy(col("sha"))
       .agg(
         first(col("keep_id")).as("keep_id"),
         first(col("ids")).as("ids"),
         collect_list(col("_del")).as("_dels"))
-      .withColumn("_kept", array_except(col("ids"), col("_dels")))
-      .localCheckpoint() // bounded by the batch's groups
+      .withColumn("_kept", array_except(col("ids"), col("_dels")))) // bounded by the batch's groups
     val surviving = touched.filter(size(col("_kept")) > 0)
-    val emptied = touched.filter(size(col("_kept")) === 0)
-      .select(col("keep_id").as("id")).localCheckpoint()
-    val rekey = surviving
+    val emptied = CheckpointPolicy.pin(touched.filter(size(col("_kept")) === 0)
+      .select(col("keep_id").as("id")))
+    val rekey = CheckpointPolicy.pin(surviving
       .filter(array_contains(col("_dels"), col("keep_id")))
-      .select(col("keep_id").as("_oldid"), array_min(col("_kept")).as("_newid"))
-      .localCheckpoint()
-    val clusters = checkpoint.pin(
+      .select(col("keep_id").as("_oldid"), array_min(col("_kept")).as("_newid")))
+    val clusters = CheckpointPolicy.pin(
       old.clusters.join(touched.select(col("sha")), Seq("sha"), "left_anti")
         .select(col("keep_id"), col("n_copies"), col("ids"), col("sha"))
         .unionByName(surviving.select(
@@ -625,8 +611,8 @@ object DedupIndex {
     DeleteResult(
       Index(
         clusters,
-        checkpoint.pin(rekeyDropped(old.shingles)),
-        checkpoint.pin(rekeyDropped(old.buckets)),
+        CheckpointPolicy.pin(rekeyDropped(old.shingles)),
+        CheckpointPolicy.pin(rekeyDropped(old.buckets)),
         old.shingleSize, old.numHashes, old.bands),
       touched.select(col("sha")),
       rekey, emptied)
@@ -652,21 +638,21 @@ object DedupIndex {
       r: DeleteResult, oldNcl: DataFrame, threshold: Double,
       maxBucketSize: Int = 0): DataFrame = {
     import graft.core.Columns
-    val touchedIds = r.emptiedRepIds
+    val touchedIds = CheckpointPolicy.pin(r.emptiedRepIds
       .unionByName(r.rekey.select(col("_oldid").as("id")))
-      .distinct().localCheckpoint()
-    val lbl = oldNcl.join(broadcast(touchedIds), Seq("id"), "left_semi")
-      .select(col("cluster_id").as("_lbl")).distinct().localCheckpoint()
+      .distinct())
+    val lbl = CheckpointPolicy.pin(oldNcl.join(broadcast(touchedIds), Seq("id"), "left_semi")
+      .select(col("cluster_id").as("_lbl")).distinct())
     val unaffected = oldNcl
       .join(broadcast(lbl), oldNcl("cluster_id") === col("_lbl"), "left_anti")
       .select(col("id"), col("cluster_id"))
     val inAffected = oldNcl
       .join(broadcast(lbl), oldNcl("cluster_id") === col("_lbl"), "left_semi")
       .join(r.emptiedRepIds, Seq("id"), "left_anti")
-    val survivors = inAffected
+    // bounded by the affected cluster mass
+    val survivors = CheckpointPolicy.pin(inAffected
       .join(broadcast(r.rekey), inAffected("id") === col("_oldid"), "left")
-      .select(coalesce(col("_newid"), inAffected("id")).as("id"))
-      .localCheckpoint() // bounded by the affected cluster mass
+      .select(coalesce(col("_newid"), inAffected("id")).as("id")))
     // every affected cluster vanished outright — nothing to re-derive
     if (survivors.isEmpty) return unaffected
     val pb = cappedBuckets(r.index.buckets, maxBucketSize)
@@ -706,9 +692,8 @@ object DedupIndex {
     if (r.touchedShas.isEmpty) return
     val repaired =
       nclParams(spark, name).map { case (threshold, maxBucketSize) =>
-        repairClustersAfterDelete(r, readNearClusters(spark, name),
-          threshold = threshold, maxBucketSize = maxBucketSize)
-          .localCheckpoint()
+        CheckpointPolicy.pin(repairClustersAfterDelete(r, readNearClusters(spark, name),
+          threshold = threshold, maxBucketSize = maxBucketSize))
       }
     writeIndexTables(r.index, name)
     repaired.foreach(family.write(spark, name, "nearclusters", _))
@@ -783,9 +768,8 @@ object DedupIndex {
   def buildNearClusters(
       spark: SparkSession, name: String, threshold: Double,
       maxBucketSize: Int = 0): Unit = family.mutate(spark, name) {
-    val ncl = readBucketed(spark, name)
-      .nearClusters(threshold, maxBucketSize)
-      .localCheckpoint()
+    val ncl = CheckpointPolicy.pin(readBucketed(spark, name)
+      .nearClusters(threshold, maxBucketSize))
     writeNearClusters(spark, name, ncl, threshold, maxBucketSize)
   }
 

@@ -3,7 +3,7 @@ package graft.matrix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Columns, Graph}
+import graft.core.{CheckpointPolicy, Columns, Graph}
 
 /** Sparse matrix in COO form: one `(row, col, val)` DataFrame row per
   * non-zero entry.
@@ -43,10 +43,8 @@ final case class CooMatrix(df: DataFrame) {
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 
-  def localCheckpointed(): CooMatrix = CooMatrix(df.localCheckpoint())
-
-  def pinned(policy: graft.core.CheckpointPolicy): CooMatrix =
-    CooMatrix(policy.pin(df))
+  /** this matrix, pinned through [[CheckpointPolicy]] */
+  def pinned(): CooMatrix = CooMatrix(CheckpointPolicy.pin(df))
 }
 
 object CooMatrix {

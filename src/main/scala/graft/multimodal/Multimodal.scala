@@ -5,6 +5,8 @@ import java.io.ByteArrayInputStream
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
+
 /** Multimodal-column plumbing for training-data pipelines: image/audio/
   * video payloads ride as opaque `binary` columns with a typed metadata
   * struct; per-item decode/feature-extraction runs as partition-local
@@ -430,10 +432,10 @@ object Multimodal {
       .select(col("media_id"), sha2(col("content"), 256).as("_ph"))
       .groupBy(col("_ph"))
       .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-    val clusters = groups.select(col("keep_id"), col("n_copies")).localCheckpoint()
+    val clusters = CheckpointPolicy.pin(groups.select(col("keep_id"), col("n_copies")))
     val reps = media.join(
       clusters.select(col("keep_id").as("media_id")), Seq("media_id"), "left_semi")
-    val hashed = dHashes(reps).toDF().localCheckpoint()
+    val hashed = CheckpointPolicy.pin(dHashes(reps).toDF())
     val allChunks = hashed.select(
       col("media_id").as("id"), col("dhash"),
       explode(expr(

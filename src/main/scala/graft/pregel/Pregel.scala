@@ -31,7 +31,9 @@ final case class PregelResult(state: DataFrame, converged: Boolean, iterations: 
   *    union (pregel.py:66-68);
   *  - the new state is pinned with [[CheckpointPolicy.pinObserved]],
   *    which reads the changed-vertex count off the pinning pass itself:
-  *    lineage stays O(1) and convergence costs no extra job;
+  *    lineage stays O(1) and convergence costs no extra job. With a
+  *    session checkpoint directory set the pins go there, so a cluster
+  *    run survives executor loss;
   *  - the routing table is pinned keyed on the sender and the state on
   *    the id (GraphX's co-partitioned routing table and vertex view), so
   *    the send join and the upsert need no exchange and the message
@@ -55,9 +57,6 @@ final case class PregelResult(state: DataFrame, converged: Boolean, iterations: 
   *                      defaults to the aggregated message
   * @param comparison    (newState, oldState) => changed? ; default null-safe !=
   * @param maxIterations superstep cap (reference default 10, pregel.py:32)
-  * @param checkpoint    where per-superstep state pins live —
-  *                      [[CheckpointPolicy.Reliable]] for cluster jobs that
-  *                      must survive executor loss
   * @param messageAggregator full replacement for the per-superstep
   *                      `groupBy(id).agg(aggExpr)`: a function from the
   *                      raw message frame (columns [[Columns.ID]],
@@ -82,7 +81,6 @@ final case class Pregel(
     updateExpr: Option[Column] = None,
     comparison: (Column, Column) => Column = GraphUtil.neNullSafe,
     maxIterations: Int = 10,
-    checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
     messageAggregator: Option[DataFrame => DataFrame] = None,
     superstepListener: Option[(Int, Double) => Unit] = None) {
   import Columns._
@@ -105,7 +103,7 @@ final case class Pregel(
     val sends = (msgToSrc.map((DST, SRC, _)) ++ msgToDst.map((SRC, DST, _))).toSeq
     // keyed on the sender, so the send join meets the id-keyed state
     // without an exchange
-    val routes = checkpoint.pin(GraphUtil.multipleUnion(sends.zipWithIndex.map {
+    val routes = CheckpointPolicy.pin(GraphUtil.multipleUnion(sends.zipWithIndex.map {
       case ((from, to, _), d) => g.edges.select(col(from).as(FROM), col(to).as(ID), lit(d).as(DIR))
     }), Some(FROM))
     val message = sends.indices.tail.foldLeft(col("_m0")) { (m, d) =>
@@ -113,7 +111,7 @@ final case class Pregel(
     }
 
     val init = g.vertices.withColumn(STATE, initialState)
-    var pinned = checkpoint.pin(init
+    var pinned = CheckpointPolicy.pin(init
       .withColumn(OLD_STATE, lit(null).cast(init.schema(STATE).dataType))
       .withColumn(CHANGED, lit(true)), Some(ID))
     var state = pinned.drop(CHANGED)
@@ -148,7 +146,8 @@ final case class Pregel(
         .drop(HIT)
 
       i += 1
-      val (stepped, observed) = checkpoint.pinObserved(next, s"pregel superstep $i", Some(ID))(
+      val (stepped, observed) = CheckpointPolicy.pinObserved(
+        next, s"pregel superstep $i", Some(ID))(
         count(when(col(CHANGED), lit(1))))
       pinned = stepped
       state = pinned.drop(CHANGED)

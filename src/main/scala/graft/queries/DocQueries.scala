@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
 import graft.dedup.Dedup
 import graft.text.TextFunctions
 
@@ -28,11 +29,11 @@ object DocQueries {
     * (d19 paid ~110 of its 123.5 s at 100x re-running the d12
     * composition — VERDICT r8). Keyed by (session identity, sf dir), so
     * a fresh session or a different data dir always rebuilds; frames are
-    * localCheckpoint-pinned, which ties them to the building session.
+    * pinned, which ties them to the building session.
     */
   private object SharedDedupIndex {
     // WeakHashMap keyed on the SESSION OBJECT: a stopped session's
-    // entries (holding localCheckpoint frames bound to its context)
+    // entries (holding pinned frames bound to its context)
     // become unreachable with the session itself — no leak across
     // sequential sessions in one JVM, and no identity-hash reuse ever
     // returning frames of a dead context (code-review r9 finding)
@@ -59,8 +60,7 @@ object DocQueries {
       * shared by d12 and d19 */
     def clusters(s: SparkSession, d: String): DataFrame =
       memo(s, s"$d|clusters0.4") {
-        index(s, d).clusterAssign(threshold = 0.4, idColOut = "doc_id")
-          .localCheckpoint()
+        CheckpointPolicy.pin(index(s, d).clusterAssign(threshold = 0.4, idColOut = "doc_id"))
       }
 
     /** corpus-remainder (doc_id % 10 != 0) index for the ingest-probe
@@ -80,13 +80,13 @@ object DocQueries {
       * mutate signal (VERDICT r12 item 5) */
     def ncl90(s: SparkSession, d: String): DataFrame =
       memo(s, s"$d|ncl90_0.4") {
-        corpus90(s, d).nearClusters(0.4).localCheckpoint()
+        CheckpointPolicy.pin(corpus90(s, d).nearClusters(0.4))
       }
 
     /** the full-corpus closure at 0.4 — d37's seed, same contract */
     def nclFull(s: SparkSession, d: String): DataFrame =
       memo(s, s"$d|nclfull_0.4") {
-        index(s, d).nearClusters(0.4).localCheckpoint()
+        CheckpointPolicy.pin(index(s, d).nearClusters(0.4))
       }
 
     /** the PERSISTED face: the full-corpus index written once per
@@ -725,19 +725,18 @@ object DocQueries {
       // own projection over ATTRIBUTES of a localCheckpointed frame —
       // identical per-row string ops, computed exactly once (guide
       // §1.2/§2.4: fix the algorithm shape before anything else).
-      val links = pages
-        .select(col("url"), explode(Html.extractLinks(col("html"))).as("href"))
-        .localCheckpoint() // extract once: small (url, href) string frame
-      val resolved = links
-        .select(col("url"), Urls.resolve(col("url"), col("href")).as("_abs"))
-        .localCheckpoint() // RFC-3986 resolution once per link row
-      val edges = resolved
+      // extract once: small (url, href) string frame
+      val links = CheckpointPolicy.pin(pages
+        .select(col("url"), explode(Html.extractLinks(col("html"))).as("href")))
+      // RFC-3986 resolution once per link row
+      val resolved = CheckpointPolicy.pin(links
+        .select(col("url"), Urls.resolve(col("url"), col("href")).as("_abs")))
+      val edges = CheckpointPolicy.pin(resolved
         .select(
           Urls.canonicalizeUrl(col("url")).as("src"),
           Urls.canonicalizeUrl(col("_abs")).as("dst"))
         .filter(col("src") =!= "" && col("dst") =!= "")
-        .distinct()
-        .localCheckpoint() // the string edge list, built once for the loop
+        .distinct()) // the string edge list, built once for the loop
       val verts = edges.select(col("src").as("id"))
         .union(edges.select(col("dst"))).distinct()
       // pin the indexed graph too: PageRank reads g.vertices every round

@@ -149,10 +149,10 @@ object EmbQueries {
       val name = "graft_ann_idx_" +
         java.lang.Long.toHexString(
           scala.util.hashing.MurmurHash3.stringHash(d).toLong & 0xffffffffL)
-      // default (Local) checkpointing, NOT Passthrough: centroids and
-      // cells share the fit lineage, and writePartitioned runs one
-      // action per table — unpinned, each write would re-run the whole
-      // k-means fit (measured 5x the pinned cost)
+      // build pins centroids and cells, which share the fit lineage:
+      // writePartitioned runs one action per table, so unpinned each
+      // write would re-run the whole k-means fit (measured 5x the
+      // pinned cost)
       val idx = graft.similarity.AnnIndex.build(
         emb, "vec_id", "embedding", k = 10, maxIterations = 5,
         fitSampleSize = FitSample)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Columns, Graph, GraphUtil}
+import graft.core.{CheckpointPolicy, Columns, Graph, GraphUtil}
 import graft.algorithms._
 import graft.datalog.{DatalogQuery, EdgeRule, VertexRule}
 import graft.pregel.Pregel
@@ -52,7 +52,7 @@ object GraphQueries {
   private def freshStoreName(prefix: String, d: String): String =
     s"${prefix}_${d.hashCode & 0x7fffffff}_${storeSeq.incrementAndGet()}"
   private def dropStore(s: SparkSession, name: String, result: DataFrame): DataFrame = {
-    val pinned = result.localCheckpoint() // eager: materialize before the drop
+    val pinned = CheckpointPolicy.pin(result) // eager: materialize before the drop
     graft.sources.GraphIO.family.drop(s, name)
     pinned
   }
@@ -825,7 +825,7 @@ object GraphQueries {
     "g60_ranks_lifecycle" -> ((s, d) => {
       // the maintained-ranks lifecycle under the value gate: store the
       // orders graph bucketed, buildRanks COLD (5 fixed rounds — g21's
-      // exact arithmetic riding the Passthrough bucketed-routes plan),
+      // exact arithmetic riding the unpinned bucketed-routes plan),
       // and read the persisted table back. Oracle = g21's unrolled CTE:
       // the storage round-trip and the zero-exchange plan shape must
       // not move a single value past the shared round(...,9)

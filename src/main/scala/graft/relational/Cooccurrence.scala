@@ -3,6 +3,8 @@ package graft.relational
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
+
 /** Item co-occurrence graph CONSTRUCTION from an interaction log — the
   * related-items / recommender primitive: two items are connected when
   * the same actors touch both, weighted by LIFT
@@ -52,7 +54,7 @@ object Cooccurrence {
           .select(col("u"))
         dist0.join(broadcast(hot), Seq("u"), "left_anti")
       }
-    val pinned = dist.localCheckpoint() // reused: N, item counts, both join sides
+    val pinned = CheckpointPolicy.pin(dist) // reused: N, item counts, both join sides
     val nUsers = pinned.agg(countDistinct(col("u")).as("N"))
     val itemCounts = pinned.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
     val pairs = pinned.as("a")

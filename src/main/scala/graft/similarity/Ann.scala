@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Three tiers, all UDF-free:
@@ -475,15 +477,15 @@ object Ann {
   def semanticDedupClusters(items: DataFrame, idCol: String, vecCol: String,
       labelCol: String, minDot: Long, maxIterations: Int = 20): DataFrame = {
     import graft.core.{Columns, Graph}
-    val groups = items
+    // CC iterates; don't recompute the collapse per round
+    val groups = CheckpointPolicy.pin(items
       .select(col(labelCol).as("cell"), col(idCol).as("_id"), col(vecCol).as("_v"))
       .groupBy(col("cell"), expr(
         "transform(_v, x -> cast(round(cast(x as double) * 1000) as bigint))").as("_qv"))
       .agg(
         min(col("_id")).as("rep"),
         sort_array(collect_list(col("_id"))).as("ids"),
-        min_by(col("_v"), col("_id")).as("_rv"))
-      .localCheckpoint() // CC iterates; don't recompute the collapse per round
+        min_by(col("_v"), col("_id")).as("_rv")))
     val pairs = groups.as("x").join(groups.as("y"),
         col("x.cell") === col("y.cell") && col("x.rep") < col("y.rep") &&
           quantizedDot(col("x._rv"), col("y._rv")) > lit(minDot))
@@ -591,11 +593,9 @@ object Ann {
     */
   def prototypes(items: DataFrame, idCol: String, vecCol: String,
       k: Int, m: Int, maxIterations: Int = 5,
-      fitSampleSize: Int = 0,
-      checkpoint: graft.core.CheckpointPolicy = graft.core.CheckpointPolicy.Local)
+      fitSampleSize: Int = 0)
       : DataFrame = {
-    val cent = KMeans.fitPortable(items, idCol, vecCol, k, maxIterations,
-      checkpoint, fitSampleSize)
+    val cent = KMeans.fitPortable(items, idCol, vecCol, k, maxIterations, fitSampleSize)
     val it = items.select(col(idCol).as("_id"), col(vecCol).as("_v"))
     // single corpus pass: per (item, cell) the shared i64 dot feeds both
     // the assignment score (same formula as KMeans.assignPortable) and

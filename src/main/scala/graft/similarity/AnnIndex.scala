@@ -84,22 +84,21 @@ object AnnIndex {
   /** Fit the portable k-means quantizer (Lloyd rounds on the bounded
     * deterministic sample), label the corpus once, and aggregate the
     * full-membership centroid sums — all the expensive work, paid here
-    * and never again. Pass [[CheckpointPolicy.Passthrough]] when the
-    * frames go straight to [[writePartitioned]] (the
-    * [[graft.dedup.DedupIndex.build]] convention). */
+    * and never again. Both frames are pinned ([[CheckpointPolicy.pin]]),
+    * so [[writePartitioned]]'s one action per table does not re-run the
+    * fit. */
   def build(
       items: DataFrame, idCol: String, vecCol: String,
-      k: Int, maxIterations: Int = 5, fitSampleSize: Int = 0,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Index = {
+      k: Int, maxIterations: Int = 5, fitSampleSize: Int = 0): Index = {
     val labels = KMeans.fitPredictPortable(
-      items, idCol, vecCol, k, maxIterations, checkpoint, fitSampleSize)
-    val cells = checkpoint.pin(
+      items, idCol, vecCol, k, maxIterations, fitSampleSize)
+    val cells = CheckpointPolicy.pin(
       items.select(col(idCol).as("id"), col(vecCol).as("v"))
         .join(labels.select(col(idCol).as("id"), col("cell")), Seq("id")))
     // full-membership sums — the Ann.ivfTopK centroid aggregation, with
     // its ragged-length guard
     val comp = cells.select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-    val centroids = checkpoint.pin(comp.groupBy(col("cell"), col("dim"))
+    val centroids = CheckpointPolicy.pin(comp.groupBy(col("cell"), col("dim"))
       .agg(
         sum(expr("cast(round(cast(x as double) * 1000) as bigint)")).as("sx"),
         count(lit(1)).as("nd"))
@@ -261,15 +260,14 @@ object AnnIndex {
   def deletePartitioned(
       spark: SparkSession, name: String, ids: DataFrame, idCol: String): Unit =
     family.mutate(spark, name) {
-      val del = ids.select(col(idCol).as("id")).distinct().localCheckpoint()
+      val del = CheckpointPolicy.pin(ids.select(col(idCol).as("id")).distinct())
       val cells = spark.table(s"${name}_cells")
       // touched partitions — batch-bounded (≤ one per deleted vector)
-      val touched = cells.join(del, Seq("id"), "left_semi")
-        .select(col("cell")).distinct().localCheckpoint()
+      val touched = CheckpointPolicy.pin(cells.join(del, Seq("id"), "left_semi")
+        .select(col("cell")).distinct())
       if (touched.isEmpty) return
-      val kept = cells.join(broadcast(touched), Seq("cell"), "left_semi")
-        .join(del, Seq("id"), "left_anti")
-        .localCheckpoint() // pinned: the dynamic overwrite below rewrites
+      val kept = CheckpointPolicy.pin(cells.join(broadcast(touched), Seq("cell"), "left_semi")
+        .join(del, Seq("id"), "left_anti")) // pinned: the dynamic overwrite below rewrites
                            // the very partitions this plan reads
       // partitions with survivors: rewrite just those (dynamic mode
       // only touches partitions present in the data)
@@ -378,7 +376,6 @@ object AnnIndex {
   def rebuildIfDrifted(
       idx: Index, maxGrowthSkew: Double = 4.0, imbalanceFactor: Double = 2.0,
       k: Int = 0, maxIterations: Int = 5, fitSampleSize: Int = 0,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local,
       precomputedStats: Option[org.apache.spark.sql.Row] = None): (Index, Boolean) = {
     // bounded: one diagnostics row
     val s = precomputedStats.getOrElse(driftStats(idx).head())
@@ -392,7 +389,7 @@ object AnnIndex {
             (k0 * math.sqrt(math.max(s.getAs[Double]("growth"), 1.0))).ceil.toInt)
         }
       (build(idx.cells.select(col("id"), col("v")), "id", "v", kk,
-        maxIterations, fitSampleSize, checkpoint), true)
+        maxIterations, fitSampleSize), true)
     }
   }
 
@@ -419,7 +416,7 @@ object AnnIndex {
     family.mutate(spark, name) {
       val (next, rebuilt) = rebuildIfDrifted(
         readPartitioned(spark, name), maxGrowthSkew, imbalanceFactor,
-        k, maxIterations, fitSampleSize, CheckpointPolicy.Local,
+        k, maxIterations, fitSampleSize,
         precomputedStats)
       if (rebuilt) writePartitioned(next, name)
       rebuilt

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
+
 /** Lloyd's k-means over an `array<float>` embedding column — the coarse
   * quantizer for IVF similarity search when no cluster labels ship with
   * the data. UDF-free and fully deterministic:
@@ -144,7 +146,6 @@ object KMeans {
     */
   def fit(items: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIterations: Int = 10,
-      checkpoint: graft.core.CheckpointPolicy = graft.core.CheckpointPolicy.Local,
       fitSampleSize: Int = 0): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val all = items.select(col(idCol), col(vecCol))
@@ -153,15 +154,15 @@ object KMeans {
     // rounds keep full parallelism
     val it =
       if (fitSampleSize <= 0) all
-      else checkpoint.pin(
+      else CheckpointPolicy.pin(
         all.orderBy(xxhash64(col(idCol)), col(idCol)).limit(fitSampleSize)
           .repartition(col(idCol)))
-    var centroids = checkpoint.pin(farthestFirstSeeds(it, idCol, vecCol, k))
+    var centroids = CheckpointPolicy.pin(farthestFirstSeeds(it, idCol, vecCol, k))
     var i = 0
     while (i < maxIterations) {
       val assignments = assign(it, centroids, idCol, vecCol)
       val fresh = recompute(it, assignments, idCol, vecCol)
-      centroids = checkpoint.pin(
+      centroids = CheckpointPolicy.pin(
         centroids.select(col("cell"), col("cv").as("_prev"))
           .join(fresh, Seq("cell"), "left")
           .select(col("cell"), coalesce(col("cv"), col("_prev")).as("cv")))
@@ -175,10 +176,9 @@ object KMeans {
     * Lloyd rounds read. */
   def fitPredict(items: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIterations: Int = 10,
-      checkpoint: graft.core.CheckpointPolicy = graft.core.CheckpointPolicy.Local,
       fitSampleSize: Int = 0): DataFrame =
     assign(items,
-      fit(items, idCol, vecCol, k, maxIterations, checkpoint, fitSampleSize),
+      fit(items, idCol, vecCol, k, maxIterations, fitSampleSize),
       idCol, vecCol)
 
   // --- portable (cross-engine-replayable) variant --------------------------
@@ -250,14 +250,13 @@ object KMeans {
     */
   def fitPortable(items: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIterations: Int = 10,
-      checkpoint: graft.core.CheckpointPolicy = graft.core.CheckpointPolicy.Local,
       fitSampleSize: Int = 0): DataFrame = {
     require(k >= 1, "k must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val all = items.select(col(idCol).as("_id"), col(vecCol).as("_v"))
     val it =
       if (fitSampleSize <= 0) all
-      else checkpoint.pin(
+      else CheckpointPolicy.pin(
         all.orderBy(sha2(col("_id").cast("string"), 256), col("_id"))
           .limit(fitSampleSize)
           .repartition(col("_id")))
@@ -267,7 +266,7 @@ object KMeans {
     val seeds = it.orderBy(seedKey, col("_id")).limit(k)
       .withColumn("cell",
         row_number().over(Window.orderBy(seedKey, col("_id"))) - 1)
-    var centroids = checkpoint.pin(withSs(seeds.select(
+    var centroids = CheckpointPolicy.pin(withSs(seeds.select(
       col("cell").cast("long").as("cell"),
       quantized("_v").as("cs"),
       lit(1L).as("n"))))
@@ -295,7 +294,7 @@ object KMeans {
               lit(" — member count is ill-defined; pad or filter to uniform dims"))))
             .as("n"))
       // a cell that loses every member keeps its previous centroid, like fit
-      centroids = checkpoint.pin(withSs(
+      centroids = CheckpointPolicy.pin(withSs(
         centroids.select(col("cell"), col("cs").as("_pc"), col("n").as("_pn"))
           .join(fresh, Seq("cell"), "left")
           .select(col("cell"),
@@ -311,11 +310,10 @@ object KMeans {
     * assigned; `fitSampleSize` bounds only what the Lloyd rounds read. */
   def fitPredictPortable(items: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIterations: Int = 10,
-      checkpoint: graft.core.CheckpointPolicy = graft.core.CheckpointPolicy.Local,
       fitSampleSize: Int = 0): DataFrame = {
     val labels = assignPortable(
       items.select(col(idCol).as("_id"), col(vecCol).as("_v")),
-      fitPortable(items, idCol, vecCol, k, maxIterations, checkpoint, fitSampleSize),
+      fitPortable(items, idCol, vecCol, k, maxIterations, fitSampleSize),
       "_id", "_v")
     labels.select(col("_id").as(idCol), col("cell"))
   }

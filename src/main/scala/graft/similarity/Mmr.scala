@@ -42,12 +42,11 @@ object Mmr {
     */
   def rerank(
       items: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      shortlist: Int, k: Int,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+      shortlist: Int, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val itemVecs = items.select(col(idCol).as("_sid"), col(vecCol).as("_sv"))
-    val cand = checkpoint.pin(
+    val cand = CheckpointPolicy.pin(
       Ann.bruteForceTopK(items, queries, idCol, vecCol, shortlist)
         .join(items.select(col(idCol).as("nid"), col(vecCol).as("nv")),
           Seq("nid")))
@@ -64,8 +63,8 @@ object Mmr {
       .select(col("qid"), col("nid"),
         Ann.quantizedDot(col("nv"), col("_sv")).as("_ns"))
 
-    var sel = checkpoint.pin(pickFrom(cand, col("qdot"), 1))
-    var best = checkpoint.pin(
+    var sel = CheckpointPolicy.pin(pickFrom(cand, col("qdot"), 1))
+    var best = CheckpointPolicy.pin(
       simToPick(sel).withColumnRenamed("_ns", "maxsim"))
     var r = 2
     while (r <= k) {
@@ -73,10 +72,10 @@ object Mmr {
         .join(sel.select(col("qid"), col("nid")), Seq("qid", "nid"), "left_anti")
         .select(col("qid"), col("nid"),
           (col("qdot") - col("maxsim")).as("_sc"))
-      val pick = checkpoint.pin(pickFrom(scored, col("_sc"), r))
-      sel = checkpoint.pin(sel.unionByName(pick))
+      val pick = CheckpointPolicy.pin(pickFrom(scored, col("_sc"), r))
+      sel = CheckpointPolicy.pin(sel.unionByName(pick))
       if (r < k) {
-        best = checkpoint.pin(
+        best = CheckpointPolicy.pin(
           best.join(simToPick(pick), Seq("qid", "nid"))
             .select(col("qid"), col("nid"),
               greatest(col("maxsim"), col("_ns")).as("maxsim")))

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
+
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011) — the memory layout that makes
   * billion-vector search feasible: split each D-dim vector into `m`
@@ -52,19 +54,18 @@ object Pq {
     // small latency-bound driver jobs — run them as concurrent Spark job
     // streams so the scheduler interleaves the slack (the SCC device)
     val books = concurrently(0 until m) { j =>
-      KMeans.fit(
+      CheckpointPolicy.pin(KMeans.fit(
         items.select(col(idCol), subVec(vecCol, j, subDim).as("_sv")),
         idCol, "_sv", ksub, maxIterations,
         fitSampleSize = fitSampleSize)
-        .select(lit(j).as("subspace"), col("cell").cast("int").as("code"), col("cv"))
-        .localCheckpoint()
+        .select(lit(j).as("subspace"), col("cell").cast("int").as("code"), col("cv")))
     }
-    PqModel(books.reduce(_ unionByName _).localCheckpoint(), m, subDim)
+    PqModel(CheckpointPolicy.pin(books.reduce(_ unionByName _)), m, subDim)
   }
 
   /** Run independent per-subspace builds as concurrent Spark job
     * streams; each thunk must be deterministic and self-contained. The
-    * results are materialized (localCheckpoint) inside their own thread
+    * results are pinned inside their own thread
     * so no lazy plan escapes the concurrency scope. */
   private def concurrently[A](js: Range)(f: Int => A): Seq[A] = {
     import scala.concurrent.{Await, Future}
@@ -107,13 +108,12 @@ object Pq {
     val subDim = dims / m
     // independent deterministic fits -> concurrent job streams (see fit)
     val books = concurrently(0 until m) { j =>
-      KMeans.fitPortable(
+      CheckpointPolicy.pin(KMeans.fitPortable(
         items.select(col(idCol), subVec(vecCol, j, subDim).as("_sv")),
         idCol, "_sv", ksub, maxIterations, fitSampleSize = fitSampleSize)
-        .select(lit(j).as("subspace"), col("cell"), col("cs"), col("n"), col("ss"))
-        .localCheckpoint()
+        .select(lit(j).as("subspace"), col("cell"), col("cs"), col("n"), col("ss")))
     }
-    PqPortableModel(books.reduce(_ unionByName _).localCheckpoint(), m, subDim)
+    PqPortableModel(CheckpointPolicy.pin(books.reduce(_ unionByName _)), m, subDim)
   }
 
   /** Portable encode: per-subspace [[KMeans.assignPortable]] (exact-integer
@@ -198,8 +198,8 @@ object Pq {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val coarseF = Future(KMeans.fitPortable(items, idCol, vecCol, coarseK,
-      maxIterations, fitSampleSize = fitSampleSize).localCheckpoint())
+    val coarseF = Future(CheckpointPolicy.pin(KMeans.fitPortable(items, idCol, vecCol, coarseK,
+      maxIterations, fitSampleSize = fitSampleSize)))
     val pqF = Future(fitPortable(items, idCol, vecCol, dims, m, ksub,
       maxIterations, fitSampleSize))
     val coarse = Await.result(coarseF, Duration.Inf)

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Graph
+import graft.core.{CheckpointPolicy, Graph}
 
 /** Parquet persistence for graphs — the library's source/sink pair.
   *
@@ -483,12 +483,11 @@ object GraphIO {
     val stored = spark.table(s"${name}_vertices")
     val directed = stored.select("_directed").limit(1).collect()
       .headOption.forall(_.getBoolean(0))
-    val fresh = Graph.keyVertices(rawVertices)
+    // pinned: the append below writes into a table this plan reads
+    val fresh = CheckpointPolicy.pin(Graph.keyVertices(rawVertices)
       .join(stored.select(col("id")), Seq("id"), "left_anti")
       .withColumn("_directed", lit(directed))
-      .select(stored.columns.map(col).toIndexedSeq: _*)
-      // pinned: the append below writes into a table this plan reads
-      .localCheckpoint()
+      .select(stored.columns.map(col).toIndexedSeq: _*))
     family.write(spark, name, "vertices", fresh, append = true)
     // a genuinely-new vertex is its own weak component until an edge
     // arrives — O(batch) inserted rows, exactly what a rebuild would say
@@ -544,20 +543,19 @@ object GraphIO {
     // the anti-join keys on (src, edge_id) while the table is bucketed
     // on src alone — subset-key co-partitioning lets the stored side
     // ride its bucketing with ZERO exchange (the batch aligns to the
-    // bucket layout instead). Scoped to the eager localCheckpoint.
+    // bucket layout instead). Scoped to the eager pin.
     val fresh = withSubsetKeyCoPartition(spark) {
-      Graph.keyEdges(rawEdges)
+      // consumed by the edge append, the degree delta AND the
+      // component merge; pinned so the append below cannot invalidate
+      // the plan that feeds it (an append writes into the table the
+      // plan reads — the one face the staged-overwrite device cannot
+      // cover, and the batch-sized frame is cheap to pin)
+      CheckpointPolicy.pin(Graph.keyEdges(rawEdges)
         .join(v.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(v.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .join(stored.select(col("src"), col("edge_id")),
           Seq("src", "edge_id"), "left_anti")
-        .select(stored.columns.map(col).toIndexedSeq: _*)
-        // consumed by the edge append, the degree delta AND the
-        // component merge; pinned so the append below cannot invalidate
-        // the plan that feeds it (an append writes into the table the
-        // plan reads — the one face the staged-overwrite device cannot
-        // cover, and the batch-sized frame is cheap to pin)
-        .localCheckpoint()
+        .select(stored.columns.map(col).toIndexedSeq: _*))
     }
     // LAZY: the staged write below reads the LIVE degree table while
     // writing its replacement, so no defensive pin is needed
@@ -596,10 +594,9 @@ object GraphIO {
         .join(comp.select(col("id").as("dst"), col("component").as("_cb")),
           Seq("dst"))
         .filter(col("_ca") =!= col("_cb"))
-      val touched = labelled
+      val touched = CheckpointPolicy.pin(labelled
         .select(col("_ca"), col("_cb"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       if (!touched.isEmpty) {
         // certificate upkeep ([[buildForest]]): every batch edge that
         // crosses two CURRENT components joins the certificate — the
@@ -610,11 +607,10 @@ object GraphIO {
         // the PRE-merge labels before the relabel overwrite below.
         val crossing =
           if (hasForest(spark, name))
-            Some(labelled
+            Some(CheckpointPolicy.pin(labelled
               .select(least(col("src"), col("dst")).as("src"),
                 greatest(col("src"), col("dst")).as("dst"))
-              .distinct()
-              .localCheckpoint())
+              .distinct()))
           else None
         // the certificate append runs BEFORE the relabel commits (ADVICE
         // r13): a crash between the two writes then only leaves an EXTRA
@@ -630,10 +626,9 @@ object GraphIO {
         }
         val labels = graft.algorithms.AlternatingConnectedComponents
           .minLabels(touched, "_ca", "_cb")
-        val mapping = labels
+        val mapping = CheckpointPolicy.pin(labels
           .filter(col("id") =!= col("component"))
-          .select(col("id").as("_old"), col("component").as("_new"))
-          .localCheckpoint()
+          .select(col("id").as("_old"), col("component").as("_new")))
         // the mapping is bounded by the batch's touched-component pairs,
         // so BROADCAST it: the relabel stays a narrow map over the
         // id-bucketed table and the overwrite needs no exchange at all
@@ -682,10 +677,9 @@ object GraphIO {
         s"vertex schema ${stored.columns.mkString(",")}")
     // a presence flag, not coalesce on the value: a matched row replaces
     // its attributes WHOLESALE, so an explicit null in the batch lands
-    val renamed = batch.select(
+    val renamed = CheckpointPolicy.pin(batch.select(
       col("id") +: lit(true).as("_hit") +:
-        attrs.map(c => col(c).as(s"_new_$c")).toIndexedSeq: _*)
-      .localCheckpoint()
+        attrs.map(c => col(c).as(s"_new_$c")).toIndexedSeq: _*))
     // two batch rows for one id with DIFFERENT attrs would fan the join
     // out and duplicate stored vertices — refuse loudly (exact-duplicate
     // rows already collapsed in the keying)
@@ -744,8 +738,8 @@ object GraphIO {
     // the USING join fronts its keys — restore the stored column order
     // so the rewrite round-trips the table schema exactly
     val cols = stored.columns.map(col).toIndexedSeq
-    val keys = Graph.keyEdges(rawEdges)
-      .select(col("src"), col("edge_id")).distinct().localCheckpoint()
+    val keys = CheckpointPolicy.pin(Graph.keyEdges(rawEdges)
+      .select(col("src"), col("edge_id")).distinct())
     // rows actually stored that the batch names — batch-sized, so
     // materializing it to gate the no-op path is cheap; `kept` stays
     // LAZY: a redelivered delete matches nothing and must not pay an
@@ -753,8 +747,8 @@ object GraphIO {
     // 100x corpus when it was eager), and the matched path writes it
     // straight into the staged table while the live one stays readable
     val removed = withSubsetKeyCoPartition(spark) {
-      stored.join(keys, Seq("src", "edge_id"), "left_semi")
-        .select(cols: _*).localCheckpoint()
+      CheckpointPolicy.pin(stored.join(keys, Seq("src", "edge_id"), "left_semi")
+        .select(cols: _*))
     }
     if (!removed.isEmpty) {
       val kept = stored.join(keys, Seq("src", "edge_id"), "left_anti")
@@ -779,10 +773,9 @@ object GraphIO {
       // certificate — one aggregation serves both
       val removedCanon =
         if (repairComponents && hasForest(spark, name))
-          Some(removed.select(
+          Some(CheckpointPolicy.pin(removed.select(
             least(col("src"), col("dst")).as("src"),
-            greatest(col("src"), col("dst")).as("dst")).distinct()
-            .localCheckpoint())
+            greatest(col("src"), col("dst")).as("dst")).distinct()))
         else None
       val forestSkip = removedCanon.exists(rc =>
         readForest(spark, name).join(rc, Seq("src", "dst"), "left_semi").isEmpty)
@@ -813,7 +806,7 @@ object GraphIO {
       repairComponents: Boolean = true): Unit = family.mutate(spark, name) {
     import org.apache.spark.sql.functions._
     dropUntrustedForest(spark, name)
-    val ids = Graph.keyVertices(rawVertices).select(col("id")).localCheckpoint()
+    val ids = CheckpointPolicy.pin(Graph.keyVertices(rawVertices).select(col("id")))
     val storedV = spark.table(s"${name}_vertices")
     // redelivery guard: nothing stored matches -> a true no-op (no
     // rewrites, no component repair)
@@ -862,14 +855,13 @@ object GraphIO {
     val stored = spark.table(s"${name}_edges")
     val ecols = stored.columns.map(col).toIndexedSeq
     val gone = broadcastIfSmall(ids)
-    val removed = stored
+    val removed = CheckpointPolicy.pin(stored
       .join(gone.select(col("id").as("src")), Seq("src"), "left_semi")
       .select(ecols: _*)
       .unionByName(stored
         .join(gone.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(gone.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(ecols: _*))
-      .localCheckpoint()
+        .select(ecols: _*)))
     // LAZY: the edge rewrite in applyEdgeRemoval stages it likewise
     val kept = stored
       .join(gone.select(col("id").as("src")), Seq("src"), "left_anti")
@@ -975,10 +967,9 @@ object GraphIO {
       spark: SparkSession, name: String, endpointIds: DataFrame): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
     if (!hasComponents(spark, name)) None
-    else Some(readComponents(spark, name)
+    else Some(CheckpointPolicy.pin(readComponents(spark, name)
       .join(endpointIds.distinct(), Seq("id"), "left_semi")
-      .select(col("component").as("_lbl")).distinct()
-      .localCheckpoint())
+      .select(col("component").as("_lbl")).distinct()))
   }
 
   /** Bounded component repair after a delete (VERDICT r11 item 5 — the
@@ -1010,11 +1001,10 @@ object GraphIO {
     val lbl = broadcastIfSmall(labels)
     val inAffected = comp.join(lbl, comp("component") === lbl("_lbl"), "left_semi")
       .select(col("id"))
-    val survivors = removedIds.fold(inAffected)(ids =>
-        inAffected.join(ids, Seq("id"), "left_anti"))
-      // bounded by the affected component mass; feeds the CC rounds AND
-      // the splice below
-      .localCheckpoint()
+    // bounded by the affected component mass; feeds the CC rounds AND
+    // the splice below
+    val survivors = CheckpointPolicy.pin(removedIds.fold(inAffected)(ids =>
+        inAffected.join(ids, Seq("id"), "left_anti")))
     val repaired =
       if (hasForest(spark, name))
         replacementEdgeRepair(spark, name, survivors, removedIds, removedPairs)
@@ -1078,13 +1068,11 @@ object GraphIO {
     // 1. pieces of the affected components under the surviving forest —
     // the src semi-join is complete (a forest edge never crosses a
     // component, and rows touching erased vertices are already gone)
-    val forestAff = keptForest
+    val forestAff = CheckpointPolicy.pin(keptForest
       .join(survivors.select(col("id").as("src")), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"))
-      .localCheckpoint()
-    val pieces = labelsFor(survivors, forestAff)
-      .select(col("id"), col("component").as("_piece"))
-      .localCheckpoint()
+      .select(col("src"), col("dst")))
+    val pieces = CheckpointPolicy.pin(labelsFor(survivors, forestAff)
+      .select(col("id"), col("component").as("_piece")))
     // 2. the probe side: all pieces EXCEPT each component's largest
     // (ties broken by piece label — exactly one exempt piece per
     // component, so the incidence probe below stays complete)
@@ -1097,10 +1085,9 @@ object GraphIO {
       .withColumn("_rk", row_number().over(win))
       .filter(col("_rk") > 1)
       .select(col("_piece"))
-    val moved = pieces
+    val moved = CheckpointPolicy.pin(pieces
       .join(probePieces, Seq("_piece"), "left_semi")
-      .select(col("id"))
-      .localCheckpoint()
+      .select(col("id")))
     val edges = spark.table(s"${name}_edges")
     val mv = broadcastIfSmall(moved)
     val cand = edges
@@ -1119,12 +1106,11 @@ object GraphIO {
       .filter(col("_pa") =!= col("_pb"))
     // one representative (min canonical) edge per unordered piece pair —
     // piece-pair-sized from here on, bounded by the cut's fragment count
-    val rep = crossing
+    val rep = CheckpointPolicy.pin(crossing
       .select(least(col("_pa"), col("_pb")).as("_pa"),
         greatest(col("_pa"), col("_pb")).as("_pb"),
         struct(col("src"), col("dst")).as("_e"))
-      .groupBy(col("_pa"), col("_pb")).agg(min(col("_e")).as("_e"))
-      .localCheckpoint()
+      .groupBy(col("_pa"), col("_pb")).agg(min(col("_e")).as("_e")))
     // 3a. merged labels over the piece graph (min-label = final min id)
     val pieceMerge = graft.algorithms.AlternatingConnectedComponents.minLabels(rep, "_pa", "_pb")
     // 3b. the spanning subset of piece pairs → their representative
@@ -1137,9 +1123,8 @@ object GraphIO {
     val splice = spanPieces.join(rep, Seq("_pa", "_pb"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
     family.write(spark, name, "forest", keptForest.unionByName(splice))
-    val grp = broadcastIfSmall(pieceMerge
-      .select(col("id").as("_piece"), col("component").as("_grp"))
-      .localCheckpoint())
+    val grp = broadcastIfSmall(CheckpointPolicy.pin(pieceMerge
+      .select(col("id").as("_piece"), col("component").as("_grp"))))
     pieces.join(grp, Seq("_piece"), "left")
       .select(col("id"), coalesce(col("_grp"), col("_piece")).as("component"))
   }
@@ -1182,9 +1167,12 @@ object GraphIO {
       damping: Double = 0.85, maxIterations: Int = 10,
       tolerance: Option[Double] = None): Int = family.mutate(spark, name) {
     val g = readBucketed(spark, name)
-    val pr = rankEngine(damping, maxIterations, tolerance)
-    // PageRank's result is already pinned by its per-round checkpoint
-    // policy; the staged write never reads the live rank table anyway
+    // over the bucketed edge table the routing table is a stored read,
+    // so PageRank's keyed pin leaves it unpinned: each round re-reads the
+    // bucketed layout with zero exchange instead of a pinned copy
+    val pr = graft.algorithms.PageRank(damping, maxIterations, tolerance)
+    // PageRank's result is already pinned by its last round; the staged
+    // write never reads the live rank table anyway
     family.write(spark, name, "ranks", pr.run(g))
     pr.lastIterations
   }
@@ -1206,17 +1194,10 @@ object GraphIO {
       damping: Double = 0.85, maxIterations: Int = 10,
       tolerance: Option[Double] = Some(1e-9)): Int = family.mutate(spark, name) {
     val g = readBucketed(spark, name)
-    val pr = rankEngine(damping, maxIterations, tolerance)
+    val pr = graft.algorithms.PageRank(damping, maxIterations, tolerance)
     family.write(spark, name, "ranks", pr.runFrom(g, readRanks(spark, name)))
     pr.lastIterations
   }
-
-  private def rankEngine(
-      damping: Double, maxIterations: Int, tolerance: Option[Double]) =
-    graft.algorithms.PageRank(damping, maxIterations, tolerance,
-      // the routing table re-reads the bucketed edge layout with zero
-      // exchange each round instead of re-shuffling a checkpointed copy
-      staticCheckpoint = Some(graft.core.CheckpointPolicy.Passthrough))
 
   /** Streaming face of [[appendEdges]] — continuous edge ingest into the
     * bucketed graph: each micro-batch folds through the same append path,

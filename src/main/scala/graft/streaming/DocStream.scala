@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
 import graft.dedup.Dedup
 import graft.text.TextFunctions
 
@@ -41,19 +42,17 @@ object DocStream {
       corpus: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32): CorpusIndex = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sh = corpus.select(
+    val sh = CheckpointPolicy.pin(corpus.select(
       col(idCol).as("corpus_id"),
       array_distinct(
         TextFunctions.shingles(TextFunctions.tokens(col(textCol)), shingleSize))
         .as("corpus_sh"))
-      .filter(size(col("corpus_sh")) > 0)
-      .localCheckpoint()
-    val buckets = Dedup
+      .filter(size(col("corpus_sh")) > 0))
+    val buckets = CheckpointPolicy.pin(Dedup
       .minhashSignatures(
         sh.select(col("corpus_id").as("id"), col("corpus_sh").as("sh")), numHashes)
       .select(col("id").as("corpus_id"),
-        explode(Dedup.lshBuckets(col("sig"), bands, numHashes / bands)).as("bk"))
-      .localCheckpoint()
+        explode(Dedup.lshBuckets(col("sig"), bands, numHashes / bands)).as("bk")))
     CorpusIndex(buckets, sh, shingleSize, numHashes, bands)
   }
 
@@ -74,7 +73,7 @@ object DocStream {
     * Jaccard to everything — loses nothing: a hit against the
     * representative IS a hit against each copy, recoverable through
     * `clusters`. At warehouse scale persist `clusters`/`index` to a table
-    * instead of the localCheckpoint used here. */
+    * instead of the pins used here. */
   def indexCorpusDeduped(
       corpus: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32): DedupedCorpusIndex = {
@@ -89,8 +88,8 @@ object DocStream {
       .select(col(idCol), sha2(col(textCol), 256).as("_th"))
       .groupBy(col("_th"))
       .agg(min(col(idCol)).as("corpus_id"), count(lit(1)).as("corpus_n_copies"))
-    val clusters = groups
-      .select(col("corpus_id"), col("corpus_n_copies")).localCheckpoint()
+    val clusters = CheckpointPolicy.pin(groups
+      .select(col("corpus_id"), col("corpus_n_copies")))
     val reps = corpus.join(
       clusters.select(col("corpus_id").as(idCol)), Seq(idCol), "left_semi")
     val idx = indexCorpus(reps.select(col(idCol), col(textCol)),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
 import graft.multimodal.Multimodal
 
 /** Ingestion-time PERCEPTUAL dedup for media: flag images (or any binary
@@ -60,22 +61,20 @@ object MediaStream {
       .groupBy(col("_ph"))
       .agg(min(col("media_id")).as("corpus_id"),
         count(lit(1)).as("corpus_n_copies"))
-    val clusters = groups
-      .select(col("corpus_id"), col("corpus_n_copies")).localCheckpoint()
+    val clusters = CheckpointPolicy.pin(groups
+      .select(col("corpus_id"), col("corpus_n_copies")))
     val reps = media.join(
       clusters.select(col("corpus_id").as("media_id")), Seq("media_id"), "left_semi")
-    val hashes = Multimodal.dHashes(reps).toDF()
-      .select(col("media_id").as("corpus_id"), col("dhash").as("corpus_dhash"))
-      .localCheckpoint()
+    val hashes = CheckpointPolicy.pin(Multimodal.dHashes(reps).toDF()
+      .select(col("media_id").as("corpus_id"), col("dhash").as("corpus_dhash")))
     val allChunks = hashes.select(
       col("corpus_id"), col("corpus_dhash"),
       explode(expr(
         "transform(sequence(0, 3), c -> " +
           "struct(c as c, shiftright(corpus_dhash, c * 16) & 65535 as v))")).as("ck"))
       .select(col("ck.c").as("c"), col("ck.v").as("v"), col("corpus_id"))
-    val chunks = graft.dedup.Dedup
-      .dropHotChunks(allChunks, struct(col("c"), col("v")), maxBucketSize)
-      .localCheckpoint()
+    val chunks = CheckpointPolicy.pin(graft.dedup.Dedup
+      .dropHotChunks(allChunks, struct(col("c"), col("v")), maxBucketSize))
     MediaIndex(chunks, hashes, clusters)
   }
 

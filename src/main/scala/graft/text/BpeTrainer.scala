@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CheckpointPolicy
+
 /** Distributed BPE merge-table LEARNING — the training half of the BPE
   * story (the applying half is the native [[graft.functions.BpeCount]] /
   * [[graft.functions.BpeSegment]] expressions and their replace-chain
@@ -24,7 +26,7 @@ import org.apache.spark.sql.functions._
   * the corpus again; no step shuffles anything larger than the
   * vocabulary; the argmax never collects to the driver — each round's
   * winner stays a 1-row DataFrame unioned lazily into the result.
-  * Rounds are `localCheckpoint`ed (the HyperBall/Pregel device) so the
+  * Rounds are pinned (the HyperBall/Pregel device) so the
   * plan stays round-sized instead of compounding.
   *
   * Pair counting follows the reference implementation's convention:
@@ -64,29 +66,26 @@ object BpeTrainer {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     // ONE corpus pass: occurrences collapse to word types with counts.
     // The initial working string wraps every character as a symbol.
-    var vocab = docs
+    var vocab = CheckpointPolicy.pin(docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(regexp_replace(col("w"), "(.)", Sep + "$1" + Sep).as("s"),
-        col("freq"))
-      .localCheckpoint()
+        col("freq")))
     val rounds = (1 to numMerges).map { r =>
-      val best = vocab
+      val best = CheckpointPolicy.pin(vocab
         .select(col("freq"), explode(adjacentPairs(col("s"))).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1)
-        .select(lit(r).as("rank"), col("a"), col("b"), col("cnt"))
-        .localCheckpoint()
-      vocab = vocab
+        .select(lit(r).as("rank"), col("a"), col("b"), col("cnt")))
+      vocab = CheckpointPolicy.pin(vocab
         .crossJoin(broadcast(best.select(col("a").as("_ma"), col("b").as("_mb"))))
         .select(
           replace(col("s"),
             concat(lit(Sep), col("_ma"), lit(Sep + Sep), col("_mb"), lit(Sep)),
             concat(lit(Sep), col("_ma"), col("_mb"), lit(Sep))).as("s"),
-          col("freq"))
-        .localCheckpoint()
+          col("freq")))
       best
     }
     rounds.reduce(_ unionByName _)

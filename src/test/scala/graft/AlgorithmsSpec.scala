@@ -138,24 +138,17 @@ class AlgorithmsSpec extends SparkSpec {
     assert(multi === Map(0L -> 0, 2L -> 0, 1L -> 1, 3L -> 1, 4L -> 2))
   }
 
-  test("CheckpointPolicy.Reliable pins rounds to the checkpoint dir and matches Local") {
-    import graft.core.CheckpointPolicy
+  test("a checkpoint dir pins rounds reliably and matches the local pins") {
     val g = Fixtures.twoComponents(spark, directed = false)
-    // Reliable without a checkpoint dir must refuse, not silently degrade
     val prior = spark.sparkContext.getCheckpointDir
-    if (prior.isEmpty)
-      intercept[IllegalArgumentException] {
-        ConnectedComponents(checkpoint = CheckpointPolicy.Reliable).run(g).collect()
-      }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val reliable = ConnectedComponents(checkpoint = CheckpointPolicy.Reliable).run(g)
-    val local = ConnectedComponents(checkpoint = CheckpointPolicy.Local).run(g)
-    assert(rowSet(reliable) === rowSet(local))
+    val local = rowSet(ConnectedComponents().run(g))
+    val dir = tempDir("graft-ckpt")
+    val reliable = withCheckpointDir(dir)(rowSet(ConnectedComponents().run(g)))
+    assert(reliable === local)
     // blocks actually landed in the reliable store
-    def files(p: java.io.File): Long =
-      if (p.isDirectory) p.listFiles().map(files).sum else 1L
-    assert(files(new java.io.File(dir)) > 0, "no checkpoint files written")
+    assert(filesUnder(dir) > 0, "no checkpoint files written")
+    // and the shared context is back to its prior mode
+    assert(spark.sparkContext.getCheckpointDir === prior)
   }
 
   test("SCC: propagation cap fails loudly instead of mislabeling") {

@@ -34,8 +34,7 @@ class AnnIndexSpec extends SparkSpec {
     val items = corpus(120)
     val queries = items.filter(col("vec_id") < 5)
     val idx = AnnIndex.build(items, "vec_id", "embedding", k = 4,
-      maxIterations = 4, fitSampleSize = 60,
-      checkpoint = graft.core.CheckpointPolicy.Passthrough)
+      maxIterations = 4, fitSampleSize = 60)
     AnnIndex.writePartitioned(idx, "annidx_spec")
     val stored = AnnIndex.readPartitioned(spark, "annidx_spec")
     val live = idx.topK(queries, "vec_id", "embedding", 5, nprobe = 2)
@@ -58,8 +57,7 @@ class AnnIndexSpec extends SparkSpec {
     val items = corpus(120)
     val queries = items.filter(col("vec_id") < 5)
     val idx = AnnIndex.build(items, "vec_id", "embedding", k = 4,
-      maxIterations = 4, fitSampleSize = 60,
-      checkpoint = graft.core.CheckpointPolicy.Passthrough)
+      maxIterations = 4, fitSampleSize = 60)
     val name = "annidx_self"
     def dropAll(): Unit = Seq("centroids", "cells", "centroids__staged", "cells__staged")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
@@ -215,8 +213,7 @@ class AnnIndexSpec extends SparkSpec {
     import spark.implicits._
     val items = corpus(120)
     val idx = AnnIndex.build(items, "vec_id", "embedding", k = 4,
-      maxIterations = 4, fitSampleSize = 60,
-      checkpoint = graft.core.CheckpointPolicy.Passthrough)
+      maxIterations = 4, fitSampleSize = 60)
     val name = "annidx_del"
     Seq("centroids", "cells").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS ${name}_$t"))
@@ -282,8 +279,7 @@ class AnnIndexSpec extends SparkSpec {
     dropAll()
     try {
       AnnIndex.writePartitioned(AnnIndex.build(items, "vec_id", "embedding", k = 4,
-        maxIterations = 4, fitSampleSize = 60,
-        checkpoint = graft.core.CheckpointPolicy.Passthrough), name)
+        maxIterations = 4, fitSampleSize = 60), name)
       checkLayout("writePartitioned")
       val v = items.filter(col("vec_id") === 3L).select("embedding").head().getSeq[Float](0)
       val stream = MemoryStream[(Long, Seq[Float])]

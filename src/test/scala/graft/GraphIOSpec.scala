@@ -67,19 +67,21 @@ class GraphIOSpec extends SparkSpec {
       assert(!p.contains("Exchange hashpartitioning"),
         s"bucketed routes build must not shuffle:\n$p")
 
-      // the per-round message join with the UNPINNED routes plan (the
-      // CheckpointPolicy.Passthrough mode for bucketed storage): the
-      // routes side re-reads the bucketed table with no exchange, and —
-      // since writeBucketed buckets the VERTICES by id with the same
-      // bucket count — the rank side is already co-partitioned with the
-      // src-bucketed routes, so a round costs exactly ONE exchange: the
-      // inherent message groupBy(dst). NONE on the (100 TB-sized) edge
-      // routing table, none on the rank side. A keyed pin of the routes
-      // (CheckpointPolicy.pin(routes, Some("src"))) plans the same one
-      // exchange, but first copies the table into executor blocks; an
-      // unkeyed pin reports UnknownPartitioning under AQE and brings the
-      // src exchange back into every round.
-      val routes2 = pr.routes(back)
+      // the per-round message join with the routes as PageRank pins
+      // them: a keyed pin of a stored read (file leaves, no exchange,
+      // already hash-partitioned on src) returns the frame UNPINNED, so
+      // the routes side re-reads the bucketed table with no exchange,
+      // and — since writeBucketed buckets the VERTICES by id with the
+      // same bucket count — the rank side is already co-partitioned with
+      // the src-bucketed routes, so a round costs exactly ONE exchange:
+      // the inherent message groupBy(dst). NONE on the (100 TB-sized)
+      // edge routing table, none on the rank side. Copying the table into
+      // a keyed pin would plan the same one exchange; an unkeyed pin
+      // reports UnknownPartitioning under AQE and brings the src exchange
+      // back into every round.
+      val unpinned = pr.routes(back)
+      val routes2 = graft.core.CheckpointPolicy.pin(unpinned, Some("src"))
+      assert(routes2 eq unpinned, "a keyed pin of the bucketed routes must not copy them")
       val rank = back.vertices.select(col("id"), lit(1.0).as("rank"))
       val contrib = rank.join(routes2, rank("id") === routes2("src"))
         .groupBy(col("dst")).agg(sum(col("rank") * col("_share")).as("_in"))
@@ -205,7 +207,7 @@ class GraphIOSpec extends SparkSpec {
     val next = new java.util.concurrent.atomic.AtomicLong(-1L)
     checkEpochGuard(GuardedStore(name, AnnIndex.family, "cells",
       create = () => AnnIndex.writePartitioned(AnnIndex.build(vecs, "vec_id", "embedding",
-        k = 2, maxIterations = 2, checkpoint = graft.core.CheckpointPolicy.Passthrough), name),
+        k = 2, maxIterations = 2), name),
       commit = () => AnnIndex.deletePartitioned(spark, name,
         Seq(next.incrementAndGet()).toDF("vec_id"), "vec_id")))
   }

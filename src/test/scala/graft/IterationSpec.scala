@@ -22,25 +22,22 @@ class IterationSpec extends SparkSpec {
   private def metricsOf(df: DataFrame): DataFrame =
     df.agg(count(lit(1)), max(col("v")), CheckpointPolicy.exactSum(col("x")))
 
-  test("pinObserved: metrics equal a separate aggregate under Local, Reliable and Passthrough") {
+  test("pinObserved: metrics equal a separate aggregate, local or reliable") {
     val df = spark.range(0, 1000, 1, 4)
       .select(col("id"), (col("id") % 37).as("v"), (col("id") / 7.0).as("x"))
     val want = metricsOf(df).head()
-    val prior = spark.sparkContext.getCheckpointDir
-    if (prior.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-observe").toString)
-    for (policy <- Seq(CheckpointPolicy.Local, CheckpointPolicy.Reliable, CheckpointPolicy.Passthrough)) {
-      val (pinned, got) = policy.pinObserved(df, s"observe $policy")(
+    def check(mode: String): Unit = {
+      val (pinned, got) = CheckpointPolicy.pinObserved(df, s"observe $mode")(
         count(lit(1)), max(col("v")), CheckpointPolicy.exactSum(col("x")))
-      assert(got.toSeq === want.toSeq, s"$policy")
-      assert(rowSet(pinned) === rowSet(df), s"$policy")
-      if (policy == CheckpointPolicy.Passthrough) assert(pinned eq df)
-      else assert(pinned.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
-        s"$policy must return a pinned frame")
+      assert(got.toSeq === want.toSeq, mode)
+      assert(rowSet(pinned) === rowSet(df), mode)
+      assert(pinned.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+        s"$mode must return a pinned frame")
     }
+    check("local")
+    withCheckpointDir(tempDir("graft-observe"))(check("reliable"))
     // an empty frame observes its zero row instead of blocking
-    val (_, empty) = CheckpointPolicy.Local.pinObserved(df.limit(0), "observe empty")(
+    val (_, empty) = CheckpointPolicy.pinObserved(df.limit(0), "observe empty")(
       count(lit(1)), CheckpointPolicy.exactSum(col("x")))
     assert(empty.getLong(0) === 0L && empty.getDouble(1) === 0.0)
   }
@@ -50,7 +47,7 @@ class IterationSpec extends SparkSpec {
     sc.setJobDescription("caller")
     try {
       val labels = jobDescriptions {
-        CheckpointPolicy.Local.pinObserved(spark.range(10).toDF(), "observe label")(count(lit(1)))
+        CheckpointPolicy.pinObserved(spark.range(10).toDF(), "observe label")(count(lit(1)))
         assert(sc.getLocalProperty("spark.job.description") === "caller")
       }
       assert(labels.contains("observe label"), labels)

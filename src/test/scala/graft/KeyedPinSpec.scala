@@ -10,14 +10,14 @@ import graft.core.{CheckpointPolicy, Columns, Graph}
 import graft.pregel.Pregel
 
 /** A keyed pin declares `HashPartitioning(key, n)` only where its rows
-  * really sit by `pmod(hash(key), n)`, under both pinning policies. */
+  * really sit by `pmod(hash(key), n)`, whether the session pins locally
+  * or into a checkpoint directory. */
 class KeyedPinSpec extends SparkSpec {
 
-  private lazy val policies = {
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-keyed").toString)
-    Seq(CheckpointPolicy.Local, CheckpointPolicy.Reliable)
+  /** `body(mode)` without a checkpoint directory, then with one. */
+  private def underBothModes(body: String => Unit): Unit = {
+    body("local")
+    withCheckpointDir(tempDir("graft-keyed"))(body("reliable"))
   }
 
   private def n = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -32,15 +32,15 @@ class KeyedPinSpec extends SparkSpec {
     spark.range(0, rows, 1, parts).select(col("id"), (col("id") % 13).as("v"))
 
   test("keyed pin: every row sits in partition pmod(hash(key), n), and the frame declares it") {
-    for (policy <- policies) {
-      val pinned = policy.pin(frame(5000, 3), Some("id"))
-      val h = declared(pinned).getOrElse(fail(s"$policy declared no partitioning"))
-      assert(h.numPartitions === n && h.expressions.map(_.sql) === Seq("id"), s"$policy")
+    underBothModes { mode =>
+      val pinned = CheckpointPolicy.pin(frame(5000, 3), Some("id"))
+      val h = declared(pinned).getOrElse(fail(s"$mode declared no partitioning"))
+      assert(h.numPartitions === n && h.expressions.map(_.sql) === Seq("id"), s"$mode")
       val misplaced = pinned.filter(spark_partition_id() =!= pmod(hash(col("id")), lit(n))).count()
-      assert(misplaced === 0L, s"$policy")
-      assert(pinned.count() === 5000L, s"$policy")
+      assert(misplaced === 0L, s"$mode")
+      assert(pinned.count() === 5000L, s"$mode")
       // unkeyed pins stay undeclared
-      assert(declared(policy.pin(frame(100, 3))).isEmpty, s"$policy")
+      assert(declared(CheckpointPolicy.pin(frame(100, 3))).isEmpty, s"$mode")
     }
   }
 
@@ -49,44 +49,44 @@ class KeyedPinSpec extends SparkSpec {
     val right = spark.range(0, 997, 1, 2).select(col("id").as("k"), (col("id") * 3).as("w"))
       .repartition(7, col("k"))
     val want = rowSet(left.join(right, Seq("k")))
-    for (policy <- policies) {
-      val pinned = policy.pin(left, Some("k"))
-      assert(declared(pinned).nonEmpty, s"$policy")
+    underBothModes { mode =>
+      val pinned = CheckpointPolicy.pin(left, Some("k"))
+      assert(declared(pinned).nonEmpty, s"$mode")
       val joined = pinned.join(right, Seq("k"))
-      assert(rowSet(joined) === want, s"$policy")
+      assert(rowSet(joined) === want, s"$mode")
       // and against a frame keyed the same way: no exchange on either side
-      val keyedRight = policy.pin(right, Some("k"))
+      val keyedRight = CheckpointPolicy.pin(right, Some("k"))
       val coJoined = pinned.join(keyedRight.hint("shuffle_hash"), Seq("k"))
-      assert(rowSet(coJoined) === want, s"$policy")
+      assert(rowSet(coJoined) === want, s"$mode")
       val plan = coJoined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"$policy co-partitioned join must not shuffle:\n$plan")
+      assert(!plan.contains("Exchange"), s"$mode co-partitioned join must not shuffle:\n$plan")
     }
   }
 
   test("keyed pin: rows are kept and declared when every row is filtered out at run time") {
-    for (policy <- policies) {
-      val pinned = policy.pin(frame(3000, 3).filter(col("v") > 20), Some("id"))
-      assert(declared(pinned).nonEmpty, s"$policy")
-      assert(pinned.count() === 0L, s"$policy")
-      assert(pinned.join(frame(50, 2), Seq("id")).count() === 0L, s"$policy")
+    underBothModes { mode =>
+      val pinned = CheckpointPolicy.pin(frame(3000, 3).filter(col("v") > 20), Some("id"))
+      assert(declared(pinned).nonEmpty, s"$mode")
+      assert(pinned.count() === 0L, s"$mode")
+      assert(pinned.join(frame(50, 2), Seq("id")).count() === 0L, s"$mode")
     }
   }
 
   test("keyed pin: a plan not partitioned on the key falls back to the undeclared pin") {
-    for (policy <- policies) {
+    underBothModes { mode =>
       // rows laid out on id, then declared on v: the executed plan is not
       // partitioned on v, so the pin must stay undeclared
       val laid = frame(3000, 3).repartition(n, col("id"))
-      val pinned = policy.pin(laid)
+      val pinned = CheckpointPolicy.pin(laid)
       val back = CheckpointPolicy.declare(pinned, laid, "v")
-      assert(back eq pinned, s"$policy")
-      assert(declared(back).isEmpty, s"$policy must not declare a partitioning")
+      assert(back eq pinned, s"$mode")
+      assert(declared(back).isEmpty, s"$mode must not declare a partitioning")
       val other = spark.range(0, 13).select(col("id").as("v"), (col("id") * 2).as("w"))
         .repartition(n, col("v"))
       assert(rowSet(back.join(other, Seq("v"))) === rowSet(frame(3000, 3).join(other, Seq("v"))),
-        s"$policy")
+        s"$mode")
       // declared on the key it is laid out on, the same pin is keyed
-      assert(declared(CheckpointPolicy.declare(pinned, laid, "id")).nonEmpty, s"$policy")
+      assert(declared(CheckpointPolicy.declare(pinned, laid, "id")).nonEmpty, s"$mode")
     }
   }
 
@@ -119,9 +119,30 @@ class KeyedPinSpec extends SparkSpec {
     }
   }
 
-  test("keyed pin: an unknown key fails loudly, Passthrough returns the frame") {
-    val df = frame(10, 1)
-    assert(CheckpointPolicy.Passthrough.pin(df, Some("id")) eq df)
-    intercept[Exception](CheckpointPolicy.Local.pin(df, Some("nope")))
+  test("keyed pin: an unknown key fails loudly, a stored read returns the frame") {
+    intercept[Exception](CheckpointPolicy.pin(frame(10, 1), Some("nope")))
+    val (t, plain) = ("keyed_pin_stored", "keyed_pin_plain")
+    def drop(): Unit = Seq(t, plain).foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    drop()
+    frame(200, 3).write.bucketBy(4, "id").saveAsTable(t)
+    frame(200, 3).write.saveAsTable(plain)
+    try underBothModes { mode =>
+      // an id-keyed aggregate over the bucketed table: file leaves, no
+      // exchange, hash-partitioned on the key — re-reading it is the pin
+      val stored = spark.table(t).groupBy(col("id")).agg(max(col("v")).as("v"))
+      assert(CheckpointPolicy.pin(stored, Some("id")) eq stored, mode)
+      val (same, row) = CheckpointPolicy.pinObserved(stored, "stored read", Some("id"))(
+        count(lit(1)), max(col("v")))
+      assert(same eq stored, mode)
+      assert(row.getLong(0) === 200L && row.getLong(1) === 12L, mode)
+      // the same read keyed on another column or unkeyed, and a file read
+      // laid out on the key by an exchange, are pinned as usual
+      // (`declared` fails on an unpinned frame)
+      assert(declared(CheckpointPolicy.pin(stored, Some("v"))).map(_.expressions.map(_.sql))
+        === Some(Seq("v")), mode)
+      assert(declared(CheckpointPolicy.pin(stored)).isEmpty, mode)
+      assert(declared(CheckpointPolicy.pin(spark.table(plain).repartition(n, col("id")), Some("id")))
+        .nonEmpty, mode)
+    } finally drop()
   }
 }

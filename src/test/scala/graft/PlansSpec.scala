@@ -79,20 +79,48 @@ class PlansSpec extends SparkSpec {
   }
 
   test("g52 ALS: keyed joins + partial (map-side combined) integer sums only") {
-    // the driver query pins each half-step (checkpoint), which hides the
-    // shape from its final plan — assert on the UNPINNED composition
+    // every half-step is pinned, which hides its shape from the result's
+    // plan — assert on the plans the pinning passes actually execute
     import org.apache.spark.sql.functions._
     val ratings = graft.queries.Tables.orders(spark, SF)
       .groupBy(col("o_custkey").as("user"),
         (pmod(col("o_orderkey"), lit(211)) + 1000000L).as("item"))
       .agg(count(lit(1)).as("rating"))
-    val p = plan(graft.algorithms.Als.fitRank1Exact(ratings, iterations = 1,
-      checkpoint = graft.core.CheckpointPolicy.Passthrough))
+    // one iteration pins the ratings, the seed items and two half-steps
+    val p = pinPlans(4)(graft.algorithms.Als.fitRank1Exact(ratings, iterations = 1))
+      .mkString("\n")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"ALS half-steps must be keyed joins:\n$p")
     // each half-step's two sums partial-aggregate before the exchange
     assert("HashAggregate".r.findAllIn(p).size >= 4,
       s"expected partial aggregation in the ALS half-steps:\n$p")
+  }
+
+  /** The executed plans of the `expected` pinning passes (`checkpoint` /
+    * `localCheckpoint` actions) that `body` runs, as a
+    * `QueryExecutionListener` reports them. */
+  private def pinPlans(expected: Int)(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName.toLowerCase.contains("checkpoint"))
+          plans.synchronized(plans += qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 20000
+      while (plans.synchronized(plans.size) < expected && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      plans.synchronized {
+        assert(plans.size >= expected, s"saw ${plans.size} of $expected pinning passes")
+        plans.toSeq
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("g24 approxJaccard: LSH bucket join, never a nested-loop/cartesian pair join") {

@@ -12,6 +12,22 @@ trait SparkSpec extends AnyFunSuite {
   /** order-insensitive row comparison */
   def rowSet(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** Run `body` with `dir` as the shared context's checkpoint directory,
+    * so every pin in it is reliable, then restore the prior directory. */
+  def withCheckpointDir[A](dir: String)(body: => A): A =
+    org.apache.spark.graft.CheckpointDirs.withCheckpointDir(spark.sparkContext, dir)(body)
+
+  /** a fresh empty directory for checkpoint files */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** the number of files under `dir`, at any depth */
+  def filesUnder(dir: String): Long = {
+    def count(p: java.io.File): Long =
+      if (p.isDirectory) p.listFiles().map(count).sum else 1L
+    count(new java.io.File(dir))
+  }
 }
 
 object SparkSpec {

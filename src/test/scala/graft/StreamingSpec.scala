@@ -484,8 +484,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("annds_ckpt").toString
     try {
       val idx = AnnIndex.build(items, "vec_id", "embedding", k = 4,
-        maxIterations = 3, fitSampleSize = 30,
-        checkpoint = graft.core.CheckpointPolicy.Passthrough)
+        maxIterations = 3, fitSampleSize = 30)
       AnnIndex.writePartitioned(idx, "annds")
       val stream = MemoryStream[Long]
       val q = AnnIndex.deleteStream(
@@ -680,8 +679,7 @@ class StreamingSpec extends SparkSpec {
     val base = (0L until 60L).map(i => (i, near((i % 3).toInt)))
       .toDF("vec_id", "embedding")
     val idx = AnnIndex.build(base, "vec_id", "embedding", k = 3,
-      maxIterations = 3, fitSampleSize = 30,
-      checkpoint = graft.core.CheckpointPolicy.Passthrough)
+      maxIterations = 3, fitSampleSize = 30)
     AnnIndex.writePartitioned(idx, "annidx_stream")
     val v1 = near(0); val v2 = near(1); val v3 = near(2)
     val stream = MemoryStream[(Long, Seq[Float])]
@@ -727,8 +725,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def build(name: String): graft.similarity.AnnIndex.Index = {
       val idx = AnnIndex.build(base, "vec_id", "embedding", k = 3,
-        maxIterations = 3, fitSampleSize = 30,
-        checkpoint = graft.core.CheckpointPolicy.Passthrough)
+        maxIterations = 3, fitSampleSize = 30)
       AnnIndex.writePartitioned(idx, name)
       idx
     }
